@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from levenshtein_spark.driver_queries import tbl
 from levenshtein_spark.functions import distance as D
+from levenshtein_spark.operators.closest import min_edit_dist_t
 from levenshtein_spark.oracles import bounded_osa_expr, osa_cte
 
 # -- deterministic probe strings for closest-match queries -------------------
@@ -100,34 +101,20 @@ def q_min_edit_dist(spark: SparkSession, sf: str) -> DataFrame:
     """Reference ``min_edit_dist`` (closest match by bounded Levenshtein).
 
     Cross-row mutable state (src/min_edit_dist.cpp:65-72) re-expressed as a
-    window arg-min; probes broadcast against the candidate table.
+    map-side arg-min; probes broadcast against the candidate table.
     """
     probes = spark.createDataFrame([(p,) for p in _PROBES_CUST], "probe string")
     cand = tbl(spark, sf, "customer")
-    scored = cand.crossJoin(F.broadcast(probes)).select(
-        "probe",
-        F.col("c_name").alias("best_name"),
-        # adaptive-cap twin: losing rows may clamp, the arg-min drops them
-        # (the reference's cross-row cap, min_edit_dist.cpp:65-72)
-        D.bounded_edit_dist_closest("probe", "c_name", 6, transpositions=False).alias("dist"),
-    )
-    # map-side arg-min: min(struct) is lexicographic = ORDER BY dist, name,
-    # and partially aggregates in every task (no single-partition window)
-    best = scored.groupBy("probe").agg(F.min(F.struct("dist", "best_name")).alias("b"))
-    return best.select("probe", F.col("b.best_name").alias("best_name"), F.col("b.dist").alias("dist"))
+    best = min_edit_dist_t(probes, cand, "probe", "c_name", 6, dist_fn=D.bounded_edit_dist)
+    return best.select("probe", F.col("c_name").alias("best_name"), "dist")
 
 
 def q_min_edit_dist_t(spark: SparkSession, sf: str) -> DataFrame:
     """Reference ``min_edit_dist_t``: closest candidate by bounded OSA."""
     probes = spark.createDataFrame([(p,) for p in _PROBES_CUST], "probe string")
     cand = tbl(spark, sf, "customer").where("c_custkey < 150")
-    scored = cand.crossJoin(F.broadcast(probes)).select(
-        "probe",
-        F.col("c_name").alias("best_name"),
-        D.bounded_edit_dist_closest("probe", "c_name", 6).alias("dist"),
-    )
-    best = scored.groupBy("probe").agg(F.min(F.struct("dist", "best_name")).alias("b"))
-    return best.select("probe", F.col("b.best_name").alias("best_name"), F.col("b.dist").alias("dist"))
+    best = min_edit_dist_t(probes, cand, "probe", "c_name", 6)
+    return best.select("probe", F.col("c_name").alias("best_name"), "dist")
 
 
 def q_min_similarity_t(spark: SparkSession, sf: str) -> DataFrame:

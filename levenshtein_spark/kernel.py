@@ -122,6 +122,21 @@ def _to_bytes(v: Union[str, bytes, None]) -> Optional[bytes]:
     return str(v).encode("utf-8")
 
 
+def _caps(k: Union[int, Sequence[Optional[int]], np.ndarray], n: int) -> np.ndarray:
+    """Per-pair caps as int64; a negative cap means unbounded. An integer
+    array (what every distance UDF sends) is used as is; in any other
+    sequence a None or NaN entry becomes the unbounded sentinel -1."""
+    karr = np.asarray(k)
+    if karr.ndim == 0:
+        return np.full(n, int(karr), np.int64)
+    if karr.dtype.kind in "iu":
+        return karr.astype(np.int64, copy=False)
+    return np.array(
+        [(-1 if (v is None or (isinstance(v, float) and np.isnan(v))) else int(v)) for v in karr],
+        np.int64,
+    )
+
+
 def batch_edit_distance(
     a: Sequence[Union[str, bytes, None]],
     b: Sequence[Union[str, bytes, None]],
@@ -154,14 +169,7 @@ def batch_edit_distance(
     if k is None:
         keff = m_len.copy()
     else:
-        karr = np.asarray(k)
-        if karr.ndim == 0:
-            karr = np.full(n_pairs, int(karr), np.int64)
-        else:
-            karr = np.array(
-                [(-1 if (v is None or (isinstance(v, float) and np.isnan(v))) else int(v)) for v in karr],
-                np.int64,
-            )
+        karr = _caps(k, n_pairs)
         unbounded = karr < 0
         if (karr[~unbounded & (karr < 0)]).size:  # pragma: no cover - sentinel guard
             raise ValueError("maximum edit distance cannot be negative")
@@ -541,17 +549,7 @@ def batch_closest_distance(
     a_l = list(a)
     b_l = list(b)
     n = len(a_l)
-    if k is None:
-        kv = np.full(n, -1, np.int64)
-    else:
-        karr = np.asarray(k)
-        if karr.ndim == 0:
-            kv = np.full(n, int(karr), np.int64)
-        else:
-            kv = np.array(
-                [(-1 if (v is None or (isinstance(v, float) and np.isnan(v))) else int(v)) for v in karr],
-                np.int64,
-            )
+    kv = np.full(n, -1, np.int64) if k is None else _caps(k, n)
     big = np.int64(1) << 40  # "unbounded" stand-in; keff clamps to max(len)
     kv_eff = np.where(kv < 0, big, kv)
     out = np.empty(n, np.int64)

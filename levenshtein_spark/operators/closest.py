@@ -11,6 +11,13 @@ ordering reproduces the reference example's ``ORDER BY EditDist, Name asc``
 tie-break, and the aggregation combines map-side in every task (no
 single-partition-per-probe window sort).
 
+Every operator scores the same cross join (:func:`_spread_cross`): the
+candidate column, round-robined to one partition per core, against the
+broadcast probes. A candidate table is usually small in bytes, so adaptive
+execution would coalesce it to one partition and the cross join — probes ×
+candidates kernel calls — would inherit that single task; an explicit
+``repartition(n)`` is never coalesced, so the Arrow UDF runs on every core.
+
 The reference's adaptive-cap speedup (≈2/3 runtime, doc/Benchmarks.md:25) is
 recovered differently at scale: *iterative deepening* — score every probe at
 a small cap first and only escalate the probes whose minimum hit the cap.
@@ -36,6 +43,15 @@ from levenshtein_spark.functions.distance import (
 _ADAPTIVE_TWIN = {id(bounded_edit_dist_t): True, id(bounded_edit_dist): False}
 
 
+def _spread_cross(probes: DataFrame, candidates: DataFrame, cand_col: str) -> DataFrame:
+    """``candidates[cand_col]`` × broadcast ``probes``, in
+    ``defaultParallelism`` partitions. The one extra shuffle moves only the
+    candidate column; the arg-min / rank reductions downstream do not depend
+    on partitioning, and the adaptive twins' contract holds per batch."""
+    n = candidates.sparkSession.sparkContext.defaultParallelism
+    return candidates.select(cand_col).repartition(n).crossJoin(F.broadcast(probes))
+
+
 def min_edit_dist_t(
     probes: DataFrame,
     candidates: DataFrame,
@@ -49,9 +65,12 @@ def min_edit_dist_t(
     doc/Usage.md:178-189; ties break on the candidate string ascending).
 
     ``probes`` is broadcast — the reference's use case is a handful of probe
-    strings against a large table, so the cross join must never shuffle the
-    candidate side. Pass ``dist_fn=bounded_edit_dist`` for the
-    no-transpositions variant (reference ``min_edit_dist``).
+    strings against a large table, so the cross join must never move the
+    candidate table to the probes. Its candidate column is round-robined to
+    ``defaultParallelism`` partitions first, so the scoring runs one task per
+    core however few partitions ``candidates`` arrives in. Pass
+    ``dist_fn=bounded_edit_dist`` for the no-transpositions variant
+    (reference ``min_edit_dist``).
     """
     tr = _ADAPTIVE_TWIN.get(id(dist_fn))
     dist = (
@@ -59,7 +78,7 @@ def min_edit_dist_t(
         if tr is not None
         else dist_fn(probe_col, cand_col, k)
     )
-    scored = candidates.crossJoin(F.broadcast(probes)).select(
+    scored = _spread_cross(probes, candidates, cand_col).select(
         probe_col, cand_col, dist.alias("dist")
     )
     best = scored.groupBy(probe_col).agg(F.min(F.struct("dist", cand_col)).alias("b"))
@@ -80,7 +99,7 @@ def min_similarity_t(
     arg-max via min(struct(-sim, candidate)). Scores through the
     adaptive-floor twin (the reference's mutable ``max_result``) — exact
     for the arg-max winner and its ties, which is all this returns."""
-    scored = candidates.crossJoin(F.broadcast(probes)).select(
+    scored = _spread_cross(probes, candidates, cand_col).select(
         probe_col, cand_col, similarity_t_closest(probe_col, cand_col, p).alias("sim")
     )
     best = scored.groupBy(probe_col).agg(
@@ -142,7 +161,7 @@ def top_k_matches(
     Needs a rank, so this one stays a window; with a handful of probes the
     per-probe sort is the unavoidable cost of a ranked result.
     """
-    scored = candidates.crossJoin(F.broadcast(probes)).select(
+    scored = _spread_cross(probes, candidates, cand_col).select(
         probe_col, cand_col, bounded_edit_dist_t(probe_col, cand_col, k).alias("dist")
     )
     w = Window.partitionBy(probe_col).orderBy(F.col("dist").asc(), F.col(cand_col).asc())

@@ -88,6 +88,10 @@ def connected_components(
     when provided (the production setting: each round's edge set is a
     re-readable table, so executor loss only recomputes the current round —
     same discipline as the warehouse stage checkpoints in plans/linkage.py).
+
+    ``stats``, when given, receives ``rounds`` — the rounds that changed the
+    edge set, not the final no-change check — and ``edges_per_round``, the
+    edge count after round 0 and after each of those rounds.
     """
     spark = edges.sparkSession
 
@@ -122,11 +126,11 @@ def connected_components(
             e = _small_star(_large_star(e))
         e = materialize(e, rnd)
         new_sig = _signature(e)
+        if new_sig == sig:
+            break  # the fixed-point check: this round changed nothing
         if stats is not None:
             stats["rounds"] = rnd
             stats["edges_per_round"].append(new_sig[0])
-        if new_sig == sig:
-            break
         sig = new_sig
     else:
         raise RuntimeError(f"connected_components did not converge in {max_iterations} iterations")

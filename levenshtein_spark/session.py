@@ -109,7 +109,7 @@ def pinned_persist(df: DataFrame) -> DataFrame:
     return df
 
 
-def release_caches(include_pinned: bool = False) -> int:
+def release_caches(*, include_pinned: bool = False) -> int:
     """Unpersist every scoped cache registered since the last release.
     Returns the number released. Safe to call at any time — caches are only
     dropped, never invalidated mid-plan, because callers release AFTER

@@ -2,7 +2,12 @@
 
 from __future__ import annotations
 
+import random
+
+import pytest
+
 from levenshtein_spark.operators.closest import (
+    _spread_cross,
     min_edit_dist_t,
     min_edit_dist_t_deepening,
     min_similarity_t,
@@ -50,6 +55,44 @@ def test_top_k_matches_ranked(spark):
         by_probe.setdefault(r.q, []).append((r.rn, r.name))
     assert sorted(by_probe["appl"]) == [(1, "apple"), (2, "apples")]
     assert len(by_probe["grap"]) == 2
+
+
+def test_cross_join_spread_over_cores(spark):
+    """Candidates arriving in one partition are scored in defaultParallelism
+    partitions by every operator, and every operator returns the brute-force
+    answer: the spread moves rows between tasks, never changes them."""
+    from levenshtein_spark.oracle import ref_edit_distance, ref_similarity
+
+    rng = random.Random(3)
+    names = sorted({"".join(rng.choice("abcd") for _ in range(rng.randint(2, 8))) for _ in range(60)})
+    qs = ["abca", "dddd", "bacdab", "zz"]
+    cands = spark.createDataFrame([(c,) for c in names], "name string").coalesce(1)
+    probes = spark.createDataFrame([(q,) for q in qs], "q string")
+    n = spark.sparkContext.defaultParallelism
+
+    assert _spread_cross(probes, cands, "name").rdd.getNumPartitions() == n
+    ops = {
+        "min_edit_dist_t": min_edit_dist_t(probes, cands, "q", "name", 3),
+        "deepening": min_edit_dist_t_deepening(probes, cands, "q", "name", 3, k0=1),
+        "min_similarity_t": min_similarity_t(probes, cands, "q", "name", 0.4),
+        "top_k_matches": top_k_matches(probes, cands, "q", "name", 3, top=3),
+    }
+    for name, df in ops.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert f"RoundRobinPartitioning({n})" in plan, name
+
+    dist = {q: sorted((ref_edit_distance(q, c, 3), c) for c in names) for q in qs}
+    want = {(q, d[0][1], d[0][0]) for q, d in dist.items()}
+    assert {tuple(r) for r in ops["min_edit_dist_t"].collect()} == want
+    assert {tuple(r) for r in ops["deepening"].collect()} == want
+    assert {(r.q, r.name, r.dist, r.rn) for r in ops["top_k_matches"].collect()} == {
+        (q, c, dv, i + 1) for q, d in dist.items() for i, (dv, c) in enumerate(d[:3])
+    }
+    got = {r.q: (r.name, r.sim) for r in ops["min_similarity_t"].collect()}
+    for q in qs:
+        sims = {c: ref_similarity(q, c, 0.4) for c in names}
+        top = max(sims.values())
+        assert got[q] == (min(c for c in names if sims[c] == top), pytest.approx(top)), q
 
 
 def test_adaptive_kernel_argmin_exact():

@@ -66,6 +66,19 @@ def test_cc_long_chain(spark):
     assert len(got) == 121
 
 
+def test_cc_stats_count_only_rounds_that_changed(spark):
+    """A 5-node chain becomes the star rooted at n00 after two rounds; the
+    third round's no-change check is neither a round nor an edge count."""
+    chain = [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(4)]
+    stats: dict = {}
+    connected_components(spark.createDataFrame(chain, "src string, dst string"), stats=stats).count()
+    assert stats == {"rounds": 2, "edges_per_round": [4, 4, 4]}
+    # a single edge is already a star: no round does anything
+    stats = {}
+    connected_components(spark.createDataFrame([("a", "b")], "src string, dst string"), stats=stats).count()
+    assert stats == {"rounds": 0, "edges_per_round": [1]}
+
+
 def test_cc_empty(spark):
     edges = spark.createDataFrame([], "src string, dst string")
     assert connected_components(edges).count() == 0

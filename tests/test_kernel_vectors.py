@@ -8,7 +8,7 @@ src/similarity_t.cpp, ReadMe.md:50-53).
 import numpy as np
 import pytest
 
-from levenshtein_spark.kernel import batch_edit_distance, batch_similarity
+from levenshtein_spark.kernel import batch_closest_distance, batch_edit_distance, batch_similarity
 from levenshtein_spark.oracle import ref_edit_distance, ref_similarity
 
 # (a, b, k, expected, note) — k=None means unbounded; OSA over UTF-8 bytes.
@@ -55,6 +55,23 @@ def test_batch_mixed_vector():
     exp = np.array([v[3] for v in VECTORS])
     got = batch_edit_distance(a, b, k=[(-1 if x is None else x) for x in k])
     assert (got == exp).all(), list(zip(a, b, k, got, exp))
+
+
+def test_caps_unbounded_sentinels():
+    """Per-pair caps: None, NaN and negative entries all mean unbounded, in
+    object sequences and in integer arrays alike (the UDFs' int64 path)."""
+    # distinct probes, so the closest twin never tightens a cap across rows
+    a = [f"kitten{i}" for i in range(4)]
+    b = [f"sitting{i}" for i in range(4)]
+    want = [3, 3, 3, 2]
+    for k in (
+        [None, float("nan"), -1, 1],
+        np.array([None, np.nan, -1, 1], dtype=object),
+        np.array([-1, -1, -1, 1], dtype=np.int64),
+        np.array([-1, -1, -1, 1], dtype=np.int32),
+    ):
+        assert batch_edit_distance(a, b, k=k).tolist() == want, k
+        assert batch_closest_distance(a, b, k=k).tolist() == want, k
 
 
 def test_levenshtein_variant_no_transpositions():
