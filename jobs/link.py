@@ -45,10 +45,6 @@ def main() -> int:
     ap.add_argument("--memoize-scoring", action="store_true",
                     help="score one representative per distinct payload tuple "
                          "(clone-heavy corpora; BENCH/memoize_regimes.json)")
-    ap.add_argument("--collapse-clones", action="store_true",
-                    help="collapse identical-key-set rows through the pair "
-                         "join (exact re-ingestion corpora; "
-                         "BENCH/collapsed_clones.json)")
     ap.add_argument("--cluster-method", default="cc",
                     choices=["cc", "pivot", "star", "merge_center"],
                     help="entity formation: transitive closure (default), "
@@ -93,7 +89,6 @@ def main() -> int:
         num_salts=args.num_salts,
         adaptive_target_rows=args.adaptive_target_rows,
         memoize_scoring=args.memoize_scoring,
-        collapse_clones=args.collapse_clones,
         cluster_method=args.cluster_method,
         force=args.force,
     )

@@ -191,10 +191,16 @@ def q_cluster_algo_compare(spark: SparkSession, sf: str) -> DataFrame:
     own iterative loop), but everything downstream — cluster-shape stats,
     co-membership pair generation, and the PRF scorecard — runs as ONE
     grouped pass over their tagged union: one (algo, cluster_id) self-join
-    for the pairs, one broadcast-join against the shared gold pair set for
-    tp, and 4-row joins to assemble the table. At driver scale this
-    replaces 8 per-algo aggregate jobs with 3; at cluster scale it also
-    shares the gold side once instead of four times.
+    for the pairs, one join against the shared gold pair set for tp, and
+    4-row joins to assemble the table. At driver scale this replaces 8
+    per-algo aggregate jobs with 3; at cluster scale it also shares the
+    gold side once instead of four times.
+
+    Size bound: a labelling with clusters ``c`` yields ``Σ_c |c|·(|c|-1)/2``
+    co-membership pairs — quadratic in the largest cluster, up to
+    ``n·(n-1)/2`` for one cluster over all ``n`` ids. The gold pair set has
+    the same bound over the gold clusters, so it is not broadcast: adaptive
+    execution picks the tp join strategy from its measured size.
 
     The independent computations (gold closure; cc; pivot; star followed by
     its dependent merge-center) run as CONCURRENT Spark jobs on
@@ -293,7 +299,7 @@ def q_cluster_algo_compare(spark: SparkSession, sf: str) -> DataFrame:
     )
     pred_counts = pairs.groupBy("algo").agg(F.count(F.lit(1)).cast("long").alias("n_pred"))
     tp_counts = (
-        pairs.join(F.broadcast(gold_pairs), ["src", "dst"])
+        pairs.join(gold_pairs, ["src", "dst"])
         .groupBy("algo")
         .agg(F.count(F.lit(1)).cast("long").alias("tp"))
     )

@@ -1,22 +1,32 @@
 """Stage 2 — candidate pair generation with explicit skew handling.
 
-A blocked self-join is a shuffle on ``block_key``; one hot key (a hot repo, a
-common length band) turns into a straggler task with O(n²) pair fan-out. We
-split blocks by size:
+A blocked join is a shuffle on ``block_key``; one hot key (a hot repo, a
+common length band) turns into a straggler task with O(n²) pair fan-out.
+Every candidate-pair operator here is a thin aggregation over one of two
+private cores, which hold the salt rules and nothing else. Both split
+blocks by a size census and broadcast the (tiny) hot-key set back onto
+the rows:
 
-* **normal blocks** — plain equi self-join on ``block_key`` with
-  ``id_a < id_b``;
-* **hot blocks** (size > ``hot_threshold``) — a *triangle salted join*: each
-  row gets a deterministic salt ``s ∈ [0,S)``; the left side is replicated to
-  salts ``t ∈ [s, S)`` and joined on ``(block_key, t == salt_right)``. Every
-  unordered pair is produced exactly once (for ``s_a < s_b`` only the
-  ``a``-as-left replica meets ``b``; for ``s_a == s_b`` the ``id_a < id_b``
-  filter dedups), while the work for a block of n rows spreads over
-  S·(S+1)/2 independent partitions instead of one.
+* :func:`_self_meetings` — one record set joined with itself. Normal
+  blocks take a plain equi self-join with ``id_a < id_b``. Hot blocks
+  (size > ``hot_threshold``) take a *triangle salted join*: each row gets a
+  deterministic salt ``s = hash(id) % S``, the left side is replicated to
+  salts ``t ∈ [s, S)`` and joined on ``(block_key, t == salt_right)``.
+  Exactly once per (block, unordered pair): for ``s_a < s_b`` only the
+  ``a``-as-left replica meets ``b``; equal salts meet in both directions,
+  so the tie breaks by ``id_l < id_r``. The work of a block spreads over
+  S·(S+1)/2 partitions instead of one.
+* :func:`_lr_meetings` — two record sets (left × right). Keys whose fan-out
+  ``n_l·n_r`` exceeds ``hot_threshold`` salt their left rows with
+  ``hash(id_l) % S`` and replicate their right rows to all S salts: every
+  cross pair meets exactly once, spread over S partitions.
 
-This is lossless — unlike sub-block salting there is no recall hit — and is
-the explicit skew handling the north_rule requires on top of AQE's
+Both are lossless — unlike sub-block salting there is no recall hit — and
+are the explicit skew handling the north_rule requires on top of AQE's
 skew-join splitting (which cannot help the pair *fan-out*, only scan skew).
+A core returns one row per key meeting; extra block columns ride along as
+per-(key, id) payload for in-join predicates, suffixed ``_a``/``_b`` (self)
+or ``_l``/``_r`` (bipartite), and follow their ids through canonicalisation.
 
 **The pair stream is slim**: only ``(id_a, id_b)`` flows through the join,
 union, and dedup shuffles — at web scale the pair count is a multiple of the
@@ -30,8 +40,128 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from levenshtein_spark.session import scoped_persist
+
 DEFAULT_HOT_THRESHOLD = 2000
 DEFAULT_SALTS = 16
+
+
+def _id_cols(df: DataFrame) -> list[str]:
+    """``id`` followed by the payload columns (everything but ``block_key``)."""
+    return ["id"] + [c for c in df.columns if c not in ("block_key", "id")]
+
+
+def _suffix(df: DataFrame, cols: list[str], suf: str) -> DataFrame:
+    for c in cols:
+        df = df.withColumnRenamed(c, f"{c}{suf}")
+    return df
+
+
+def _self_meetings(
+    blocks: DataFrame,
+    hot_threshold: int,
+    num_salts: int,
+    adaptive_target_rows: int | None = None,
+) -> DataFrame:
+    """``(block_key, id, extra...)`` → one row per (block key, unordered
+    pair) meeting: ``(id_a < id_b, extra_a..., extra_b...)``. Salt counts
+    per hot block as in :func:`candidate_pairs`."""
+    ids_x = _id_cols(blocks)
+    extras = ids_x[1:]
+    slim = blocks.select("block_key", *ids_x)
+    sizes = slim.groupBy("block_key").count()
+    if adaptive_target_rows is not None:
+        n_salts_col = F.least(
+            F.ceil(F.col("count") / F.lit(adaptive_target_rows)), F.lit(256)
+        ).cast("int")
+    else:
+        n_salts_col = F.lit(num_salts)
+    hot_keys = (
+        sizes.where(F.col("count") > hot_threshold)
+        .select("block_key", n_salts_col.alias("n_salts"))
+    )
+    # The tagged stream feeds BOTH branch joins (normal self-join + the
+    # salted triangle, each of which reads it twice as its own two sides);
+    # without a persist the census + broadcast tag re-runs per read even
+    # when the caller persisted `blocks`. Slim (key, id, n_salts) rows, so
+    # the cache is the size of the exploded block stream — measured 1.5x
+    # on the sf0.1 doc corpus (5.6 -> 3.7s).
+    tagged = slim.join(F.broadcast(hot_keys), "block_key", "left").transform(
+        scoped_persist
+    )
+
+    normal = tagged.where(F.col("n_salts").isNull()).drop("n_salts")
+    pn = (
+        _suffix(normal, ids_x, "_a")
+        .join(_suffix(normal, ids_x, "_b"), "block_key")
+        .where(F.col("id_a") < F.col("id_b"))
+    )
+
+    hot = tagged.where(F.col("n_salts").isNotNull())
+    hot_s = hot.withColumn("salt", F.pmod(F.xxhash64("id"), F.col("n_salts")).cast("int"))
+    left = _suffix(
+        hot_s.withColumn("salt_t", F.explode(F.sequence(F.col("salt"), F.col("n_salts") - 1)))
+        .withColumnRenamed("salt", "salt_l")
+        .drop("n_salts"),
+        ids_x,
+        "_l",
+    )
+    right = _suffix(hot_s.drop("n_salts").withColumnRenamed("salt", "salt_t"), ids_x, "_r")
+    met = (
+        left.join(right, ["block_key", "salt_t"])
+        .where((F.col("salt_l") != F.col("salt_t")) | (F.col("id_l") < F.col("id_r")))
+        .where(F.col("id_l") != F.col("id_r"))
+    )
+    swap = F.col("id_l") > F.col("id_r")
+    canon = [
+        F.least("id_l", "id_r").alias("id_a"),
+        F.greatest("id_l", "id_r").alias("id_b"),
+    ]
+    for c in extras:
+        canon.append(F.when(swap, F.col(f"{c}_r")).otherwise(F.col(f"{c}_l")).alias(f"{c}_a"))
+        canon.append(F.when(swap, F.col(f"{c}_l")).otherwise(F.col(f"{c}_r")).alias(f"{c}_b"))
+
+    cols = ["id_a", "id_b"] + [f"{c}{s}" for c in extras for s in ("_a", "_b")]
+    return pn.select(*cols).unionByName(met.select(*canon))
+
+
+def _lr_meetings(
+    blocks_l: DataFrame,
+    blocks_r: DataFrame,
+    hot_threshold: int,
+    num_salts: int,
+) -> DataFrame:
+    """Two ``(block_key, id, extra...)`` tables → one row per (block key,
+    cross pair) meeting: ``(id_l, id_r, extra_l..., extra_r...)``."""
+    ex_l, ex_r = _id_cols(blocks_l), _id_cols(blocks_r)
+    sl = _suffix(blocks_l.select("block_key", *ex_l), ex_l, "_l")
+    sr = _suffix(blocks_r.select("block_key", *ex_r), ex_r, "_r")
+    sizes = (
+        sl.groupBy("block_key").count().withColumnRenamed("count", "n_l")
+        .join(sr.groupBy("block_key").count().withColumnRenamed("count", "n_r"), "block_key")
+    )
+    hot_keys = sizes.where(F.col("n_l") * F.col("n_r") > hot_threshold).select(
+        "block_key", F.lit(True).alias("__hot")
+    )
+    # each side feeds its normal and its hot branch
+    tl = sl.join(F.broadcast(hot_keys), "block_key", "left").transform(scoped_persist)
+    tr = sr.join(F.broadcast(hot_keys), "block_key", "left").transform(scoped_persist)
+
+    pn = (
+        tl.where(F.col("__hot").isNull()).drop("__hot")
+        .join(tr.where(F.col("__hot").isNull()).drop("__hot"), "block_key")
+    )
+    hl = tl.where(F.col("__hot")).drop("__hot").withColumn(
+        "salt", F.pmod(F.xxhash64("id_l"), F.lit(num_salts)).cast("int")
+    )
+    hr = (
+        tr.where(F.col("__hot")).drop("__hot")
+        .withColumn("salt", F.explode(F.sequence(F.lit(0), F.lit(num_salts - 1))))
+    )
+    ph = hl.join(hr, ["block_key", "salt"])
+
+    cols = [f"{c}_l" for c in ex_l] + [f"{c}_r" for c in ex_r]
+    return pn.select(*cols).unionByName(ph.select(*cols))
 
 
 def candidate_pairs(
@@ -54,163 +184,40 @@ def candidate_pairs(
     Salting never changes the produced pair SET (only its partitioning), so
     both modes are interchangeable for correctness.
     """
-    slim = blocks.select("block_key", "id")
-    sizes = slim.groupBy("block_key").count()
-    # The set of hot keys is tiny (they are, by definition, the outliers):
-    # broadcast it back onto the rows, carrying the per-block salt count in
-    # adaptive mode.
-    if adaptive_target_rows is not None:
-        n_salts_col = F.least(
-            F.ceil(F.col("count") / F.lit(adaptive_target_rows)), F.lit(256)
-        ).cast("int")
-    else:
-        n_salts_col = F.lit(num_salts)
-    hot_keys = (
-        sizes.where(F.col("count") > hot_threshold)
-        .select("block_key", n_salts_col.alias("n_salts"))
+    meetings = _self_meetings(
+        blocks.select("block_key", "id"), hot_threshold, num_salts, adaptive_target_rows
     )
-    from levenshtein_spark.session import scoped_persist
-
-    # The tagged stream feeds BOTH branch joins (normal self-join + the
-    # salted triangle, each of which reads it twice as its own two sides);
-    # without a persist the census + broadcast tag re-runs per read even
-    # when the caller persisted `blocks`. Slim (key, id, n_salts) rows, so
-    # the cache is the size of the exploded block stream — measured 1.5x
-    # on the sf0.1 doc corpus (5.6 -> 3.7s).
-    tagged = slim.join(F.broadcast(hot_keys), "block_key", "left").transform(
-        scoped_persist
-    )
-
-    normal = tagged.where(F.col("n_salts").isNull()).drop("n_salts")
-    hot = tagged.where(F.col("n_salts").isNotNull())
-
-    # Symmetric self-join: keep the canonical order.
-    a = normal.withColumnRenamed("id", "id_a")
-    b = normal.withColumnRenamed("id", "id_b")
-    pn = a.join(b, "block_key").where(F.col("id_a") < F.col("id_b")).select("id_a", "id_b")
-
-    # Triangle salted join for hot blocks (S = that block's n_salts).
-    hot_s = hot.withColumn("salt", F.pmod(F.xxhash64("id"), F.col("n_salts")).cast("int"))
-    left = (
-        hot_s.withColumn("salt_t", F.explode(F.sequence(F.col("salt"), F.col("n_salts") - 1)))
-        .withColumnRenamed("salt", "salt_l")
-        .drop("n_salts")
-        .withColumnRenamed("id", "id_l")
-    )
-    right = (
-        hot_s.drop("n_salts")
-        .withColumnRenamed("salt", "salt_t")
-        .withColumnRenamed("id", "id_r")
-    )
-    # Exactly-once per (block, pair): with salt_l < salt_r only the
-    # smaller-salt row's replica ladder reaches the other side, but EQUAL
-    # salts meet in both directions — break that tie by id order, or the
-    # pair double-counts into n_keys (latent in r01: the fixed driver
-    # thresholds never salted a block while n_keys was being hash-checked).
-    ph = (
-        left.join(right, ["block_key", "salt_t"])
-        .where(
-            (F.col("salt_l") != F.col("salt_t")) | (F.col("id_l") < F.col("id_r"))
-        )
-        .where(F.col("id_l") != F.col("id_r"))
-        .select(
-            F.least("id_l", "id_r").alias("id_a"),
-            F.greatest("id_l", "id_r").alias("id_b"),
-        )
-    )
-
-    return pn.unionByName(ph).groupBy("id_a", "id_b").agg(
-        F.count(F.lit(1)).alias("n_keys")
-    )
+    return meetings.groupBy("id_a", "id_b").agg(F.count(F.lit(1)).alias("n_keys"))
 
 
-def candidate_pairs_collapsed(
+def candidate_pairs_annotated(
     blocks: DataFrame,
+    predicate,
     hot_threshold: int = DEFAULT_HOT_THRESHOLD,
     num_salts: int = DEFAULT_SALTS,
 ) -> DataFrame:
-    """:func:`candidate_pairs` with BLOCKING-CLONE COLLAPSE — the memoization
-    idea of ``scoring.score_pairs(memoize=True)`` moved up into pair
-    generation, for clone-heavy corpora (replicated docs, vendored files,
-    boilerplate): rows whose FULL block-key set is identical contribute
-    nothing new to the join — every member of such a clone group meets
-    exactly the keys its siblings meet. So:
+    """:func:`candidate_pairs` with per-(key, id) PAYLOAD and an in-join
+    pruning predicate — the hook for PPJoin-style positional filters, which
+    need to see both sides' per-key metadata BEFORE the pair is deduplicated
+    (the slim operator throws that context away).
 
-    1. group ids by an order-insensitive signature of their key set
-       (one map-side-combining groupBy over the slim exploded stream);
-    2. run the salted self-join and the (dominant) pair-dedup shuffle over
-       ONE representative per group — on a corpus with duplication factor D
-       that shuffle shrinks ~D² in meeting volume;
-    3. expand group-pairs back to id-pairs with two joins on the group
-       signature (`n_keys` of every cross pair equals its group pair's:
-       identical key sets ⇒ identical intersections), and emit intra-group
-       pairs via the same triangle-salted machinery keyed on the signature
-       (their ``n_keys`` is the group's full key count).
-
-    Output is pair-for-pair identical to :func:`candidate_pairs` — same
-    ``(id_a, id_b, n_keys)`` set (pinned by tests/test_pairs.py).
-    Precondition (met by every blocks producer in this package): the input
-    has no duplicate ``(block_key, id)`` rows.
-
-    On a clone-free corpus every group is a singleton and this degrades to
-    the plain operator plus one extra groupBy + two id-keyed joins —
-    measurable but minor; choose it when the corpus has meaningful exact
-    replication (the bench's sf1 replica corpus: ~10-20× collapse).
+    ``blocks`` carries ``(block_key, id, extra...)``; every extra column is
+    exposed to ``predicate`` suffixed ``_a``/``_b`` (payloads follow their
+    ids through canonicalization, so ``x_a`` always belongs to ``id_a``).
+    ``predicate(df) -> Column`` is applied to each key-meeting of a pair;
+    the pair survives if ANY meeting passes. Output: ``(id_a < id_b,
+    n_passing_keys)`` — deliberately NOT named ``n_keys``: the slim
+    operator's ``n_keys`` counts ALL key-meetings, this counts only
+    PASSING ones, and under a non-trivial predicate the two carry
+    different blocking-quality signals (distinct names prevent a consumer
+    accidentally reusing one as the other).
     """
-    slim = blocks.select("block_key", "id")
-    from levenshtein_spark.session import scoped_persist
-
-    # per-id key-set signature + key count (order-insensitive)
-    mem = (
-        slim.groupBy("id")
-        .agg(F.sort_array(F.collect_set("block_key")).alias("__keys"))
-        .select(
-            "id",
-            F.sha2(F.concat_ws("\x1f", "__keys"), 256).alias("__sig"),
-            F.size("__keys").cast("long").alias("__gk"),
-        )
-        .transform(scoped_persist)
+    meetings = _self_meetings(blocks, hot_threshold, num_salts)
+    return (
+        meetings.where(predicate(meetings))
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).alias("n_passing_keys"))
     )
-    groups = mem.groupBy("__sig").agg(
-        F.min("id").alias("__rep"), F.count(F.lit(1)).alias("__gn")
-    ).transform(scoped_persist)
-
-    # representative blocks: the group's key set exactly once, labeled by sig
-    rep_blocks = (
-        slim.join(groups.select(F.col("__rep").alias("id"), "__sig"), "id")
-        .select("block_key", F.col("__sig").alias("id"))
-    )
-    group_pairs = candidate_pairs(rep_blocks, hot_threshold, num_salts)
-
-    # cross-group expansion: every member×member combination inherits the
-    # group pair's n_keys; groups are disjoint so least/greatest only fixes
-    # the arbitrary id order across groups
-    ma = mem.select(F.col("__sig").alias("id_a"), F.col("id").alias("__ra"))
-    mb = mem.select(F.col("__sig").alias("id_b"), F.col("id").alias("__rb"))
-    cross = (
-        group_pairs.join(ma, "id_a")
-        .join(mb, "id_b")
-        .select(
-            F.least("__ra", "__rb").alias("id_a"),
-            F.greatest("__ra", "__rb").alias("id_b"),
-            "n_keys",
-        )
-    )
-
-    # intra-group pairs: all C(gn, 2) per multi-member group, generated by
-    # the same lossless triangle salting (signature as the block key), each
-    # sharing the group's entire key set
-    multi = groups.where(F.col("__gn") >= 2).select("__sig")
-    intra_members = mem.join(multi, "__sig").select(
-        F.col("__sig").alias("block_key"), "id"
-    )
-    intra = (
-        candidate_pairs(intra_members, hot_threshold, num_salts)
-        .drop("n_keys")
-        .join(mem.select(F.col("id").alias("id_a"), F.col("__gk").alias("n_keys")), "id_a")
-        .select("id_a", "id_b", "n_keys")
-    )
-    return cross.unionByName(intra)
 
 
 def candidate_pairs_lr(
@@ -224,37 +231,32 @@ def candidate_pairs_lr(
     ``(id_l, id_r)`` pairs sharing >= 1 key.
 
     The linkage use case "link file A against file B" (one-sided growth:
-    a daily batch against a canonical table). Skew handling is the
-    bipartite form of the triangle salt: for keys whose left×right fan-out
-    exceeds ``hot_threshold``, left rows take a deterministic salt
-    ``hash(id) % S`` and right rows replicate to all S salts — every
-    cross pair meets exactly once, spread over S partitions. Lossless.
+    a daily batch against a canonical table); hot keys take the bipartite
+    salt of :func:`_lr_meetings`.
     """
-    sl = blocks_l.select("block_key", F.col("id").alias("id_l"))
-    sr = blocks_r.select("block_key", F.col("id").alias("id_r"))
-    sizes = (
-        sl.groupBy("block_key").count().withColumnRenamed("count", "n_l")
-        .join(sr.groupBy("block_key").count().withColumnRenamed("count", "n_r"), "block_key")
-    )
-    hot_keys = sizes.where(F.col("n_l") * F.col("n_r") > hot_threshold).select("block_key")
-    tl = sl.join(F.broadcast(hot_keys.withColumn("is_hot", F.lit(True))), "block_key", "left")
-    tr = sr.join(F.broadcast(hot_keys.withColumn("is_hot", F.lit(True))), "block_key", "left")
+    return _lr_meetings(
+        blocks_l.select("block_key", "id"),
+        blocks_r.select("block_key", "id"),
+        hot_threshold,
+        num_salts,
+    ).distinct()
 
-    pn = (
-        tl.where(F.col("is_hot").isNull()).drop("is_hot")
-        .join(tr.where(F.col("is_hot").isNull()).drop("is_hot"), "block_key")
-        .select("id_l", "id_r")
-    )
-    hl = tl.where(F.col("is_hot")).drop("is_hot").withColumn(
-        "salt", F.pmod(F.xxhash64("id_l"), F.lit(num_salts)).cast("int")
-    )
-    hr = (
-        tr.where(F.col("is_hot")).drop("is_hot")
-        .withColumn("salt", F.explode(F.sequence(F.lit(0), F.lit(num_salts - 1))))
-    )
-    ph = hl.join(hr, ["block_key", "salt"]).select("id_l", "id_r")
 
-    return pn.unionByName(ph).distinct()
+def candidate_pairs_lr_annotated(
+    blocks_l: DataFrame,
+    blocks_r: DataFrame,
+    predicate,
+    hot_threshold: int = DEFAULT_HOT_THRESHOLD,
+    num_salts: int = DEFAULT_SALTS,
+) -> DataFrame:
+    """:func:`candidate_pairs_lr` with per-(key, id) payload and an in-join
+    predicate (the bipartite sibling of :func:`candidate_pairs_annotated`).
+    Left extras are exposed suffixed ``_l``, right extras ``_r``; a pair
+    ``(id_l, id_r)`` survives if ANY of its key-meetings passes. Output:
+    distinct ``(id_l, id_r)``.
+    """
+    meetings = _lr_meetings(blocks_l, blocks_r, hot_threshold, num_salts)
+    return meetings.where(predicate(meetings)).select("id_l", "id_r").distinct()
 
 
 def fuzzy_join(
@@ -333,151 +335,3 @@ def one_to_one(
         F.min(F.struct(score_col, left_col)).alias("_b")
     ).select(F.col(f"_b.{left_col}").alias(left_col), right_col)
     return best_r.join(best_l, [left_col, right_col])
-
-
-def candidate_pairs_annotated(
-    blocks: DataFrame,
-    predicate,
-    hot_threshold: int = DEFAULT_HOT_THRESHOLD,
-    num_salts: int = DEFAULT_SALTS,
-) -> DataFrame:
-    """:func:`candidate_pairs` with per-(key, id) PAYLOAD and an in-join
-    pruning predicate — the hook for PPJoin-style positional filters, which
-    need to see both sides' per-key metadata BEFORE the pair is deduplicated
-    (the slim operator throws that context away).
-
-    ``blocks`` carries ``(block_key, id, extra...)``; every extra column is
-    exposed to ``predicate`` suffixed ``_a``/``_b`` (payloads follow their
-    ids through canonicalization, so ``x_a`` always belongs to ``id_a``).
-    ``predicate(df) -> Column`` is applied to each key-meeting of a pair;
-    the pair survives if ANY meeting passes. Output: ``(id_a < id_b,
-    n_passing_keys)`` — deliberately NOT named ``n_keys``: the slim
-    operator's ``n_keys`` counts ALL key-meetings, this counts only
-    PASSING ones, and under a non-trivial predicate the two carry
-    different blocking-quality signals (distinct names prevent a consumer
-    accidentally reusing one as the other).
-
-    Salting is the same lossless triangle split as :func:`candidate_pairs`
-    — the predicate is applied after the salted join, so hot-block behavior
-    is unchanged. DELIBERATE PARALLEL IMPLEMENTATION: the slim operator
-    stays untouched (it backs ~40 green queries and additionally supports
-    ``adaptive_target_rows``, which this variant does not); the two are
-    pinned pair-for-pair equal under an always-true predicate in
-    tests/test_pairs.py — any change to the triangle-salt rules must land
-    in both and keep that parity test green.
-    """
-    extras = [c for c in blocks.columns if c not in ("block_key", "id")]
-    slim = blocks.select("block_key", "id", *extras)
-    sizes = slim.groupBy("block_key").count()
-    hot_keys = sizes.where(F.col("count") > hot_threshold).select("block_key")
-    from levenshtein_spark.session import scoped_persist
-
-    # persisted for the same both-branches-read-twice reason as the slim
-    # operator (here the cached rows also carry the predicate payloads)
-    tagged = slim.join(
-        F.broadcast(hot_keys.withColumn("__hot", F.lit(True))), "block_key", "left"
-    ).transform(scoped_persist)
-
-    def _suffix(df: DataFrame, suf: str) -> DataFrame:
-        out = df.withColumnRenamed("id", f"id{suf}")
-        for c in extras:
-            out = out.withColumnRenamed(c, f"{c}{suf}")
-        return out
-
-    normal = tagged.where(F.col("__hot").isNull()).drop("__hot")
-    pn = (
-        _suffix(normal, "_a")
-        .join(_suffix(normal, "_b"), "block_key")
-        .where(F.col("id_a") < F.col("id_b"))
-    )
-
-    hot = tagged.where(F.col("__hot")).drop("__hot")
-    hot_s = hot.withColumn(
-        "salt", F.pmod(F.xxhash64("id"), F.lit(num_salts)).cast("int")
-    )
-    left = (
-        _suffix(hot_s, "_l")
-        .withColumn("salt_t", F.explode(F.sequence(F.col("salt"), F.lit(num_salts - 1))))
-        .withColumnRenamed("salt", "salt_l")
-    )
-    right = _suffix(hot_s, "_r").withColumnRenamed("salt", "salt_t")
-    met = (
-        left.join(right, ["block_key", "salt_t"])
-        .where((F.col("salt_l") != F.col("salt_t")) | (F.col("id_l") < F.col("id_r")))
-        .where(F.col("id_l") != F.col("id_r"))
-    )
-    swap = F.col("id_l") > F.col("id_r")
-    canon = [
-        F.least("id_l", "id_r").alias("id_a"),
-        F.greatest("id_l", "id_r").alias("id_b"),
-    ]
-    for c in extras:
-        canon.append(F.when(swap, F.col(f"{c}_r")).otherwise(F.col(f"{c}_l")).alias(f"{c}_a"))
-        canon.append(F.when(swap, F.col(f"{c}_l")).otherwise(F.col(f"{c}_r")).alias(f"{c}_b"))
-    ph = met.select(*canon)
-
-    cols = ["id_a", "id_b"] + [f"{c}{s}" for c in extras for s in ("_a", "_b")]
-    meetings = pn.select(*cols).unionByName(ph.select(*cols))
-    passing = meetings.where(predicate(meetings))
-    return passing.groupBy("id_a", "id_b").agg(
-        F.count(F.lit(1)).alias("n_passing_keys")
-    )
-
-
-def candidate_pairs_lr_annotated(
-    blocks_l: DataFrame,
-    blocks_r: DataFrame,
-    predicate,
-    hot_threshold: int = DEFAULT_HOT_THRESHOLD,
-    num_salts: int = DEFAULT_SALTS,
-) -> DataFrame:
-    """:func:`candidate_pairs_lr` with per-(key, id) payload and an in-join
-    predicate (the bipartite sibling of :func:`candidate_pairs_annotated`).
-    Left extras are exposed suffixed ``_l``, right extras ``_r``; a pair
-    ``(id_l, id_r)`` survives if ANY of its key-meetings passes. Output:
-    distinct ``(id_l, id_r)``.
-    """
-    ex_l = [c for c in blocks_l.columns if c not in ("block_key", "id")]
-    ex_r = [c for c in blocks_r.columns if c not in ("block_key", "id")]
-
-    def _suffix(df: DataFrame, extras, suf: str) -> DataFrame:
-        out = df.withColumnRenamed("id", f"id{suf}")
-        for c in extras:
-            out = out.withColumnRenamed(c, f"{c}{suf}")
-        return out
-
-    sl = _suffix(blocks_l.select("block_key", "id", *ex_l), ex_l, "_l")
-    sr = _suffix(blocks_r.select("block_key", "id", *ex_r), ex_r, "_r")
-    sizes = (
-        sl.groupBy("block_key").count().withColumnRenamed("count", "n_l")
-        .join(sr.groupBy("block_key").count().withColumnRenamed("count", "n_r"), "block_key")
-    )
-    hot_keys = sizes.where(F.col("n_l") * F.col("n_r") > hot_threshold).select("block_key")
-    from levenshtein_spark.session import scoped_persist
-
-    # each side feeds its normal and hot branch — persist like the slim op
-    tl = sl.join(
-        F.broadcast(hot_keys.withColumn("__hot", F.lit(True))), "block_key", "left"
-    ).transform(scoped_persist)
-    tr = sr.join(
-        F.broadcast(hot_keys.withColumn("__hot", F.lit(True))), "block_key", "left"
-    ).transform(scoped_persist)
-
-    pn = (
-        tl.where(F.col("__hot").isNull()).drop("__hot")
-        .join(tr.where(F.col("__hot").isNull()).drop("__hot"), "block_key")
-    )
-    hl = tl.where(F.col("__hot")).drop("__hot").withColumn(
-        "salt", F.pmod(F.xxhash64("id_l"), F.lit(num_salts)).cast("int")
-    )
-    hr = (
-        tr.where(F.col("__hot")).drop("__hot")
-        .withColumn("salt", F.explode(F.sequence(F.lit(0), F.lit(num_salts - 1))))
-    )
-    ph = hl.join(hr, ["block_key", "salt"])
-
-    cols = ["id_l", "id_r"] + [f"{c}_l" for c in ex_l] + [f"{c}_r" for c in ex_r]
-    meetings = pn.select(*cols).unionByName(ph.select(*cols))
-    return (
-        meetings.where(predicate(meetings)).select("id_l", "id_r").distinct()
-    )

@@ -30,7 +30,6 @@ from levenshtein_spark.operators.normalize import normalize
 from levenshtein_spark.operators.pairs import (
     attach_pair_payload,
     candidate_pairs,
-    candidate_pairs_collapsed,
     candidate_pairs_lr,
 )
 from levenshtein_spark.operators.scoring import edges as edges_of
@@ -57,15 +56,6 @@ class LinkageConfig:
     # either way; flip on for clone-heavy corpora (measured 3×/10.4× at
     # k=8/k=64 on 26.8× duplication — BENCH/memoize_regimes.json).
     memoize_scoring: bool = False
-    # blocking-clone collapse (operators/pairs.py candidate_pairs_collapsed):
-    # route rows with identical full key sets through the salted join +
-    # dedup shuffle as one representative, then expand. Identical pair set
-    # either way (pinned); flip on for exact re-ingestion corpora (measured
-    # 1.36× at 10× replication — BENCH/collapsed_clones.json; a LOSS when
-    # clone groups are rare, e.g. the sf1 replica corpus at 1.05× collapse).
-    # Mutually exclusive with adaptive_target_rows (the collapsed variant
-    # carries no adaptive-salt mode yet).
-    collapse_clones: bool = False
     # entity formation: "cc" (transitive closure — the north rule's default,
     # highest recall), "pivot" (KwikCluster correlation clustering — bridge-
     # edge-robust, every cluster a radius-1 star around a verified pivot),
@@ -104,10 +94,6 @@ def _form_entities(cfg: LinkageConfig, ids, edges, cc_rounds_dir: str):
 
 def run_linkage(spark: SparkSession, source: DataFrame, cfg: LinkageConfig) -> dict:
     """Run (or resume) the full pipeline; returns handles to every stage."""
-    if cfg.collapse_clones and cfg.adaptive_target_rows is not None:
-        raise ValueError(
-            "collapse_clones and adaptive_target_rows are mutually exclusive"
-        )
     wh = Warehouse(spark, cfg.checkpoint_dir)
 
     normalized = _stage(wh, cfg, "normalized", lambda: normalize(source, cfg.prefix_len))
@@ -118,15 +104,11 @@ def run_linkage(spark: SparkSession, source: DataFrame, cfg: LinkageConfig) -> d
         wh,
         cfg,
         "pairs",
-        lambda: (
-            candidate_pairs_collapsed(blocks, cfg.hot_threshold, cfg.num_salts)
-            if cfg.collapse_clones
-            else candidate_pairs(
-                blocks,
-                cfg.hot_threshold,
-                cfg.num_salts,
-                adaptive_target_rows=cfg.adaptive_target_rows,
-            )
+        lambda: candidate_pairs(
+            blocks,
+            cfg.hot_threshold,
+            cfg.num_salts,
+            adaptive_target_rows=cfg.adaptive_target_rows,
         ),
     )
     scored = _stage(

@@ -83,6 +83,12 @@ def scoped_persist(df):
     code (bench.py, tools/check_correctness.py, tests) calls
     ``release_caches()`` after materializing each query's result; library
     users running many queries in one session should do the same.
+
+    ``localCheckpoint`` storage is not reclaimed by that call: the collector
+    nudge that frees it runs only on ``release_caches(include_pinned=True)``.
+    A long-lived session must therefore send that signal once per query,
+    after the query is fully materialized, or checkpoint blocks accumulate
+    until the JVM happens to run a full GC.
     """
     df = df.persist()
     _SCOPED_CACHES.append(df)

@@ -218,41 +218,83 @@ def test_candidate_pairs_lr_annotated_parity(spark):
     assert {(x.id_l, x.id_r) for x in ann} == slim
 
 
-def test_candidate_pairs_collapsed_parity(spark):
-    """candidate_pairs_collapsed must produce the identical (pair, n_keys)
-    set as candidate_pairs on a corpus with planted blocking clones (deep
-    clone groups, hot + normal blocks, singleton groups mixed in)."""
+def test_annotated_selective_predicate_matches_bruteforce(spark):
+    """A predicate that rejects some key meetings: both annotated operators
+    must match a brute-force oracle over every (key, pair) meeting, on hot
+    (salted) and normal blocks alike, with the payload taken per (key, id)."""
     import random
 
     from levenshtein_spark.operators.pairs import (
-        candidate_pairs,
-        candidate_pairs_collapsed,
+        candidate_pairs_annotated,
+        candidate_pairs_lr_annotated,
     )
 
-    rng = random.Random(11)
-    rows = []
-    next_id = 0
-    # 12 clone groups of sizes 1..8: every member carries the same key set
-    for g in range(12):
-        keys = {f"k{rng.randint(0, 9)}" for _ in range(rng.randint(1, 4))}
-        for _ in range(rng.randint(1, 8)):
-            rid = f"id{next_id:04d}"
-            next_id += 1
-            rows += [(k, rid) for k in keys]
-    # a hot pile sharing one key (all singleton groups w.r.t. full key set)
-    for i in range(80):
-        rid = f"hot{i:04d}"
-        rows.append(("k0", rid))
-        if i % 3 == 0:
-            rows.append((f"k{1 + i % 5}", rid))
-    blocks = spark.createDataFrame(rows, "block_key string, id string")
+    def tag(key, i):
+        return (i * 7 + int(key[1:])) % 11
 
-    plain = {
-        (r.id_a, r.id_b, r.n_keys)
-        for r in candidate_pairs(blocks, hot_threshold=30, num_salts=4).collect()
+    def rows_for(ids, rng):
+        rows = []
+        for i in ids:
+            for k in {f"k{rng.randint(1, 6)}" for _ in range(rng.randint(1, 3))}:
+                rows.append((k, i, tag(k, i)))
+        return rows
+
+    rng = random.Random(5)
+    rows = rows_for(range(120), rng) + [("k0", i, tag("k0", i)) for i in range(20, 120)]
+    blocks = spark.createDataFrame(rows, "block_key string, id long, tag long")
+
+    by_key = {}
+    for k, i, t in rows:
+        by_key.setdefault(k, []).append((i, t))
+    # only k0 takes the triangle salt
+    assert max(len(v) for k, v in by_key.items() if k != "k0") <= 60 < len(by_key["k0"])
+    n_keys, n_pass = {}, {}
+    for members in by_key.values():
+        for ia, ta in members:
+            for ib, tb in members:
+                if ia < ib:
+                    n_keys[(ia, ib)] = n_keys.get((ia, ib), 0) + 1
+                    if (ta + tb) % 3:
+                        n_pass[(ia, ib)] = n_pass.get((ia, ib), 0) + 1
+    got = {
+        (r.id_a, r.id_b, r.n_passing_keys)
+        for r in candidate_pairs_annotated(
+            blocks,
+            lambda m: (F.col("tag_a") + F.col("tag_b")) % 3 != 0,
+            hot_threshold=60,
+            num_salts=4,
+        ).collect()
     }
-    collapsed = {
-        (r.id_a, r.id_b, r.n_keys)
-        for r in candidate_pairs_collapsed(blocks, hot_threshold=30, num_salts=4).collect()
+    assert got == {(a, b, n) for (a, b), n in n_pass.items()}
+    assert len(n_pass) < len(n_keys)  # some pairs rejected outright
+    assert any(0 < n < n_keys[p] for p, n in n_pass.items())  # partly passing
+
+    rows_r = rows_for(range(1000, 1080), rng) + [
+        ("k0", i, tag("k0", i)) for i in range(1000, 1040)
+    ]
+    size_r = {}
+    for k, _, _ in rows_r:
+        size_r[k] = size_r.get(k, 0) + 1
+    fan_out = {k: len(v) * size_r[k] for k, v in by_key.items()}
+    # only k0 takes the bipartite salt
+    assert max(n for k, n in fan_out.items() if k != "k0") <= 2000 < fan_out["k0"]
+    blocks_r = spark.createDataFrame(rows_r, "block_key string, id long, tag long")
+    exp = {
+        (il, ir)
+        for kl, il, tl in rows
+        for kr, ir, tr in rows_r
+        if kl == kr and (tl + tr) % 3
     }
-    assert collapsed == plain
+    shared = {(il, ir) for kl, il, _ in rows for kr, ir, _ in rows_r if kl == kr}
+    got_lr = {
+        (r.id_l, r.id_r)
+        for r in candidate_pairs_lr_annotated(
+            blocks,
+            blocks_r,
+            lambda m: (F.col("tag_l") + F.col("tag_r")) % 3 != 0,
+            hot_threshold=2000,
+            num_salts=4,
+        ).collect()
+    }
+    assert got_lr == exp
+    assert exp < shared

@@ -241,36 +241,6 @@ def test_resume_from_mid_pipeline(spark, tmp_path):
     assert set(cfg2.stage_times) == {"scored", "edges", "clusters"}
 
 
-def test_collapse_clones_pipeline_identical(spark, tmp_path_factory, pipeline):
-    """LinkageConfig(collapse_clones=True) must reproduce the default
-    pipeline's pair set and cluster labels exactly (the collapsed pair
-    generator is pinned pair-for-pair equal; this pins the plan wiring)."""
-    out, cfg = pipeline
-    ckpt = str(tmp_path_factory.mktemp("ckpt_collapse"))
-    src = code_files_df(spark, num_clusters=60, seed=42)
-    cfg2 = LinkageConfig(
-        checkpoint_dir=ckpt, k_content=K_CONTENT, hot_threshold=150, num_salts=4,
-        collapse_clones=True,
-    )
-    out2 = run_linkage(spark, src, cfg2)
-    base_pairs = {(r.id_a, r.id_b, r.n_keys) for r in out["pairs"].collect()}
-    coll_pairs = {(r.id_a, r.id_b, r.n_keys) for r in out2["pairs"].collect()}
-    assert coll_pairs == base_pairs
-    base_lab = {r.id: r.cluster_id for r in out["clusters"].collect()}
-    coll_lab = {r.id: r.cluster_id for r in out2["clusters"].collect()}
-    assert coll_lab == base_lab
-
-    # the guard: collapse + adaptive salting is rejected
-    with pytest.raises(ValueError):
-        run_linkage(
-            spark,
-            src,
-            LinkageConfig(
-                checkpoint_dir=ckpt, collapse_clones=True, adaptive_target_rows=100
-            ),
-        )
-
-
 def test_cluster_method_pivot(spark, tmp_path):
     """cluster_method="pivot" forms entities with KwikCluster over the same
     verified edge stage, on the pipeline's real sha-hex string ids — checked
