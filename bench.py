@@ -123,7 +123,7 @@ def main() -> None:
         detail[f"{name}_runs"] = float(len(samples))
         for i, s in enumerate(samples):
             detail[f"{name}_run{i}"] = s
-        release_caches(include_pinned=True)  # the query is fully materialized
+        release_caches()  # the query is fully materialized
 
     # q1: full ER pipeline on customers — best-of-2 like the floors (the
     # host swings up to 50% between identical runs, which poisoned r01's
@@ -255,7 +255,7 @@ def main() -> None:
             t0 = time.perf_counter()
             fn()
             sf1_times[name] = round(time.perf_counter() - t0, 3)
-            release_caches(include_pinned=True)  # the query is fully materialized
+            release_caches()  # the query is fully materialized
 
         n1 = [0]
         clock1("link_pipeline", lambda: n1.__setitem__(0, flagship_clusters(spark, sf1_dir).count()))

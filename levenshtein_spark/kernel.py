@@ -171,8 +171,6 @@ def batch_edit_distance(
     else:
         karr = _caps(k, n_pairs)
         unbounded = karr < 0
-        if (karr[~unbounded & (karr < 0)]).size:  # pragma: no cover - sentinel guard
-            raise ValueError("maximum edit distance cannot be negative")
         keff = np.where(unbounded, m_len, np.minimum(karr, m_len))
 
     res = np.full(n_pairs, -1, np.int64)

@@ -7,10 +7,10 @@ neighbor minimum comes from a groupBy().min() + join, so a hot node never
 materializes its neighbor list in one task).
 
 Each star phase is a groupBy + join; the round's edge set is deduplicated
-once (at the end of small-star) rather than per phase, and
-``steps_per_check`` rounds compose lazily into a single lineage-truncating
-materialization + convergence job, so the loop pays one Spark job per check
-instead of one per phase. Convergence = the canonical edge set is unchanged
+once (at the end of small-star) rather than per phase, and each round
+composes lazily into a single lineage-truncating materialization +
+convergence job, so the loop pays one Spark job per round instead of one per
+phase. Convergence = the canonical edge set is unchanged
 (count + order-insensitive hash), at which point every component is a star
 rooted at its minimum id.
 
@@ -73,7 +73,6 @@ def connected_components(
     edges: DataFrame,
     max_iterations: int = 50,
     checkpoint_dir: str | None = None,
-    steps_per_check: int = 1,
     stats: dict | None = None,
 ) -> DataFrame:
     """edge list (src, dst) → labels (id, cluster_id) for every edge endpoint.
@@ -115,15 +114,8 @@ def connected_components(
         return spark.createDataFrame([], "id string, cluster_id string")
 
     for rnd in range(1, max_iterations + 1):
-        # ``steps_per_check`` star-rounds compose lazily into one
-        # materialization + one signature job. Measured on this host the
-        # deep composed plan costs more than the saved signature jobs, so
-        # the default stays 1; the knob remains for clusters where the
-        # convergence-check action (not stage setup) dominates. Extra
-        # rounds past convergence are no-ops on a star forest (both phases
-        # are idempotent there), so overshooting by one is safe.
-        for _ in range(steps_per_check):
-            e = _small_star(_large_star(e))
+        # one round per check (measured): a deeper composed plan cost more than the signature jobs it saved
+        e = _small_star(_large_star(e))
         e = materialize(e, rnd)
         new_sig = _signature(e)
         if new_sig == sig:

@@ -29,7 +29,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
-from levenshtein_spark.session import pinned_persist
+from levenshtein_spark.session import scoped_persist
 
 
 def global_prefix_sum(
@@ -71,11 +71,8 @@ def global_prefix_sum(
     cols = [F.col(c) for c in [*group_cols, *order_cols]]
     part = df.repartitionByRange(*([num_partitions] if num_partitions else []), *cols)
     part = part.withColumn("_pid", F.spark_partition_id())
-    # PINNED persist: the offset census and every future evaluation of the
-    # returned plan must see the SAME partition cuts (the range partitioner
-    # samples; a re-materialization after a cache drop could legally choose
-    # different boundaries while the plan still carries the old offsets).
-    part = part.transform(pinned_persist)
+    # outlives every evaluation of the returned plan: released once, after the query materializes
+    part = part.transform(scoped_persist)
     rows = part.groupBy("_pid", *group_cols).agg(
         *[F.sum(vc).alias(f"_s{i}") for i, vc in enumerate(value_cols)]
     ).collect()

@@ -31,7 +31,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
-from levenshtein_spark.session import pinned_persist, scoped_persist
+from levenshtein_spark.session import scoped_persist
 
 
 def global_rank(
@@ -51,11 +51,8 @@ def global_rank(
     cols = [F.col(c) for c in order_cols]
     part = df.repartitionByRange(*([num_partitions] if num_partitions else []), *cols)
     part = part.withColumn("_pid", F.spark_partition_id())
-    # PINNED persist: the offset census and every future evaluation of the
-    # returned plan must see the SAME partition cuts (the range partitioner
-    # samples; a re-materialization after a cache drop could legally choose
-    # different boundaries while the plan still carries the old offsets).
-    part = part.transform(pinned_persist)
+    # outlives every evaluation of the returned plan: released once, after the query materializes
+    part = part.transform(scoped_persist)
     counts = sorted(
         (r["_pid"], r["count"]) for r in part.groupBy("_pid").count().collect()
     )

@@ -10,6 +10,7 @@ code path writes real Iceberg tables.
 
 from __future__ import annotations
 
+import gc
 import os
 
 import pandas as pd
@@ -75,80 +76,42 @@ _SCOPED_CACHES: list = []
 
 
 def scoped_persist(df):
-    """``df.persist()`` registered for bulk release.
+    """``df.persist()`` registered for the per-query :func:`release_caches`.
 
-    Driver queries persist helper stages (MinHash blocks, PQ codebooks,
-    fingerprint tables) that feed multiple plan branches; in a long-lived
-    session those caches would otherwise accumulate (ADVICE r02). Harness
-    code (bench.py, tools/check_correctness.py, tests) calls
-    ``release_caches()`` after materializing each query's result; library
-    users running many queries in one session should do the same.
-
-    ``localCheckpoint`` storage is not reclaimed by that call: the collector
-    nudge that frees it runs only on ``release_caches(include_pinned=True)``.
-    A long-lived session must therefore send that signal once per query,
-    after the query is fully materialized, or checkpoint blocks accumulate
-    until the JVM happens to run a full GC.
-    """
+    Queries persist helper stages (MinHash blocks, PQ codebooks, the
+    range-partitioned projections behind ``global_rank``) that feed several
+    plan branches or must keep one set of partition cuts. The contract is
+    one release per query: call ``release_caches()`` once, after every
+    DataFrame the query returned is fully materialized — never while a
+    returned plan may still be evaluated."""
     df = df.persist()
     _SCOPED_CACHES.append(df)
     return df
 
 
-_PINNED_CACHES: list[DataFrame] = []
+def release_caches(*, include_pinned: bool = True) -> int:
+    """End-of-query release: unpersist every :func:`scoped_persist` frame,
+    then nudge the Python and JVM collectors so Spark's ContextCleaner
+    reclaims the ``localCheckpoint`` blocks of frames that are now
+    unreachable (checkpointed frames are not registered: their lineage is
+    gone, so an unpersist would break any plan still referencing them).
+    Returns the number of frames released.
 
-
-def pinned_persist(df: DataFrame) -> DataFrame:
-    """Persist that ``release_caches()`` will NOT drop by default.
-
-    For frames whose driver-collected byproducts must stay consistent with
-    any FUTURE re-materialization of the same plan — the range-partitioned
-    projections behind ``global_rank`` / ``pack_by_budget``, whose offset
-    censuses were collected against one specific set of sampled partition
-    cuts. Dropping such a cache is not merely slow: a re-materialization
-    may sample different cuts while the plan still carries the old offsets,
-    silently corrupting every global position. Release explicitly with
-    ``release_caches(include_pinned=True)`` once no returned DataFrame from
-    the query will be re-evaluated."""
-    df = df.persist()
-    _PINNED_CACHES.append(df)
-    return df
-
-
-def release_caches(*, include_pinned: bool = False) -> int:
-    """Unpersist every scoped cache registered since the last release.
-    Returns the number released. Safe to call at any time — caches are only
-    dropped, never invalidated mid-plan, because callers release AFTER
-    materializing the consuming query. Pinned caches (cut-pinning persists,
-    see :func:`pinned_persist`) are kept unless ``include_pinned``.
-
-    ``localCheckpoint`` storage (the clustering operators truncate lineage
-    with it; see operators/clustering.py) is NOT registered here — a
-    checkpointed frame cannot be unpersisted without breaking any plan
-    that still references it, because its lineage is gone by design. Those
-    blocks are reclaimed by Spark's ContextCleaner once the frames become
-    unreachable, which in practice means after the consuming query's
-    DataFrames go out of scope; the ``include_pinned`` release (the
-    "query fully materialized, nothing will be re-evaluated" signal the
-    harnesses send per query) nudges both collectors so reclamation is
-    prompt rather than whenever the next full GC happens to run."""
+    Every release is full: ``include_pinned`` accepts only ``True``, and
+    ``False`` raises rather than being silently ignored."""
+    if include_pinned is not True:
+        raise ValueError("partial release was removed: call release_caches()")
     n = 0
     while _SCOPED_CACHES:
         _SCOPED_CACHES.pop().unpersist()
         n += 1
-    if include_pinned:
-        while _PINNED_CACHES:
-            _PINNED_CACHES.pop().unpersist()
-            n += 1
-        import gc
-
-        gc.collect()  # drop py4j refs of dead DataFrames -> JVM side can free
-        spark = SparkSession.getActiveSession()
-        if spark is not None:
-            try:
-                spark.sparkContext._jvm.System.gc()  # lets ContextCleaner reap checkpoint RDDs
-            except Exception:
-                pass  # a stopped/stopping context is fine — nothing to reclaim
+    gc.collect()  # drop py4j refs of dead DataFrames -> JVM side can free
+    spark = SparkSession.getActiveSession()
+    if spark is not None:
+        try:
+            spark.sparkContext._jvm.System.gc()  # lets ContextCleaner reap checkpoint RDDs
+        except Exception:
+            pass  # a stopped/stopping context is fine — nothing to reclaim
     return n
 
 

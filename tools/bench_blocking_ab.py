@@ -136,7 +136,7 @@ def main() -> None:
         record[name]["verified_union_coverage"] = round(
             v.distinct().count() / max(n_union, 1), 4
         )
-    release_caches(include_pinned=True)
+    release_caches()
     spark.catalog.clearCache()
 
     # ---- planted MinHash-only recall -------------------------------------

@@ -61,7 +61,7 @@ def run_pivot(spark, n: int, seed: int = 7) -> dict:
         F.count(F.lit(1)), F.countDistinct("cluster_id")
     ).collect()[0]
     wall = time.perf_counter() - t0
-    release_caches(include_pinned=True)
+    release_caches()
     return {
         "n_nodes": n,
         "n_edges_drawn": 3 * n,
@@ -82,7 +82,7 @@ def run_merge_center(spark, n: int, seed: int = 7) -> dict:
         F.count(F.lit(1)), F.countDistinct("cluster_id")
     ).collect()[0]
     wall = time.perf_counter() - t0
-    release_caches(include_pinned=True)
+    release_caches()
     return {
         "n_nodes": n,
         "n_edges_drawn": 3 * n,
@@ -116,7 +116,7 @@ def check_invariants(spark, n: int = 20000, seed: int = 7) -> dict:
         .join(pivots.withColumnRenamed("id", "dst"), "dst")
         .count()
     )
-    release_caches(include_pinned=True)
+    release_caches()
     assert bad_member == 0, f"{bad_member} members not adjacent to their pivot"
     assert bad_pivot == 0, f"{bad_pivot} pivot-pivot edges (not an independent set)"
     return {"n": n, "non_adjacent_members": int(bad_member), "pivot_pivot_edges": int(bad_pivot)}

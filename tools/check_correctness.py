@@ -60,7 +60,7 @@ def main() -> int:
     oracles = entry.oracle_sql()
     only = set(sys.argv[2:])
 
-    from levenshtein_spark.session import get_spark, warm_python_workers
+    from levenshtein_spark.session import get_spark, release_caches, warm_python_workers
 
     spark = get_spark("check_correctness")
     warm_python_workers(spark)
@@ -73,22 +73,20 @@ def main() -> int:
     for name, fn in queries.items():
         if only and name not in only:
             continue
-        from levenshtein_spark.session import release_caches
-
         t0 = time.perf_counter()
         try:
             sdf = fn(spark, sf_dir).toPandas()
+            t_spark = time.perf_counter() - t0
         except Exception:
             print(f"[FAIL] {name}: spark query raised")
             traceback.print_exc()
             failures.append(name)
             records[name] = {"status": "fail", "mode": "spark_error"}
-            # a failing query's scoped persists must not leak into the rest
-            # of the run (the ADVICE r02 accumulation, error-path edition)
-            release_caches(include_pinned=True)
             continue
-        t_spark = time.perf_counter() - t0
-        release_caches(include_pinned=True)  # this query is fully materialized
+        finally:
+            # fully materialized or failed: either way nothing of this query
+            # is evaluated again, so its caches must not leak into the next
+            release_caches()
         if name not in oracles:
             print(f"[rows-only] {name}: {len(sdf)} rows  spark={t_spark:.1f}s")
             if len(sdf) == 0:
