@@ -1,15 +1,19 @@
 """Shared checkpoint/resume stage machinery for pipeline plans.
 
 A *stage* is a named DataFrame written to the warehouse together with a
-per-partition lineage-metrics table; a re-run skips stages whose table
+per-write-task lineage-metrics table; a re-run skips stages whose table
 already exists (kill the job after any stage and the next run resumes
 there). Used by the linkage plan and the curation plan.
 """
 
 from __future__ import annotations
 
+import glob
+import os
 import time
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
@@ -26,6 +30,26 @@ def stage_metrics(df: DataFrame, stage: str) -> DataFrame:
     )
 
 
+def footer_metrics(wh: Warehouse, stage: str) -> DataFrame:
+    """``stage_metrics`` of a parquet stage table, read on the driver from
+    the footers of the files its write left: ``part`` is the write task's
+    partition number (``part-NNNNN-*``), ``rows`` what that task wrote.
+    No Spark job reads the table back."""
+    rows: dict[int, int] = {}
+    for f in glob.glob(os.path.join(wh.root, stage, "part-*.parquet")):
+        part = int(os.path.basename(f).split("-")[1])
+        rows[part] = rows.get(part, 0) + pq.read_metadata(f).num_rows
+    parts = [part for part in sorted(rows) if rows[part]]
+    # from Arrow, not a Python list: a list becomes a Python RDD whose
+    # write costs one Python worker round-trip per slice (seconds)
+    table = pa.table({
+        "part": pa.array(parts, pa.int32()),
+        "rows": pa.array([rows[part] for part in parts], pa.int64()),
+        "stage": pa.array([stage] * len(parts), pa.string()),
+    })
+    return wh.spark.createDataFrame(table).coalesce(1)
+
+
 def run_stage(wh: Warehouse, cfg, name: str, build) -> DataFrame:
     """Compute-or-resume one stage; persist data + metrics tables.
 
@@ -38,6 +62,7 @@ def run_stage(wh: Warehouse, cfg, name: str, build) -> DataFrame:
     df = build()
     wh.write(df, name)
     out = wh.read(name)
-    wh.write(stage_metrics(out, name), f"metrics_{name}")
+    metrics = stage_metrics(out, name) if wh.catalog else footer_metrics(wh, name)
+    wh.write(metrics, f"metrics_{name}")
     cfg.stage_times[name] = time.perf_counter() - t0
     return out

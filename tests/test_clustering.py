@@ -3,8 +3,8 @@
 import numpy as np
 import pytest
 
+from levenshtein_spark.operators import clustering
 from levenshtein_spark.operators.clustering import cluster_labels, connected_components
-
 
 
 # Heavy module (multi-second Spark jobs / hypothesis sweeps): excluded
@@ -66,17 +66,74 @@ def test_cc_long_chain(spark):
     assert len(got) == 121
 
 
-def test_cc_stats_count_only_rounds_that_changed(spark):
-    """A 5-node chain becomes the star rooted at n00 after two rounds; the
-    third round's no-change check is neither a round nor an edge count."""
+def _chain_and_edge_stats(spark):
     chain = [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(4)]
     stats: dict = {}
     connected_components(spark.createDataFrame(chain, "src string, dst string"), stats=stats).count()
-    assert stats == {"rounds": 2, "edges_per_round": [4, 4, 4]}
-    # a single edge is already a star: no round does anything
-    stats = {}
-    connected_components(spark.createDataFrame([("a", "b")], "src string, dst string"), stats=stats).count()
-    assert stats == {"rounds": 0, "edges_per_round": [1]}
+    edge: dict = {}
+    connected_components(spark.createDataFrame([("a", "b")], "src string, dst string"), stats=edge).count()
+    return stats, edge
+
+
+def test_cc_stats_count_only_rounds_that_changed(spark):
+    """``edges_per_round`` is [canonical, after the local pass, after each
+    star round that changed the edge set]; ``rounds`` counts those star
+    rounds. At the default bucket size a 5-node chain is one bucket, and the
+    local pass alone turns it into the star rooted at n00; a single edge is
+    already a star."""
+    chain, edge = _chain_and_edge_stats(spark)
+    assert chain == {"rounds": 0, "edges_per_round": [4, 4]}
+    assert edge == {"rounds": 0, "edges_per_round": [1, 1]}
+
+
+def test_cc_stats_count_only_rounds_that_changed_forced_buckets(spark, monkeypatch):
+    """One edge per bucket hashes the chain into the buckets {n00-n01},
+    {n01-n02, n02-n03} and {n03-n04}; their stars n00-n01, n01-n02, n01-n03
+    and n03-n04 take two star rounds to become the star rooted at n00. The
+    final no-change check is neither a round nor an edge count. A single
+    edge is one bucket at any size."""
+    monkeypatch.setattr(clustering, "_EDGES_PER_BUCKET", 1)
+    chain, edge = _chain_and_edge_stats(spark)
+    assert chain == {"rounds": 2, "edges_per_round": [4, 4, 4, 4]}
+    assert edge == {"rounds": 0, "edges_per_round": [1, 1]}
+
+
+def _random_edges(n, m, seed, as_long):
+    rng = np.random.default_rng(seed)
+    pairs = [(int(a), int(b)) for a, b in rng.integers(0, n, (m, 2)) if a != b]
+    return pairs if as_long else [(f"n{a:04d}", f"n{b:04d}") for a, b in pairs]
+
+
+def _messy_edges():
+    """Duplicates, reversed duplicates and self-loops around three components."""
+    base = _random_edges(120, 90, 3, as_long=False)
+    return base + base[:30] + [(b, a) for a, b in base[30:60]] + [(a, a) for a, _ in base[:20]]
+
+
+FORCED_GRAPHS = {
+    "random_string": lambda: _random_edges(300, 400, 4, as_long=False),
+    "random_long": lambda: _random_edges(300, 400, 5, as_long=True),
+    "messy": _messy_edges,
+    "chain_10k": lambda: [(i, i + 1) for i in range(10_000)],
+    "star_2k": lambda: [(0, leaf) for leaf in range(1, 2_001)],
+}
+
+
+@pytest.mark.parametrize("reliable", [False, True], ids=["local", "reliable"])
+@pytest.mark.parametrize("graph", sorted(FORCED_GRAPHS))
+def test_cc_forced_buckets_match_union_find(spark, monkeypatch, tmp_path, graph, reliable):
+    """About four buckets per graph, so the star loop runs on what crosses
+    buckets; labels still equal the union-find closure in both modes."""
+    edge_list = FORCED_GRAPHS[graph]()
+    monkeypatch.setattr(clustering, "_EDGES_PER_BUCKET", len(edge_list) // 4 + 1)
+    ckpt = str(tmp_path / "cc") if reliable else None
+    id_type = "long" if isinstance(edge_list[0][0], int) else "string"
+    edges = spark.createDataFrame(edge_list, f"src {id_type}, dst {id_type}")
+    got = {r.id: r.cluster_id for r in connected_components(edges, checkpoint_dir=ckpt).collect()}
+    nodes = {x for a, b in edge_list if a != b for x in (a, b)}
+    assert got == _gold([e for e in edge_list if e[0] != e[1]], sorted(nodes))
+    if reliable:  # the star loop ran after the local pass
+        assert (tmp_path / "cc" / "cc_round_002").is_dir()
 
 
 def test_cc_empty(spark):
@@ -91,9 +148,7 @@ def test_cluster_labels_includes_singletons(spark):
     assert got == {"a": "a", "b": "a", "c": "c"}
 
 
-def test_cc_reliable_checkpoint_matches_local(spark, tmp_path):
-    """checkpoint_dir mode (reliable parquet rounds) == localCheckpoint mode,
-    and the round tables actually land on disk."""
+def _reliable_vs_local(spark, tmp_path):
     rng = np.random.default_rng(9)
     edge_list = [
         (f"n{int(a):04d}", f"n{int(b):04d}")
@@ -108,5 +163,19 @@ def test_cc_reliable_checkpoint_matches_local(spark, tmp_path):
     }
     got_local = {r.id: r.cluster_id for r in connected_components(edges).collect()}
     assert got_reliable == got_local
-    rounds = sorted(p.name for p in (tmp_path / "cc").iterdir())
-    assert rounds and rounds[0] == "cc_round_000"
+    return sorted(p.name for p in (tmp_path / "cc").iterdir())
+
+
+def test_cc_reliable_checkpoint_matches_local(spark, tmp_path):
+    """checkpoint_dir mode (reliable parquet rounds) == localCheckpoint mode,
+    and the round tables actually land on disk: one bucket closes the graph
+    in the local pass, so no star round runs."""
+    assert _reliable_vs_local(spark, tmp_path) == ["cc_round_000", "cc_round_001"]
+
+
+def test_cc_reliable_checkpoint_matches_local_forced_buckets(spark, tmp_path, monkeypatch):
+    """The same with 16 edges per bucket: the star loop runs after the local
+    pass, and its rounds land on disk too."""
+    monkeypatch.setattr(clustering, "_EDGES_PER_BUCKET", 16)
+    rounds = _reliable_vs_local(spark, tmp_path)
+    assert rounds[:3] == ["cc_round_000", "cc_round_001", "cc_round_002"]

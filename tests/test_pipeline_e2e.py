@@ -119,6 +119,19 @@ def test_sha_invariant_held(pipeline):
     assert n == out["normalized"].count()
 
 
+def test_stage_metrics_cover_every_row(pipeline):
+    """metrics_<stage> has one row per write task (distinct ``part``), and
+    its ``rows`` sum to the stage table's row count."""
+    out, _ = pipeline
+    wh = out["warehouse"]
+    for stage in ("normalized", "blocks", "pairs", "scored", "edges", "clusters"):
+        metrics = wh.read(f"metrics_{stage}").collect()
+        parts = [r.part for r in metrics]
+        assert parts and len(parts) == len(set(parts)), stage
+        assert {r.stage for r in metrics} == {stage}
+        assert sum(r.rows for r in metrics) == out[stage].count(), stage
+
+
 def test_resume_skips_stages_and_is_identical(pipeline, spark):
     out, cfg = pipeline
     before = {r.id: r.cluster_id for r in out["clusters"].collect()}
