@@ -105,7 +105,7 @@ def q_min_edit_dist(spark: SparkSession, sf: str) -> DataFrame:
     """
     probes = spark.createDataFrame([(p,) for p in _PROBES_CUST], "probe string")
     cand = tbl(spark, sf, "customer")
-    best = min_edit_dist_t(probes, cand, "probe", "c_name", 6, dist_fn=D.bounded_edit_dist)
+    best = min_edit_dist_t(probes, cand, "probe", "c_name", 6, transpositions=False)
     return best.select("probe", F.col("c_name").alias("best_name"), "dist")
 
 

@@ -2,81 +2,75 @@
 
 Each public function mirrors one reference UDF (ReadMe.md:29-38):
 
-==================  =============================================  =========
-Spark function      Reference UDF                                  Path
-==================  =============================================  =========
-edit_dist           edit_dist    (src/edit_dist.cpp)               Arrow UDF
-edit_dist_t         edit_dist_t  (src/edit_dist_t.cpp)             Arrow UDF
-bounded_edit_dist   bounded_edit_dist   (src/bounded_edit_dist.cpp) Arrow UDF
-bounded_edit_dist_t bounded_edit_dist_t (src/bounded_edit_dist_t.cpp) Arrow UDF
-similarity_t        similarity_t (src/similarity_t.cpp)            Arrow UDF
-*_builtin           comparative JVM baselines (cf. src/postgres.cpp role)
-==================  =============================================  =========
+====================  ===============================================  ==========
+Spark function        Reference UDF                                    Path
+====================  ===============================================  ==========
+edit_dist             edit_dist    (src/edit_dist.cpp)                 Arrow UDF
+edit_dist_t           edit_dist_t  (src/edit_dist_t.cpp)               Arrow UDF
+bounded_edit_dist     bounded_edit_dist   (src/bounded_edit_dist.cpp)   Arrow UDF
+bounded_edit_dist_t   bounded_edit_dist_t (src/bounded_edit_dist_t.cpp) Arrow UDF
+similarity_t          similarity_t (src/similarity_t.cpp)              Arrow UDF
+similarity_t_closest  min_similarity_t (src/min_similarity_t.cpp)      Arrow UDF
+noop                  noop (src/noop.cpp)                              Arrow UDF
+jaro_winkler          (companion ER comparator, no reference UDF)      pandas UDF
+*_builtin             comparative JVM baselines (cf. src/postgres.cpp)  JVM
+====================  ===============================================  ==========
 
-The Arrow UDFs score UTF-8 **bytes** (reference semantics, ReadMe.md:50-51);
-the ``*_builtin`` variants stay entirely JVM-side (whole-stage codegen) using
-Spark's codepoint-counting ``levenshtein`` — identical on ASCII data and the
-fast path when transpositions aren't needed.
+"Arrow UDF" is ``F.arrow_udf``: each batch's ``pa.Array`` columns go
+straight into ``levenshtein_spark.kernel``, which reads their buffers — no
+pandas, no per-value Python objects. The Arrow UDFs score UTF-8 **bytes**
+(reference semantics, ReadMe.md:50-51); the ``*_builtin`` variants stay
+entirely JVM-side (whole-stage codegen) using Spark's codepoint-counting
+``levenshtein`` — identical on ASCII data and the fast path when
+transpositions aren't needed.
 
 The ``min_edit_dist*`` / ``min_similarity_t`` reference functions carry
 cross-row mutable state that is only sound single-threaded
 (src/min_edit_dist_t.cpp:76-83, doc/Usage.md:173-176); their query-level
-meaning (closest match) is re-expressed as aggregations in
-``levenshtein_spark.operators.closest``.
+meaning (closest match) is re-expressed in
+``levenshtein_spark.operators.closest``: ``min_edit_dist_t`` as one
+``mapInArrow`` task per core that keeps the reference's best-so-far cap,
+``min_similarity_t`` as an arg-max over ``similarity_t_closest``.
 """
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import Column
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf, pandas_udf
 from pyspark.sql.types import DoubleType, LongType
 
-from levenshtein_spark.kernel import batch_edit_distance, batch_similarity
+from levenshtein_spark.kernel import (
+    batch_closest_similarity,
+    batch_edit_distance,
+    batch_similarity,
+)
 
 # k = -1 is the internal "unbounded" sentinel on the wire; the public API
 # validates k >= 0 (reference: validate_max.h rejects negative caps).
 
 
-@pandas_udf(LongType())
-def _osa_dist_udf(a: pd.Series, b: pd.Series, k: pd.Series) -> pd.Series:
-    kv = k.fillna(-1).astype("int64").to_numpy()
-    return pd.Series(batch_edit_distance(a.tolist(), b.tolist(), k=kv, transpositions=True))
+@arrow_udf(LongType())
+def _osa_dist_udf(a: pa.Array, b: pa.Array, k: pa.Array) -> pa.Array:
+    return pa.array(batch_edit_distance(a, b, k=k, transpositions=True))
 
 
-@pandas_udf(LongType())
-def _lev_dist_udf(a: pd.Series, b: pd.Series, k: pd.Series) -> pd.Series:
-    kv = k.fillna(-1).astype("int64").to_numpy()
-    return pd.Series(batch_edit_distance(a.tolist(), b.tolist(), k=kv, transpositions=False))
+@arrow_udf(LongType())
+def _lev_dist_udf(a: pa.Array, b: pa.Array, k: pa.Array) -> pa.Array:
+    return pa.array(batch_edit_distance(a, b, k=k, transpositions=False))
 
 
-@pandas_udf(DoubleType())
-def _osa_sim_udf(a: pd.Series, b: pd.Series, p: pd.Series) -> pd.Series:
-    return pd.Series(batch_similarity(a.tolist(), b.tolist(), p.to_numpy()))
+@arrow_udf(DoubleType())
+def _osa_sim_udf(a: pa.Array, b: pa.Array, p: pa.Array) -> pa.Array:
+    return pa.array(batch_similarity(a, b, p))
 
 
-@pandas_udf(DoubleType())
-def _osa_sim_closest_udf(a: pd.Series, b: pd.Series, p: pd.Series) -> pd.Series:
-    from levenshtein_spark.kernel import batch_closest_similarity
-
-    return pd.Series(batch_closest_similarity(a.tolist(), b.tolist(), p.to_numpy()))
-
-
-@pandas_udf(LongType())
-def _osa_closest_udf(a: pd.Series, b: pd.Series, k: pd.Series) -> pd.Series:
-    from levenshtein_spark.kernel import batch_closest_distance
-
-    kv = k.fillna(-1).astype("int64").to_numpy()
-    return pd.Series(batch_closest_distance(a.tolist(), b.tolist(), k=kv, transpositions=True))
-
-
-@pandas_udf(LongType())
-def _lev_closest_udf(a: pd.Series, b: pd.Series, k: pd.Series) -> pd.Series:
-    from levenshtein_spark.kernel import batch_closest_distance
-
-    kv = k.fillna(-1).astype("int64").to_numpy()
-    return pd.Series(batch_closest_distance(a.tolist(), b.tolist(), k=kv, transpositions=False))
+@arrow_udf(DoubleType())
+def _osa_sim_closest_udf(a: pa.Array, b: pa.Array, p: pa.Array) -> pa.Array:
+    return pa.array(batch_closest_similarity(a, b, p))
 
 
 def _as_k_col(k) -> Column:
@@ -114,22 +108,6 @@ def bounded_edit_dist_t(a, b, k) -> Column:
     return _osa_dist_udf(F.col(a) if isinstance(a, str) else a,
                          F.col(b) if isinstance(b, str) else b,
                          _as_k_col(k))
-
-
-def bounded_edit_dist_closest(a, b, k, transpositions: bool = True) -> Column:
-    """Adaptive-cap banded distance for ARG-MIN consumers only — the
-    reference's cross-row mutable cap (src/min_edit_dist_t.cpp:141-144,310)
-    re-expressed batch-safe (see ``kernel.batch_closest_distance``): the
-    first column is the probe; per probe, rows losing to the running
-    within-batch minimum may return a clamped value strictly greater than
-    that minimum, so the per-probe arg-min, its distance, and its
-    tie-break are exactly those of ``bounded_edit_dist(_t)`` while
-    provably-worse rows skip the wide-band DP. Never project this as a
-    per-row distance column."""
-    udf = _osa_closest_udf if transpositions else _lev_closest_udf
-    return udf(F.col(a) if isinstance(a, str) else a,
-               F.col(b) if isinstance(b, str) else b,
-               _as_k_col(k))
 
 
 def similarity_t(a, b, p) -> Column:
@@ -189,9 +167,9 @@ def jaro_winkler(a, b) -> Column:
                    F.col(b) if isinstance(b, str) else b)
 
 
-@pandas_udf(LongType())
-def _noop_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    return pd.Series([0] * len(a))
+@arrow_udf(LongType())
+def _noop_udf(a: pa.Array, b: pa.Array) -> pa.Array:
+    return pa.array(np.zeros(len(a), np.int64))
 
 
 def noop(a, b) -> Column:

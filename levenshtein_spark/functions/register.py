@@ -6,7 +6,8 @@ every user query is plain SQL. ``register_all(spark)`` recreates that surface
 on Spark: every catalog function (ReadMe.md:29-38) plus the legacy names
 (doc/Notes.md:17-26 rename table: lev/damlev/levlim/damlevlim/levmin/
 damlevmin/damlevp/damlevminp) becomes callable from ``spark.sql`` —
-Arrow-batched under the hood, never row-at-a-time Python.
+Arrow-batched under the hood (``F.arrow_udf``: each batch's ``pa.Array``
+columns go straight into the kernel), never row-at-a-time Python.
 
 ``min_*`` note: the reference's ``min_*`` UDFs carry cross-row mutable state
 (the best-so-far cap, src/min_edit_dist_t.cpp:76-83) and document that only
@@ -18,49 +19,49 @@ registrations of ``min_edit_dist``/``min_edit_dist_t`` are the bounded
 kernels and ``min_similarity_t`` is ``similarity_t``: reference queries like
 ``... ORDER BY min_edit_dist_t(Name, 'probe', 6) LIMIT 1`` run verbatim with
 identical results. The adaptive-cap *speedup* they implemented is recovered
-elsewhere (operators/closest.py iterative deepening), not in the scalar.
+in the closest-match operator (``operators/closest.py``), not in the scalar.
 """
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import SparkSession
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf, pandas_udf
 from pyspark.sql.types import DoubleType, LongType
 
 from levenshtein_spark.kernel import batch_edit_distance, batch_similarity
 
 
-@pandas_udf(LongType())
-def _sql_edit_dist(a: pd.Series, b: pd.Series) -> pd.Series:
-    return pd.Series(batch_edit_distance(a.tolist(), b.tolist(), k=None, transpositions=False))
+@arrow_udf(LongType())
+def _sql_edit_dist(a: pa.Array, b: pa.Array) -> pa.Array:
+    return pa.array(batch_edit_distance(a, b, k=None, transpositions=False))
 
 
-@pandas_udf(LongType())
-def _sql_edit_dist_t(a: pd.Series, b: pd.Series) -> pd.Series:
-    return pd.Series(batch_edit_distance(a.tolist(), b.tolist(), k=None, transpositions=True))
+@arrow_udf(LongType())
+def _sql_edit_dist_t(a: pa.Array, b: pa.Array) -> pa.Array:
+    return pa.array(batch_edit_distance(a, b, k=None, transpositions=True))
 
 
-@pandas_udf(LongType())
-def _sql_bounded_edit_dist(a: pd.Series, b: pd.Series, k: pd.Series) -> pd.Series:
-    kv = k.fillna(-1).astype("int64").to_numpy()
-    return pd.Series(batch_edit_distance(a.tolist(), b.tolist(), k=kv, transpositions=False))
+@arrow_udf(LongType())
+def _sql_bounded_edit_dist(a: pa.Array, b: pa.Array, k: pa.Array) -> pa.Array:
+    return pa.array(batch_edit_distance(a, b, k=k, transpositions=False))
 
 
-@pandas_udf(LongType())
-def _sql_bounded_edit_dist_t(a: pd.Series, b: pd.Series, k: pd.Series) -> pd.Series:
-    kv = k.fillna(-1).astype("int64").to_numpy()
-    return pd.Series(batch_edit_distance(a.tolist(), b.tolist(), k=kv, transpositions=True))
+@arrow_udf(LongType())
+def _sql_bounded_edit_dist_t(a: pa.Array, b: pa.Array, k: pa.Array) -> pa.Array:
+    return pa.array(batch_edit_distance(a, b, k=k, transpositions=True))
 
 
-@pandas_udf(DoubleType())
-def _sql_similarity_t(a: pd.Series, b: pd.Series, p: pd.Series) -> pd.Series:
-    return pd.Series(batch_similarity(a.tolist(), b.tolist(), p.to_numpy()))
+@arrow_udf(DoubleType())
+def _sql_similarity_t(a: pa.Array, b: pa.Array, p: pa.Array) -> pa.Array:
+    return pa.array(batch_similarity(a, b, p))
 
 
-@pandas_udf(LongType())
-def _sql_noop(a: pd.Series, b: pd.Series, k: pd.Series) -> pd.Series:
-    return pd.Series([0] * len(a))
+@arrow_udf(LongType())
+def _sql_noop(a: pa.Array, b: pa.Array, k: pa.Array) -> pa.Array:
+    return pa.array(np.zeros(len(a), np.int64))
 
 
 # SQL name -> (udf, reference ancestry). `postgres` plays the reference's

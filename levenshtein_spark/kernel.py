@@ -43,6 +43,16 @@ Deliberate, documented deviations (SURVEY.md §2.2 item 9):
 * ``similarity_batch`` keeps the distance→similarity formula for NULL/empty
   inputs rather than reproducing the C library's accidental
   "return a raw distance as a double" behaviour on those exits.
+
+Inputs: ``a`` and ``b`` are Arrow arrays — ``string``, ``large_string``,
+``binary`` or ``large_binary``, sliced or not, with NULLs, or of the
+``pa.null()`` type an untyped SQL ``NULL`` arrives as. The kernel reads their
+buffers directly: lengths come from the offsets, NULLs from the validity
+bitmap, identity from ``pc.equal``; the prefix/suffix trim and the histogram
+screen index into the value buffer, and only the pairs that reach the DP are
+gathered into padded matrices. A Python sequence (list of str/bytes/None, a
+pandas Series) is converted to Arrow once at the entry (``_as_arrow``) and
+then takes the same path.
 """
 
 from __future__ import annotations
@@ -50,6 +60,11 @@ from __future__ import annotations
 from typing import Optional, Sequence, Union
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+
+Strings = Union[pa.Array, pa.ChunkedArray, Sequence[Union[str, bytes, None]]]
+Caps = Union[None, int, Sequence[Optional[int]], np.ndarray, pa.Array]
 
 # Large-but-safe sentinels: arithmetic adds at most +1 per DP row and string
 # lengths are clamped well below these, so INF never overflows its dtype.
@@ -64,10 +79,12 @@ _CHUNK_CELL_BUDGET = 1 << 22
 _DOUBLING_START = 16
 
 # Pairs per counting-bound histogram chunk: bounds the per-chunk bincount
-# table (2 x rows x 64 int64 = 8 MB at 2^13); the byte buffers themselves
-# are concatenations of the actual strings, so peak temporary memory is
-# input-linear in string length (no padded matrices — ADVICE r01).
+# table (2 x rows x 64 int64 = 8 MB at 2^13). The bytes are gathered from
+# the value buffer by index (no padded matrices), and a chunk past its first
+# pair holds at most _HIST_BYTES_CHUNK bytes, so the int64 index vectors
+# (~8 bytes per input byte) stay bounded for long strings too.
 _HIST_PAIRS_CHUNK = 1 << 13
+_HIST_BYTES_CHUNK = 1 << 20
 
 # ---------------------------------------------------------------------------
 # Optional instrumentation (analogue of the reference's CAPTURE_METRICS
@@ -122,10 +139,89 @@ def _to_bytes(v: Union[str, bytes, None]) -> Optional[bytes]:
     return str(v).encode("utf-8")
 
 
-def _caps(k: Union[int, Sequence[Optional[int]], np.ndarray], n: int) -> np.ndarray:
+# Arrow string/binary types and the binary type each is read as (zero-copy).
+_BINARY_VIEW = {
+    pa.string(): pa.binary(),
+    pa.large_string(): pa.large_binary(),
+    pa.binary(): pa.binary(),
+    pa.large_binary(): pa.large_binary(),
+}
+
+
+def _as_arrow(v: Strings) -> pa.Array:
+    """A kernel input as one binary-typed Arrow array.
+
+    Arrow input is viewed in place (``string`` -> ``binary``, ``large_string``
+    -> ``large_binary``, zero-copy, slices keep their offset); the ``pa.null()``
+    type an untyped SQL ``NULL`` arrives as becomes an all-NULL binary array.
+    Any other sequence (a list of str/bytes/None, a pandas Series) is
+    converted once here: NaN is NULL, and a value that is neither str nor
+    bytes scores its ``str()``."""
+    if isinstance(v, pa.ChunkedArray):
+        v = v.combine_chunks()
+    if not isinstance(v, pa.Array):
+        try:
+            v = pa.array(v, from_pandas=True)
+        except (pa.ArrowInvalid, pa.ArrowTypeError):
+            v = pa.array([_to_bytes(x) for x in v], pa.binary())
+        if v.type not in _BINARY_VIEW and not pa.types.is_null(v.type):
+            v = pa.array([_to_bytes(x) for x in v.to_pylist()], pa.binary())
+    if pa.types.is_null(v.type):
+        return pa.nulls(len(v), pa.binary())
+    if v.type not in _BINARY_VIEW:
+        raise TypeError(f"kernel input must be a string or binary array, not {v.type}")
+    return v.view(_BINARY_VIEW[v.type])
+
+
+def _flat(x: pa.Array) -> tuple:
+    """``(bytes, starts, lengths, nulls)`` of a binary array as NumPy: the
+    value buffer cut to the array's own range, per-value starts into it and
+    lengths from the offsets (0 where NULL), NULLs from the validity."""
+    n = len(x)
+    if n == 0:
+        z = np.empty(0, np.int64)
+        return np.empty(0, np.uint8), z, z, np.empty(0, bool)
+    _, offs_buf, data_buf = x.buffers()
+    odt = np.dtype(np.int64 if pa.types.is_large_binary(x.type) else np.int32)
+    offs = np.frombuffer(offs_buf, odt, n + 1, x.offset * odt.itemsize).astype(np.int64)
+    lo, hi = int(offs[0]), int(offs[-1])
+    data = np.frombuffer(data_buf, np.uint8)[lo:hi] if hi > lo else np.empty(0, np.uint8)
+    nulls = (
+        x.is_null().to_numpy(zero_copy_only=False) if x.null_count else np.zeros(n, bool)
+    )
+    lens = np.diff(offs)
+    lens[nulls] = 0
+    return data, offs[:-1] - lo, lens, nulls
+
+
+class _Pairs:
+    """A batch of ``(a, b)`` pairs as NumPy views over one byte buffer: per
+    pair each side's start and length, the NULL mask (either side) and byte
+    identity (``pc.equal``). Every later phase addresses bytes by index."""
+
+    def __init__(self, a: Strings, b: Strings):
+        a, b = _as_arrow(a), _as_arrow(b)
+        if len(a) != len(b):
+            raise ValueError("a and b must have equal length")
+        self.a, self.b, self.n = a, b, len(a)
+        da, self.sa, self.la, na = _flat(a)
+        db, sb, self.lb, nb = _flat(b)
+        self.data = np.concatenate([da, db])
+        self.sb = sb + da.size
+        self.nulls = na | nb
+
+    def identical(self) -> np.ndarray:
+        return pc.equal(self.a, self.b).fill_null(False).to_numpy(zero_copy_only=False)
+
+
+def _caps(k: Caps, n: int) -> np.ndarray:
     """Per-pair caps as int64; a negative cap means unbounded. An integer
-    array (what every distance UDF sends) is used as is; in any other
-    sequence a None or NaN entry becomes the unbounded sentinel -1."""
+    array is used as is; in an Arrow array a NULL, and in any other sequence
+    a None or NaN entry, becomes the unbounded sentinel -1."""
+    if isinstance(k, (pa.Array, pa.ChunkedArray)):
+        if pa.types.is_null(k.type):
+            return np.full(n, -1, np.int64)
+        return k.fill_null(-1).to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
     karr = np.asarray(k)
     if karr.ndim == 0:
         return np.full(n, int(karr), np.int64)
@@ -137,31 +233,85 @@ def _caps(k: Union[int, Sequence[Optional[int]], np.ndarray], n: int) -> np.ndar
     )
 
 
+def _ranges(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Positions of the byte ranges ``[starts[i], starts[i] + lens[i])``,
+    concatenated in order."""
+    ends = np.cumsum(lens)
+    total = int(ends[-1]) if ends.size else 0
+    return np.repeat(starts - (ends - lens), lens) + np.arange(total)
+
+
+def _common_run(
+    data: np.ndarray, s: np.ndarray, q: np.ndarray, limit: np.ndarray, step: int
+) -> np.ndarray:
+    """Per pair, how many bytes agree walking from ``s`` and ``q`` by ``step``
+    (+1: common prefix, -1 from the last bytes: common suffix), at most
+    ``limit``. Each round compares a window of every open pair, widening 8x
+    per round from 1 byte (to at most ~2^20 cells per round): pairs that
+    differ at once cost one gather, and a long shared run takes a few
+    rounds."""
+    run = np.zeros(limit.size, np.int64)
+    act = np.flatnonzero(limit > 0)
+    w = 1
+    while act.size:
+        left = limit[act] - run[act]
+        width = min(w, int(left.max()), max(256, (1 << 20) // act.size))
+        # a column past a pair's limit re-reads its last byte in range
+        off = (run[act, None] + np.minimum(np.arange(width), left[:, None] - 1)) * step
+        differ = data[s[act, None] + off] != data[q[act, None] + off]
+        stop = differ.any(1)
+        run[act] += np.minimum(np.where(stop, differ.argmax(1), width), left)
+        act = act[~stop & (run[act] < limit[act])]
+        w *= 8
+    return run
+
+
+def _histogram_kills(
+    data: np.ndarray, s: np.ndarray, n: np.ndarray, q: np.ndarray, m: np.ndarray, keff: np.ndarray
+) -> np.ndarray:
+    """Mask of pairs the 64-bin counting bound proves > ``keff``: per chunk,
+    one ``bincount`` of ``pair*64 + (byte & 63)`` over each side's byte
+    ranges, gathered from the value buffer by index. Chunks hold at most
+    ``_HIST_PAIRS_CHUNK`` pairs and, past their first pair, at most
+    ``_HIST_BYTES_CHUNK`` bytes, so temporaries stay bounded for long
+    strings too."""
+    kill = np.zeros(n.size, bool)
+    ends = np.cumsum(n + m)
+    lo = 0
+    while lo < n.size:
+        base = int(ends[lo - 1]) if lo else 0
+        hi = int(np.searchsorted(ends, base + _HIST_BYTES_CHUNK, "right"))
+        hi = min(max(hi, lo + 1), lo + _HIST_PAIRS_CHUNK)
+        rows64 = np.arange(hi - lo, dtype=np.int64) * 64
+        size = rows64.size * 64
+        hs = np.bincount(
+            np.repeat(rows64, n[lo:hi]) + (data[_ranges(s[lo:hi], n[lo:hi])] & 63), minlength=size
+        )
+        hq = np.bincount(
+            np.repeat(rows64, m[lo:hi]) + (data[_ranges(q[lo:hi], m[lo:hi])] & 63), minlength=size
+        )
+        kill[lo:hi] = np.abs(hs - hq).reshape(-1, 64).sum(1) > 2 * keff[lo:hi]
+        lo = hi
+    return kill
+
+
 def batch_edit_distance(
-    a: Sequence[Union[str, bytes, None]],
-    b: Sequence[Union[str, bytes, None]],
-    k: Union[None, int, Sequence[Optional[int]], np.ndarray] = None,
-    transpositions: bool = True,
+    a: Strings, b: Strings, k: Caps = None, transpositions: bool = True
 ) -> np.ndarray:
     """Edit distance for a batch of pairs; returns int64 array.
 
-    ``k=None`` (or a per-pair None / negative sentinel) = unbounded.
+    ``a`` and ``b`` are Arrow arrays or sequences (see ``_as_arrow``).
+    ``k=None`` (or a per-pair None / NULL / negative sentinel) = unbounded.
     ``transpositions=True`` gives OSA (``edit_dist_t`` /
     ``bounded_edit_dist_t``), ``False`` plain Levenshtein (``edit_dist`` /
     ``bounded_edit_dist``).
     """
-    a_b = [_to_bytes(x) for x in a]
-    b_b = [_to_bytes(x) for x in b]
-    n_pairs = len(a_b)
-    if len(b_b) != n_pairs:
-        raise ValueError("a and b must have equal length")
+    return _edit_distance(_Pairs(a, b), k, transpositions)
 
-    la = np.fromiter((0 if x is None else len(x) for x in a_b), np.int64, n_pairs)
-    lb = np.fromiter((0 if x is None else len(x) for x in b_b), np.int64, n_pairs)
-    null_mask = np.fromiter(
-        ((x is None) or (y is None) for x, y in zip(a_b, b_b)), bool, n_pairs
-    )
 
+def _edit_distance(P: _Pairs, k: Caps, transpositions: bool) -> np.ndarray:
+    n_pairs = P.n
+    la, lb, null_mask = P.la, P.lb, P.nulls
     m_len = np.maximum(la, lb)  # longer
     n_len = np.minimum(la, lb)  # shorter
 
@@ -185,7 +335,7 @@ def batch_edit_distance(
     res[ldiff_mask] = keff[ldiff_mask] + 1
     # Identical strings short-circuit (free and exact: distance 0).
     todo = np.flatnonzero(res < 0)
-    same = np.fromiter((a_b[i] == b_b[i] for i in todo), bool, todo.size)
+    same = P.identical()[todo] if todo.size else np.zeros(0, bool)
     res[todo[same]] = 0
     todo = todo[~same]
     if _STATS_ON:
@@ -197,54 +347,38 @@ def batch_edit_distance(
     if todo.size == 0:
         return res
 
-    # Swap so subject = shorter string per pair (prealgorithm.h:60-63).
-    subj = [a_b[i] if la[i] <= lb[i] else b_b[i] for i in todo]
-    quer = [b_b[i] if la[i] <= lb[i] else a_b[i] for i in todo]
+    # Swap so subject = shorter string per pair (prealgorithm.h:60-63): from
+    # here on a pair is (subject start, query start, their lengths) into
+    # P.data.
+    a_subj = la[todo] <= lb[todo]
+    s0 = np.where(a_subj, P.sa[todo], P.sb[todo])
+    q0 = np.where(a_subj, P.sb[todo], P.sa[todo])
+    n0 = n_len[todo]
+    m0 = m_len[todo]
 
     # Strip common prefix/suffix (reference prealgorithm.h:29-57 /
     # simd_trim.cpp:58-118). Edit distance — incl. OSA — is invariant under
     # removing a shared prefix and suffix (pinned by the exhaustive and
     # property differential tests); for near-duplicate corpora this collapses
     # most DPs to a handful of rows. Cap semantics keep using ORIGINAL
-    # lengths (keff was already computed above).
-    t_nlen = np.empty(todo.size, np.int64)
-    t_mlen = np.empty(todo.size, np.int64)
-    for s in range(todo.size):
-        sa, qa = subj[s], quer[s]
-        n = len(sa)
-        p = sfx = 0
-        if sa[0] == qa[0]:  # cheap guard: most non-dup pairs mismatch byte 0
-            x = np.frombuffer(sa, np.uint8)
-            y = np.frombuffer(qa, np.uint8)
-            neq = x != y[:n]
-            p = int(neq.argmax()) if neq.any() else n
-        if p < n and sa[-1] == qa[-1]:
-            n2 = n - p
-            x2 = np.frombuffer(sa, np.uint8)[n - n2:][::-1]
-            y2 = np.frombuffer(qa, np.uint8)[len(qa) - n2:][::-1]
-            neq2 = x2 != y2
-            sfx = int(neq2.argmax()) if neq2.any() else n2
-        if p or sfx:
-            sa = sa[p:len(sa) - sfx] if sfx else sa[p:]
-            qa = qa[p:len(qa) - sfx] if sfx else qa[p:]
-            subj[s], quer[s] = sa, qa
-        t_nlen[s] = len(sa)
-        t_mlen[s] = len(qa)
+    # lengths (keff was already computed above). The suffix never reaches
+    # into the prefix: it is capped at what the prefix left of the subject.
+    pre = _common_run(P.data, s0, q0, n0, 1)
+    suf = _common_run(P.data, s0 + n0 - 1, q0 + m0 - 1, n0 - pre, -1)
+    s0 = s0 + pre
+    q0 = q0 + pre
+    t_nlen = n0 - pre - suf
+    t_mlen = m0 - pre - suf
 
     # Trimmed-empty subject: distance is the remaining query length.
     done = t_nlen == 0
     if _STATS_ON:
         STATS["trim_collapsed"] += int(done.sum())
     if done.any():
-        d_idx = np.flatnonzero(done)
-        gi = todo[d_idx]
-        res[gi] = np.minimum(keff[gi] + 1, t_mlen[d_idx])
-        keep = np.flatnonzero(~done)
-        todo = todo[keep]
-        subj = [subj[s] for s in keep]
-        quer = [quer[s] for s in keep]
-        t_nlen = t_nlen[keep]
-        t_mlen = t_mlen[keep]
+        gi = todo[done]
+        res[gi] = np.minimum(keff[gi] + 1, t_mlen[done])
+        keep = ~done
+        todo, s0, q0, t_nlen, t_mlen = todo[keep], s0[keep], q0[keep], t_nlen[keep], t_mlen[keep]
         if todo.size == 0:
             return res
 
@@ -263,47 +397,21 @@ def batch_edit_distance(
     cand = np.flatnonzero(t_nlen + t_mlen > 2 * keff[todo])
     if _STATS_ON:
         STATS["hist_pairs"] += int(cand.size)
-    # Gather-free histograms: concatenate each chunk's bytes into ONE buffer
-    # and bincount pair_index*64 + (byte & 63) in a single C pass — no
-    # padded (rows x width) matrices and no per-pair Python fill loop, so
-    # temporary memory is input-linear in string length and the pass runs at
-    # memory speed (~2x the padded-matrix formulation on 64-char pairs).
-    # Long-string chunks (mean > 1 KB) drop the int64 index vector (8 bytes
-    # per input byte) and bincount per pair instead — few pairs, big
-    # buffers, so the Python loop is noise and memory traffic falls ~8x.
-    for s0 in range(0, cand.size, _HIST_PAIRS_CHUNK):
-        blk = cand[s0 : s0 + _HIST_PAIRS_CHUNK]
-        bn = blk.size
-        n_bytes = int(t_mlen[blk].sum())
-        if n_bytes > 1024 * bn:
-            hs = np.empty((bn, 64), np.int64)
-            hq = np.empty((bn, 64), np.int64)
-            for r, s in enumerate(blk):
-                hs[r] = np.bincount(np.frombuffer(subj[s], np.uint8) & 63, minlength=64)
-                hq[r] = np.bincount(np.frombuffer(quer[s], np.uint8) & 63, minlength=64)
-        else:
-            sb = np.frombuffer(b"".join([subj[s] for s in blk]), np.uint8)
-            qb = np.frombuffer(b"".join([quer[s] for s in blk]), np.uint8)
-            s_idx = np.repeat(np.arange(bn, dtype=np.int64) * 64, t_nlen[blk])
-            q_idx = np.repeat(np.arange(bn, dtype=np.int64) * 64, t_mlen[blk])
-            hs = np.bincount(s_idx + (sb & 63), minlength=bn * 64).reshape(bn, 64)
-            hq = np.bincount(q_idx + (qb & 63), minlength=bn * 64).reshape(bn, 64)
-        l1 = np.abs(hs - hq).sum(1)
-        kb = blk[l1 > 2 * keff[todo[blk]]]
+    if cand.size:
+        kills = _histogram_kills(
+            P.data, s0[cand], t_nlen[cand], q0[cand], t_mlen[cand], keff[todo[cand]]
+        )
+        kb = cand[kills]
         if kb.size:
             gi = todo[kb]
             res[gi] = keff[gi] + 1
             if _STATS_ON:
                 STATS["hist_kills"] += int(kb.size)
-    alive = np.flatnonzero(res[todo] < 0)
-    if alive.size == 0:
-        return res
-    if alive.size < todo.size:
-        todo = todo[alive]
-        subj = [subj[s] for s in alive]
-        quer = [quer[s] for s in alive]
-        t_nlen = t_nlen[alive]
-        t_mlen = t_mlen[alive]
+        alive = res[todo] < 0
+        if not alive.any():
+            return res
+        todo, s0, q0 = todo[alive], s0[alive], q0[alive]
+        t_nlen, t_mlen = t_nlen[alive], t_mlen[alive]
 
     # Effective band half-width per pair: the cap can't usefully exceed the
     # (trimmed) longer length.
@@ -331,14 +439,13 @@ def batch_edit_distance(
         runnable = (t_mlen - t_nlen)[pending] <= caps
         dist[~runnable] = caps[~runnable] + 1
         if runnable.any():
-            rsel = np.flatnonzero(runnable)
-            dist[rsel] = _run_banded_chunks(
-                subj, quer, t_nlen, t_mlen, pending[rsel], caps[rsel], transpositions
+            sel = pending[runnable]
+            dist[runnable] = _run_banded_chunks(
+                P.data, s0[sel], q0[sel], t_nlen[sel], t_mlen[sel], caps[runnable], transpositions
             )
         final_cap = caps >= eff_k[pending]
         resolved = (dist <= caps) | final_cap
-        done = pending[resolved]
-        gi = todo[done]
+        gi = todo[pending[resolved]]
         res[gi] = np.minimum(keff[gi] + 1, dist[resolved])
         pending = pending[~resolved]
         c *= 4
@@ -347,53 +454,43 @@ def batch_edit_distance(
 
 
 def _run_banded_chunks(
-    subj: list,
-    quer: list,
+    data: np.ndarray,
+    s0: np.ndarray,
+    q0: np.ndarray,
     t_nlen: np.ndarray,
     t_mlen: np.ndarray,
-    sel_idx: np.ndarray,
     caps: np.ndarray,
     transpositions: bool,
 ) -> np.ndarray:
-    """Run the banded DP over ``sel_idx`` positions with per-pair ``caps``,
+    """Run the banded DP over the given pairs with per-pair ``caps``,
     chunked by query length so band width and padding are sized per chunk,
-    not by the global worst case. Returns raw distances aligned to sel_idx
-    (values > cap mean "exceeds this cap")."""
-    out = np.empty(sel_idx.size, np.int64)
-    order = np.argsort(t_mlen[sel_idx], kind="stable")
+    not by the global worst case. Returns raw distances aligned to the
+    inputs (values > cap mean "exceeds this cap")."""
+    out = np.empty(caps.size, np.int64)
+    order = np.argsort(t_mlen, kind="stable")
+    caps_sorted = caps[order]
     pos = 0
     while pos < order.size:
-        # Grow chunk until the (rows x band-width) cell budget is hit.
-        # Memory per chunk is ~3 band matrices of (rows x W) cells; the DP
-        # loop length is the chunk's max subject length, so sorting by query
-        # length keeps chunks length-homogeneous and the lockstep efficient.
-        k0 = int(caps[order[pos]])
-        end = pos
-        while end < order.size:
-            i = order[end]
-            w = 2 * max(k0, int(caps[i])) + 1
-            rows = end - pos + 1
-            if rows > 1 and rows * w > _CHUNK_CELL_BUDGET:
-                break
-            k0 = max(k0, int(caps[i]))
-            end += 1
+        # Grow the chunk while (rows x band-width) stays within the cell
+        # budget (at least one row). Memory per chunk is ~3 band matrices of
+        # (rows x W) cells; the DP loop length is the chunk's max subject
+        # length, so sorting by query length keeps chunks length-homogeneous
+        # and the lockstep efficient.
+        widest = np.maximum.accumulate(caps_sorted[pos:])
+        over = np.arange(1, widest.size + 1) * (2 * widest + 1) > _CHUNK_CELL_BUDGET
+        end = pos + max(1, int(over.argmax()) if over.any() else widest.size)
         part = order[pos:end]
         pos = end
-        sel = sel_idx[part]
         out[part] = _dp_band_chunk(
-            [subj[s] for s in sel],
-            [quer[s] for s in sel],
-            t_nlen[sel],
-            t_mlen[sel],
-            caps[part],
-            transpositions,
+            data, s0[part], q0[part], t_nlen[part], t_mlen[part], caps[part], transpositions
         )
     return out
 
 
 def _dp_band_chunk(
-    subj: list,
-    quer: list,
+    data: np.ndarray,
+    s0: np.ndarray,
+    q0: np.ndarray,
     n_len: np.ndarray,
     m_len: np.ndarray,
     keff: np.ndarray,
@@ -408,7 +505,7 @@ def _dp_band_chunk(
     trailing INF column so the "up" neighbour is a view too, and all row
     arithmetic writes into preallocated scratch (no allocator churn).
     """
-    bsz = len(subj)
+    bsz = n_len.size
     n_max = int(n_len.max())
     m_max = int(m_len.max())
     K = int(keff.max())
@@ -426,11 +523,13 @@ def _dp_band_chunk(
     # per-row windows Qp[:, i:i+W] (char at j-1) and Qp[:, i-1:i-1+W] (char
     # at j-2) are plain slices; margin bytes never matter because the valid
     # mask overwrites those cells with INF.
+    # Both are filled by one gather each from the value buffer.
     S = np.zeros((bsz, max(n_max, 1)), np.uint8)
     Qp = np.zeros((bsz, m_max + W + 2), np.uint8)
-    for r, (s, q) in enumerate(zip(subj, quer)):
-        S[r, : len(s)] = np.frombuffer(s, np.uint8)
-        Qp[r, K + 1 : K + 1 + len(q)] = np.frombuffer(q, np.uint8)
+    rows = np.arange(bsz)
+    for mat, starts, lens, col0 in ((S, s0, n_len, 0), (Qp, q0, m_len, K + 1)):
+        pos = _ranges(starts, lens)
+        mat[np.repeat(rows, lens), pos - np.repeat(starts - col0, lens)] = data[pos]
 
     # Validity as a sliding window: cell (r, o) of row i has column
     # j = i + o - K, valid iff 1 <= j <= m_r, i.e. K+1 <= i+o <= K+m_r.
@@ -515,72 +614,34 @@ def _dp_band_chunk(
     return result
 
 
+def _probabilities(p: Union[float, Sequence[float], np.ndarray, pa.Array], n: int) -> np.ndarray:
+    """Per-pair similarity thresholds as float64 (an Arrow NULL is NaN),
+    validated to lie in [0, 1]."""
+    if isinstance(p, (pa.Array, pa.ChunkedArray)):
+        p = p.cast(pa.float64()).to_numpy(zero_copy_only=False)
+    parr = np.asarray(p, np.float64)
+    if parr.ndim == 0:
+        parr = np.full(n, float(parr), np.float64)
+    if ((parr < 0.0) | (parr > 1.0)).any():
+        raise ValueError("similarity must be in the interval [0.0, 1.0]")
+    return parr
+
+
 _ADAPTIVE_CHUNK = 1 << 12
 
 
-def batch_closest_distance(
-    a: Sequence[Union[str, bytes, None]],
-    b: Sequence[Union[str, bytes, None]],
-    k: Union[None, int, Sequence[Optional[int]], np.ndarray] = None,
-    transpositions: bool = True,
-    chunk: int = _ADAPTIVE_CHUNK,
-) -> np.ndarray:
-    """Within-batch adaptive-cap edit distance for closest-match scans.
-
-    Vectorized re-expression of the reference's cross-row mutable cap
-    (``src/min_edit_dist_t.cpp:76-83,141-144,310``: each row's distance
-    tightens the cap for every later row — ≈2/3 runtime saved,
-    doc/Benchmarks.md:25). A sequential per-row running min would defeat
-    the lockstep DP, so the batch is processed in sub-chunks: chunk ``i``
-    runs fully vectorized with per-pair cap ``min(k, best_so_far[probe])``,
-    then the per-probe running minima are folded in before chunk ``i+1``.
-
-    CONTRACT (same as the reference's own, doc/Usage.md:173-176): only the
-    rows achieving each probe's minimum are guaranteed exact. A tightened
-    cap ``c`` makes provably-worse rows return ``c + 1`` (> the probe's
-    true minimum, so the arg-min and its dist/tie-break are unchanged —
-    every row whose true distance equals the probe minimum is within every
-    cap ever applied to that probe and therefore exact). Consume ONLY
-    through an arg-min/top-1 aggregation; use ``batch_edit_distance`` when
-    each row's distance matters individually.
-    """
-    a_l = list(a)
-    b_l = list(b)
-    n = len(a_l)
-    kv = np.full(n, -1, np.int64) if k is None else _caps(k, n)
-    big = np.int64(1) << 40  # "unbounded" stand-in; keff clamps to max(len)
-    kv_eff = np.where(kv < 0, big, kv)
-    out = np.empty(n, np.int64)
-    best: dict = {}
-    for lo in range(0, n, chunk):
-        hi = min(n, lo + chunk)
-        pa = a_l[lo:hi]
-        caps = np.minimum(
-            kv_eff[lo:hi],
-            np.fromiter((best.get(p, big) for p in pa), np.int64, hi - lo),
-        )
-        d = batch_edit_distance(pa, b_l[lo:hi], k=caps, transpositions=transpositions)
-        out[lo:hi] = d
-        for p, dv in zip(pa, d.tolist()):
-            cur = best.get(p)
-            if cur is None or dv < cur:
-                best[p] = dv
-    return out
-
-
 def batch_closest_similarity(
-    a: Sequence[Union[str, bytes, None]],
-    b: Sequence[Union[str, bytes, None]],
-    p: Union[float, Sequence[float], np.ndarray],
+    a: Strings,
+    b: Strings,
+    p: Union[float, Sequence[float], np.ndarray, pa.Array],
     chunk: int = _ADAPTIVE_CHUNK,
 ) -> np.ndarray:
-    """Within-batch adaptive-floor similarity for most-similar scans — the
-    similarity twin of :func:`batch_closest_distance` (reference
-    ``min_similarity_t``'s mutable ``max_result``,
-    ``src/min_similarity_t.cpp`` / ``similarity_t.cpp:284-290``): each
-    chunk's per-probe best TRUE similarity raises the effective threshold
-    ``p' = max(p, best[probe])`` for later chunks, which shrinks the
-    derived cap ``k' = int((1-p')*m)``.
+    """Within-batch adaptive-floor similarity for most-similar scans
+    (reference ``min_similarity_t``'s mutable ``max_result``,
+    ``src/min_similarity_t.cpp`` / ``similarity_t.cpp:284-290``): the batch
+    runs in sub-chunks, and each chunk's per-probe (``a`` value) best TRUE
+    similarity raises the effective threshold ``p' = max(p, best[probe])``
+    for later chunks, which shrinks the derived cap ``k' = int((1-p')*m)``.
 
     Soundness: every reported value is either the pair's PLAIN
     ``batch_similarity`` value (rows within the tightened cap — this
@@ -593,36 +654,27 @@ def batch_closest_similarity(
     truncation in ``int((1-best)·m)`` can land that value exactly ON the
     running best, manufacturing a spurious arg-max tie (caught by
     tests/test_closest.py). Consume ONLY through an arg-max/top-1
-    aggregation (same contract as the distance twin).
+    aggregation (the reference's own contract, doc/Usage.md:173-176).
     """
-    a_l = list(a)
-    b_l = list(b)
-    n = len(a_l)
-    parr = np.asarray(p, np.float64)
-    if parr.ndim == 0:
-        parr = np.full(n, float(parr), np.float64)
-    if ((parr < 0.0) | (parr > 1.0)).any():
-        raise ValueError("similarity must be in the interval [0.0, 1.0]")
-    la = np.fromiter(
-        (0 if x is None else len(x) for x in (_to_bytes(v) for v in a_l)), np.int64, n
-    )
-    lb = np.fromiter(
-        (0 if x is None else len(x) for x in (_to_bytes(v) for v in b_l)), np.int64, n
-    )
-    m = np.maximum(la, lb).astype(np.float64)
+    A, B = _as_arrow(a), _as_arrow(b)
+    P = _Pairs(A, B)
+    n = P.n
+    parr = _probabilities(p, n)
+    m = np.maximum(P.la, P.lb).astype(np.float64)
     k_p = ((1.0 - parr) * m).astype(np.int64)  # reference cap formula
     with np.errstate(divide="ignore", invalid="ignore"):
         floor_p = np.maximum(0.0, 1.0 - (k_p + 1.0) / m)
+    # probe ids: NULL is one probe of its own, as in a GROUP BY
+    probe = pc.dictionary_encode(A, null_encoding="encode").indices.to_numpy(zero_copy_only=False)
+    best = np.zeros(int(probe.max()) + 1 if n else 0, np.float64)
     out = np.empty(n, np.float64)
-    best: dict = {}
     for lo in range(0, n, chunk):
         hi = min(n, lo + chunk)
-        pa = a_l[lo:hi]
-        bestv = np.fromiter((best.get(x, 0.0) for x in pa), np.float64, hi - lo)
+        ids = probe[lo:hi]
         # +1 margin: a winner's d = (1-sim)*m with sim >= best always fits
-        k_best = np.floor((1.0 - bestv) * m[lo:hi]).astype(np.int64) + 1
+        k_best = np.floor((1.0 - best[ids]) * m[lo:hi]).astype(np.int64) + 1
         k_eff = np.minimum(k_p[lo:hi], k_best)
-        d = batch_edit_distance(pa, b_l[lo:hi], k=k_eff, transpositions=True)
+        d = _edit_distance(_Pairs(A.slice(lo, hi - lo), B.slice(lo, hi - lo)), k_eff, True)
         with np.errstate(divide="ignore", invalid="ignore"):
             result = np.maximum(0.0, 1.0 - np.minimum(d, k_p[lo:hi] + 1) / m[lo:hi])
         rep = np.where(
@@ -632,16 +684,14 @@ def batch_closest_similarity(
         )
         rep[m[lo:hi] == 0] = 1.0
         out[lo:hi] = rep
-        for x, sv in zip(pa, rep.tolist()):
-            if sv > best.get(x, -1.0):
-                best[x] = sv
+        np.maximum.at(best, ids, rep)
     return out
 
 
 def batch_similarity(
-    a: Sequence[Union[str, bytes, None]],
-    b: Sequence[Union[str, bytes, None]],
-    p: Union[float, Sequence[float], np.ndarray],
+    a: Strings,
+    b: Strings,
+    p: Union[float, Sequence[float], np.ndarray, pa.Array],
 ) -> np.ndarray:
     """Normalized OSA similarity per reference ``similarity_t``.
 
@@ -652,21 +702,12 @@ def batch_similarity(
     NULL is treated as empty; two empty strings score 1.0 (documented
     deviation from the C quirk of returning raw distances on those exits).
     """
-    a_b = [_to_bytes(x) for x in a]
-    b_b = [_to_bytes(x) for x in b]
-    n_pairs = len(a_b)
-    parr = np.asarray(p, np.float64)
-    if parr.ndim == 0:
-        parr = np.full(n_pairs, float(parr), np.float64)
-    if ((parr < 0.0) | (parr > 1.0)).any():
-        raise ValueError("similarity must be in the interval [0.0, 1.0]")
-
-    la = np.fromiter((0 if x is None else len(x) for x in a_b), np.int64, n_pairs)
-    lb = np.fromiter((0 if x is None else len(x) for x in b_b), np.int64, n_pairs)
-    m = np.maximum(la, lb).astype(np.float64)
+    P = _Pairs(a, b)
+    parr = _probabilities(p, P.n)
+    m = np.maximum(P.la, P.lb).astype(np.float64)
 
     kmax = ((1.0 - parr) * m).astype(np.int64)  # similarity_to_max_edits
-    d = batch_edit_distance(a_b, b_b, k=kmax, transpositions=True).astype(np.float64)
+    d = _edit_distance(P, kmax, True).astype(np.float64)
     d = np.minimum(d, kmax + 1)
 
     with np.errstate(divide="ignore", invalid="ignore"):

@@ -38,6 +38,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from levenshtein_spark.session import local_frame
+
 QUANT = 1_000_000
 
 
@@ -119,7 +121,8 @@ def train_subspace_centroids(
         for i in range(subdim)
     ]
     for _ in range(iters):
-        cb = spark.createDataFrame(
+        cb = local_frame(
+            spark,
             [(m, cid, cv) for m, rows in cents.items() for cid, cv in rows],
             "m int, cid long, cvec array<double>",
         )
@@ -186,7 +189,7 @@ def train_centroids(
         for i in range(dim)
     ]
     for _ in range(iters):
-        cent_df = spark.createDataFrame(cents, f"cid long, cvec array<double>")
+        cent_df = local_frame(spark, cents, "cid long, cvec array<double>")
         assign = assign_cells(vectors, cent_df, id_col, vec_col)
         stats = (
             assign.join(vectors.select(id_col, vec_col), id_col)

@@ -29,7 +29,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
-from levenshtein_spark.session import scoped_persist
+from levenshtein_spark.session import local_frame, scoped_persist
 
 
 def global_prefix_sum(
@@ -92,9 +92,7 @@ def global_prefix_sum(
         f", _og_{i} {dtypes[c]}" for i, c in enumerate(group_cols)
     )
     schema_offsets = "".join(f", _offset_{i} long" for i in range(len(value_cols)))
-    off = df.sparkSession.createDataFrame(
-        offsets, f"_opid int{schema_groups}{schema_offsets}"
-    )
+    off = local_frame(df.sparkSession, offsets, f"_opid int{schema_groups}{schema_offsets}")
     # null-safe join on the group columns: a NULL group value is a real
     # group (an equi-join would silently drop every such row)
     cond = F.col("_pid") == F.col("_opid")

@@ -31,7 +31,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
-from levenshtein_spark.session import scoped_persist
+from levenshtein_spark.session import local_frame, scoped_persist
 
 
 def global_rank(
@@ -60,8 +60,7 @@ def global_rank(
     for pid, n in counts:
         offsets.append((pid, acc))
         acc += n
-    spark = df.sparkSession
-    off = spark.createDataFrame(offsets, "_pid int, _offset long")
+    off = local_frame(df.sparkSession, offsets, "_pid int, _offset long")
     w = Window.partitionBy("_pid").orderBy(*cols)
     return (
         part.join(F.broadcast(off), "_pid")

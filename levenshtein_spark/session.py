@@ -14,7 +14,10 @@ import gc
 import os
 
 import pandas as pd
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import _parse_datatype_string
 
 
 def get_spark(
@@ -70,6 +73,19 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows: list, ddl: str) -> DataFrame:
+    """A small driver-side frame of ``rows`` (tuples) with the DDL schema
+    ``ddl``, built from an Arrow table so that Spark plans it as a
+    ``LocalRelation``. From a Python list it would be a Python RDD over
+    ``defaultParallelism`` slices, which every query that joins the frame
+    schedules and runs again."""
+    schema = _parse_datatype_string(ddl)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow)
+    table = pa.table([pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow)
+    return spark.createDataFrame(table, schema)
 
 
 _SCOPED_CACHES: list = []

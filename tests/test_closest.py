@@ -6,6 +6,7 @@ import random
 
 import pytest
 
+from levenshtein_spark.oracle import ref_edit_distance
 from levenshtein_spark.operators.closest import (
     _spread_cross,
     min_edit_dist_t,
@@ -95,52 +96,123 @@ def test_cross_join_spread_over_cores(spark):
         assert got[q] == (min(c for c in names if sims[c] == top), pytest.approx(top)), q
 
 
-def test_adaptive_kernel_argmin_exact():
-    """batch_closest_distance's contract: per-probe arg-min (value AND every
-    row achieving it) identical to the plain bounded kernel; losing rows
-    never report a value at or below the probe's true minimum. Random
-    corpus, tiny sub-chunks so the cap actually tightens mid-batch."""
-    import random
-
-    import numpy as np
-
-    from levenshtein_spark.kernel import batch_closest_distance, batch_edit_distance
-
-    rng = random.Random(7)
-    alpha = "abcdef"
-    probes = ["".join(rng.choice(alpha) for _ in range(rng.randint(3, 10))) for _ in range(5)]
-    cands = ["".join(rng.choice(alpha) for _ in range(rng.randint(1, 12))) for _ in range(400)]
-    for k in (2, 6, None):
-        a = [p for p in probes for _ in cands]
-        b = [c for _ in probes for c in cands]
-        exact = batch_edit_distance(a, b, k=k, transpositions=True)
-        adapt = batch_closest_distance(a, b, k=k, transpositions=True, chunk=37)
-        ex = np.asarray(exact).reshape(len(probes), len(cands))
-        ad = np.asarray(adapt).reshape(len(probes), len(cands))
-        for pi in range(len(probes)):
-            m = ex[pi].min()
-            assert ad[pi].min() == m
-            # every true-min row is exact; every other row stays above min
-            assert (ad[pi][ex[pi] == m] == m).all()
-            assert (ad[pi][ex[pi] != m] > m).all()
+def _spark_key(c):
+    """Spark's order of a string column: NULL first, then UTF-8 bytes."""
+    return (c is not None, (c or "").encode())
 
 
-def test_adaptive_matches_plain_in_operator(spark):
-    """min_edit_dist_t (adaptive scoring path) returns the identical result
-    to a verbatim-scoring run via a custom dist_fn."""
-    from levenshtein_spark.functions.distance import bounded_edit_dist_t
+def _oracle(probes, cands, k, transpositions=True):
+    """Brute force: per distinct probe, min (distance, candidate in Spark
+    order) over every candidate."""
+    out = set()
+    for q in set(probes):
+        d, _, c = min(
+            (ref_edit_distance(q, c, k, transpositions=transpositions), _spark_key(c), c)
+            for c in cands
+        )
+        out.add((q, c, d))
+    return out
+
+
+@pytest.mark.parametrize("transpositions", [True, False])
+@pytest.mark.parametrize("k", [0, 2, 6])
+def test_best_per_probe_chunks_match_bruteforce(monkeypatch, k, transpositions):
+    """The per-task scan with tiny chunks, so each probe's cap tightens many
+    times and a chunk splits both the probes and the candidates: winners,
+    distances and tie-breaks equal the brute force."""
+    import pyarrow as pa
+
+    from levenshtein_spark.operators import closest
+
+    rng = random.Random(7 + k)
+    alpha = "abcdé"
+    probes = sorted(
+        {"".join(rng.choice(alpha) for _ in range(rng.randint(0, 8))) for _ in range(40)}
+    ) + [None]
+    cands = [None, ""] + [
+        "".join(rng.choice(alpha) for _ in range(rng.randint(1, 10))) for _ in range(150)
+    ]
+    cands.sort(key=_spark_key)
+    for chunk in (7, 37, 1000):
+        monkeypatch.setattr(closest, "_CHUNK_PAIRS", chunk)
+        dist, win = closest._best_per_probe(pa.array(probes), pa.array(cands), k, transpositions)
+        got = {(q, cands[w], int(d)) for q, w, d in zip(probes, win, dist)}
+        assert got == _oracle(probes, cands, k, transpositions), chunk
+
+
+@pytest.mark.parametrize("transpositions", [True, False])
+@pytest.mark.parametrize("k", [0, 3])
+def test_operator_edge_cases_match_bruteforce(spark, k, transpositions):
+    """NULL and empty probes and candidates, duplicate probes and
+    candidates, ties that break on non-ASCII bytes (Spark's order is byte
+    order), candidates arriving in one partition: the operator and the
+    deepening equal the brute force."""
+    cands = [
+        None, "", "é", "e", "f", "ée", "ab", "ba", "abc", "abd", "abc", "zzzz", "Ā", "ÿ",
+        "ab\u00e9",
+    ]
+    probes = [None, "", "", "e", "é", "ab", "ab", "ac", "abcd", "qqqqqqq", "ĀĀ"]
+    cdf = spark.createDataFrame([(c,) for c in cands], "name string").coalesce(1)
+    pdf = spark.createDataFrame([(q,) for q in probes], "q string")
+    want = _oracle(probes, cands, k, transpositions)
+    got = min_edit_dist_t(pdf, cdf, "q", "name", k, transpositions=transpositions).collect()
+    assert len(got) == len(set(probes))
+    assert {tuple(r) for r in got} == want
+    deep = min_edit_dist_t_deepening(pdf, cdf, "q", "name", k, k0=1, transpositions=transpositions)
+    assert {tuple(r) for r in deep.collect()} == want
+
+
+def test_deepening_scores_pass_one_once(spark):
+    """Both branches of the deepening come from one collected pass 1: the
+    returned plan holds pass 2's scoring task only, so evaluating it never
+    scores pass 1 again (a lazy pass 1 would be scored by the probe collect
+    of pass 2 and again by the union)."""
+    import re
 
     probes, cands = _fixtures(spark)
+    deep = min_edit_dist_t_deepening(probes, cands, "q", "name", 6, k0=1)
+    names = ["apple", "apples", "orange", "grape", "grapefruit"]
+    assert {tuple(r) for r in deep.collect()} == _oracle(["appl", "grap", "zzzzzzzz"], names, 6)
+    plan = deep._jdf.queryExecution().executedPlan().toString()
+    assert len(set(re.findall(r"MapInArrow (\S+)", plan))) == 1, plan
 
-    def verbatim(a, b, k):  # not in _ADAPTIVE_TWIN -> scores every row fully
-        return bounded_edit_dist_t(a, b, k)
 
-    fast = {tuple(r) for r in min_edit_dist_t(probes, cands, "q", "name", 6).collect()}
-    slow = {
-        tuple(r)
-        for r in min_edit_dist_t(probes, cands, "q", "name", 6, dist_fn=verbatim).collect()
-    }
-    assert fast == slow
+def test_operator_empty_sides(spark):
+    """Zero probes or zero candidates: no rows, and the result keeps the
+    (probe, candidate, dist) schema."""
+    cdf = spark.createDataFrame([("apple",), ("grape",)], "name string")
+    pdf = spark.createDataFrame([("appl",)], "q string")
+    none_c = cdf.where("false")
+    none_p = pdf.where("false")
+    for df in (
+        min_edit_dist_t(none_p, cdf, "q", "name", 3),
+        min_edit_dist_t(pdf, none_c, "q", "name", 3),
+        min_edit_dist_t_deepening(none_p, cdf, "q", "name", 3, k0=1),
+    ):
+        assert df.collect() == []
+        assert df.columns == ["q", "name", "dist"]
+
+
+def test_operator_probes_across_chunks_few_candidates(spark):
+    """More than one chunk of probes (50,001 probes x 1 candidate per task)
+    and fewer candidates than cores, so most tasks are empty."""
+    rng = random.Random(5)
+    probes = ["".join(rng.choice("abc") for _ in range(rng.randint(0, 6))) for _ in range(50_001)]
+    probes = list(dict.fromkeys(probes))
+    while len(probes) <= 50_000:
+        probes.append(f"p{len(probes)}")
+    cands = ["abcab", "cab"]
+    assert spark.sparkContext.defaultParallelism > len(cands)
+    cdf = spark.createDataFrame([(c,) for c in cands], "name string")
+    pdf = spark.createDataFrame([(q,) for q in probes], "q string")
+    got = {tuple(r) for r in min_edit_dist_t(pdf, cdf, "q", "name", 2).collect()}
+    assert got == _oracle(probes, cands, 2)
+
+
+def test_negative_k_raises(spark):
+    probes, cands = _fixtures(spark)
+    with pytest.raises(ValueError):
+        min_edit_dist_t(probes, cands, "q", "name", -1)
 
 
 def test_adaptive_similarity_argmax_exact():

@@ -5,6 +5,7 @@ the scalar reference-semantics oracle, with shrinking on failure."""
 
 from __future__ import annotations
 
+import pyarrow as pa
 from hypothesis import given, settings, strategies as st
 
 from levenshtein_spark.kernel import batch_edit_distance, batch_similarity
@@ -52,3 +53,31 @@ def test_batch_equals_per_pair(pairs, k):
     whole = batch_edit_distance(a, b, k=k).tolist()
     single = [int(batch_edit_distance([x], [y], k=k)[0]) for x, y in pairs]
     assert whole == single
+
+
+_ARROW_TYPES = st.sampled_from([pa.string(), pa.large_string(), pa.binary(), pa.large_binary()])
+
+
+@settings(max_examples=150, deadline=None)
+@given(
+    pairs=st.lists(st.tuples(_TEXT, _TEXT), min_size=1, max_size=20),
+    k=_K,
+    ta=_ARROW_TYPES,
+    tb=_ARROW_TYPES,
+    skip=st.integers(min_value=0, max_value=3),
+)
+def test_arrow_inputs_match_list_and_oracle(pairs, k, ta, tb, skip):
+    """The same pairs as Arrow arrays of any of the four string/binary
+    types, sliced past ``skip`` junk values: equal to the list path and to
+    the oracle, with and without transpositions."""
+    a = [x for x, _ in pairs]
+    b = [y for _, y in pairs]
+
+    def arrow(values, typ):
+        enc = [v.encode() for v in values] if typ in (pa.binary(), pa.large_binary()) else values
+        return pa.array([None] * skip + enc, typ).slice(skip)
+
+    for tr in (True, False):
+        got = batch_edit_distance(arrow(a, ta), arrow(b, tb), k=k, transpositions=tr).tolist()
+        assert got == batch_edit_distance(a, b, k=k, transpositions=tr).tolist()
+        assert got == [ref_edit_distance(x, y, k, transpositions=tr) for x, y in pairs]

@@ -6,9 +6,11 @@ src/similarity_t.cpp, ReadMe.md:50-53).
 """
 
 import numpy as np
+import pyarrow as pa
 import pytest
 
-from levenshtein_spark.kernel import batch_closest_distance, batch_edit_distance, batch_similarity
+from levenshtein_spark import kernel as K
+from levenshtein_spark.kernel import batch_edit_distance, batch_similarity
 from levenshtein_spark.oracle import ref_edit_distance, ref_similarity
 
 # (a, b, k, expected, note) — k=None means unbounded; OSA over UTF-8 bytes.
@@ -58,9 +60,9 @@ def test_batch_mixed_vector():
 
 
 def test_caps_unbounded_sentinels():
-    """Per-pair caps: None, NaN and negative entries all mean unbounded, in
-    object sequences and in integer arrays alike (the UDFs' int64 path)."""
-    # distinct probes, so the closest twin never tightens a cap across rows
+    """Per-pair caps: None, NaN, NULL and negative entries all mean
+    unbounded, in object sequences, integer arrays and Arrow arrays (what
+    the Arrow UDFs pass, an SQL ``NULL`` cap included) alike."""
     a = [f"kitten{i}" for i in range(4)]
     b = [f"sitting{i}" for i in range(4)]
     want = [3, 3, 3, 2]
@@ -69,9 +71,90 @@ def test_caps_unbounded_sentinels():
         np.array([None, np.nan, -1, 1], dtype=object),
         np.array([-1, -1, -1, 1], dtype=np.int64),
         np.array([-1, -1, -1, 1], dtype=np.int32),
+        pa.array([None, None, -1, 1], pa.int64()),
+        pa.array([None, None, -1, 1], pa.int32()),
+        pa.chunked_array([[None, None], [-1, 1]], pa.int64()),
     ):
         assert batch_edit_distance(a, b, k=k).tolist() == want, k
-        assert batch_closest_distance(a, b, k=k).tolist() == want, k
+        assert batch_edit_distance(pa.array(a), pa.array(b), k=k).tolist() == want, k
+    assert batch_edit_distance(a, b, k=pa.nulls(4)).tolist() == [3, 3, 3, 3]
+
+
+# The four Arrow string/binary types the kernel reads in place.
+ARROW_TYPES = [pa.string(), pa.large_string(), pa.binary(), pa.large_binary()]
+
+
+def _arrow(values, typ, offset=0):
+    """``values`` as an Arrow array of ``typ``; with ``offset`` a slice of a
+    longer array whose first ``offset`` values are junk, so the kernel must
+    honour the array offset (and a value buffer that starts elsewhere)."""
+    binary = typ in (pa.binary(), pa.large_binary())
+    enc = [v.encode() if (binary and isinstance(v, str)) else v for v in values]
+    junk = [b"junk" if binary else "junk", None, b"" if binary else ""][:offset]
+    return pa.array(junk + enc, typ).slice(offset)
+
+
+@pytest.mark.parametrize("offset", [0, 3], ids=["whole", "sliced"])
+@pytest.mark.parametrize("typ", ARROW_TYPES, ids=str)
+def test_vectors_through_arrow(typ, offset):
+    """Every fixed vector through each Arrow type, whole and sliced, with the
+    two sides of different types: equal to the list path and the oracle."""
+    a = [v[0] for v in VECTORS]
+    b = [v[1] for v in VECTORS]
+    k = [(-1 if v[2] is None else v[2]) for v in VECTORS]
+    want = [v[3] for v in VECTORS]
+    other = ARROW_TYPES[(ARROW_TYPES.index(typ) + 1) % 4]
+    assert batch_edit_distance(a, b, k=k).tolist() == want
+    got = batch_edit_distance(_arrow(a, typ, offset), _arrow(b, other, 3 - offset), k=k)
+    assert got.tolist() == want
+    assert [ref_edit_distance(x, y, v[2]) for x, y, v in zip(a, b, VECTORS)] == want
+    sa, sb = _arrow(a, typ, offset), _arrow(b, typ, offset)
+    for tr in (True, False):
+        assert (
+            batch_edit_distance(sa, sb, k=k, transpositions=tr).tolist()
+            == batch_edit_distance(a, b, k=k, transpositions=tr).tolist()
+        )
+    sims = batch_similarity(sa, sb, pa.array([0.5] * len(a)))
+    assert sims.tolist() == batch_similarity(a, b, 0.5).tolist()
+
+
+def test_null_typed_input():
+    """An untyped SQL NULL arrives as a ``pa.null()`` array: every pair is
+    the NULL exit, max(len) with the cap bypassed."""
+    b = ["abc", "", None, "abcdefg"]
+    assert batch_edit_distance(pa.nulls(4), pa.array(b), k=2).tolist() == [3, 0, 0, 7]
+    assert batch_edit_distance(pa.array(b), pa.nulls(4)).tolist() == [3, 0, 0, 7]
+    assert batch_similarity(pa.nulls(4), pa.array(b), 0.5)[1] == 1.0
+
+
+def test_empty_batch():
+    for typ in ARROW_TYPES:
+        assert batch_edit_distance(pa.array([], typ), pa.array([], typ), k=3).tolist() == []
+    assert batch_edit_distance([], [], k=3).tolist() == []
+
+
+def test_stats_equal_for_list_and_arrow():
+    """The kernel counters mean the same on either input: a fixed sample
+    that reaches every exit, the trim, the histogram screen and the DP."""
+    rng = np.random.default_rng(11)
+    words = ["".join(rng.choice(list("abcde"), rng.integers(0, 12))) for _ in range(300)]
+    a = [None if i % 41 == 0 else w for i, w in enumerate(words)]
+    b = [
+        w if i % 7 == 0 else (w[:3] + "xy" + w[4:] if i % 3 else words[(i * 17) % 300])
+        for i, w in enumerate(words)
+    ]
+    snaps = []
+    for args in ((a, b), (pa.array(a), pa.array(b, pa.large_string()))):
+        K.enable_stats(True)
+        try:
+            got = batch_edit_distance(*args, k=3)
+            snaps.append((got.tolist(), K.stats_snapshot()))
+        finally:
+            K.enable_stats(False)
+    assert snaps[0] == snaps[1]
+    s = snaps[0][1]
+    for c in ("exit_null", "exit_empty", "exit_ldiff", "exit_identical", "hist_kills", "dp_pairs"):
+        assert s[c] > 0, c
 
 
 def test_levenshtein_variant_no_transpositions():

@@ -11,7 +11,7 @@ import pytest
 from pyspark import StorageLevel
 
 from levenshtein_spark.operators.snm import global_rank
-from levenshtein_spark.session import release_caches, scoped_persist
+from levenshtein_spark.session import local_frame, release_caches, scoped_persist
 
 
 def test_one_release_drops_every_registered_frame(spark):
@@ -33,3 +33,25 @@ def test_one_release_drops_every_registered_frame(spark):
 def test_partial_release_is_rejected(spark):
     with pytest.raises(ValueError, match="partial release was removed"):
         release_caches(include_pinned=False)
+
+
+@pytest.mark.parametrize(
+    "rows,ddl",
+    [
+        ([(0, 0), (1, 5), (3, 12)], "_pid int, _offset long"),
+        ([], "_pid int, _offset long"),
+        ([(0, 1, [0.5, -1.0]), (1, 7, [])], "m int, cid long, cvec array<double>"),
+        (
+            [(0, None, "a", 3), (2, "x", None, 0)],
+            "_opid int, _og_0 string, _og_1 string, _offset_0 long",
+        ),
+    ],
+)
+def test_local_frame_is_a_local_relation(spark, rows, ddl):
+    """The driver-side frames of global_rank, global_prefix_sum and k-means
+    keep the DDL schema exactly and plan as a LocalRelation (no Python RDD
+    to schedule), with the rows as given."""
+    df = local_frame(spark, rows, ddl)
+    assert df.schema == spark.createDataFrame([], ddl).schema
+    assert "LocalRelation" in df._jdf.queryExecution().optimizedPlan().toString()
+    assert [tuple(r) for r in df.collect()] == rows

@@ -74,6 +74,24 @@ def test_unbounded_and_osa_pin(sql):
     assert r.a == r.b == 1
 
 
+def test_untyped_null_literals(sql):
+    """An untyped SQL NULL reaches the Arrow UDFs as a ``pa.null()`` array:
+    a NULL string is the NULL exit (max(len), cap bypassed), a NULL cap is
+    unbounded."""
+    r = sql(
+        "SELECT bounded_edit_dist_t(NULL, 'abc', 2) AS a, "
+        "bounded_edit_dist_t('abcdef', 'uvwxyz', NULL) AS b, "
+        "edit_dist('abc', NULL) AS c, similarity_t(NULL, NULL, 0.5) AS d, "
+        "levlim(NULL, 'abcdefg', 3) AS e"
+    ).collect()[0]
+    assert (r.a, r.b, r.c, r.d, r.e) == (3, 6, 3, 1.0, 7)
+    assert (r.a, r.b, r.e) == (
+        ref_edit_distance(None, "abc", 2),
+        ref_edit_distance("abcdef", "uvwxyz"),
+        ref_edit_distance(None, "abcdefg", 3, transpositions=False),
+    )
+
+
 def test_jaro_winkler_sql_name(sql):
     """The extras surface: jaro_winkler_similarity named like DuckDB's
     builtin, backed by the bit-pinned kernel (functions/jaro.py)."""
