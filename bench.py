@@ -154,7 +154,6 @@ def main() -> None:
         slim_pairs = candidate_pairs(
             exploded_blocks(norm, len_band=_LEN_BAND).persist(),
             hot_threshold=50,
-            num_salts=8,
         )
         # MEMORY_AND_DISK_DESER with an explicit count(): the projection is
         # two 64-char columns (~50 MB at sf0.1), so materialization cannot
@@ -266,7 +265,6 @@ def main() -> None:
             slim = candidate_pairs(
                 exploded_blocks(norm, len_band=_LEN_BAND).persist(),
                 hot_threshold=50,
-                num_salts=8,
             )
             state["pairs1"] = attach_pair_payload(slim, norm, ["content_prefix"]).select(
                 "content_prefix_a", "content_prefix_b"

@@ -30,7 +30,6 @@ def main() -> int:
     ap.add_argument("--jaccard", type=float, default=0.8)
     ap.add_argument("--shard-budget", type=int, default=2048)
     ap.add_argument("--hot-threshold", type=int, default=2000)
-    ap.add_argument("--num-salts", type=int, default=16)
     ap.add_argument("--master", default=None)
     ap.add_argument("--force", action="store_true")
     ap.add_argument("--incremental-batch", default=None, metavar="BATCH_ID",
@@ -62,7 +61,6 @@ def main() -> int:
         jaccard=args.jaccard,
         shard_budget=args.shard_budget,
         hot_threshold=args.hot_threshold,
-        num_salts=args.num_salts,
         force=args.force,
     )
     t0 = time.perf_counter()

@@ -38,10 +38,8 @@ def main() -> int:
     ap.add_argument("--k-path", type=int, default=4)
     ap.add_argument("--prefix-len", type=int, default=256)
     ap.add_argument("--len-band", type=int, default=32)
-    ap.add_argument("--hot-threshold", type=int, default=2000)
-    ap.add_argument("--num-salts", type=int, default=16)
-    ap.add_argument("--adaptive-target-rows", type=int, default=None,
-                    help="per-block salt sizing: S_b = ceil(block_size / target)")
+    ap.add_argument("--hot-threshold", type=int, default=2000,
+                    help="a block of n > T rows is salted into ceil(n / T) pieces")
     ap.add_argument("--memoize-scoring", action="store_true",
                     help="score one representative per distinct payload tuple "
                          "(clone-heavy corpora; BENCH/memoize_regimes.json)")
@@ -86,8 +84,6 @@ def main() -> int:
         prefix_len=args.prefix_len,
         len_band=args.len_band,
         hot_threshold=args.hot_threshold,
-        num_salts=args.num_salts,
-        adaptive_target_rows=args.adaptive_target_rows,
         memoize_scoring=args.memoize_scoring,
         cluster_method=args.cluster_method,
         force=args.force,

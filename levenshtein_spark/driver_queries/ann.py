@@ -123,7 +123,7 @@ def q_ann_banded_topk(spark: SparkSession, sf: str) -> DataFrame:
         F.explode(banded_lsh_keys("embedding", _B_TABLES, _B_PLANES, seed=0)).alias("block_key"),
         F.col("vec_id").alias("id"),
     )
-    und = candidate_pairs(blocks, hot_threshold=500, num_salts=8).drop("n_keys")
+    und = candidate_pairs(blocks, hot_threshold=500).drop("n_keys")
     emb = e.select("vec_id", "embedding")
     # score each undirected pair ONCE (cosine is symmetric and the dominant
     # per-candidate cost), then mirror the scored rows for the per-query window
@@ -234,7 +234,7 @@ def q_dedup_embedding(spark: SparkSession, sf: str) -> DataFrame:
         F.explode(banded_lsh_keys("embedding", _B_TABLES, _B_PLANES, seed=0)).alias("block_key"),
         F.col("vec_id").alias("id"),
     )
-    und = candidate_pairs(blocks, hot_threshold=500, num_salts=8).drop("n_keys")
+    und = candidate_pairs(blocks, hot_threshold=500).drop("n_keys")
     emb = e.select(F.col("vec_id").alias("id"), "embedding")
     fat = attach_pair_payload(und, emb, ["embedding"])
     return (
@@ -620,7 +620,7 @@ def q_dedup_semantic(spark: SparkSession, sf: str) -> DataFrame:
     blocks = cells.select(
         F.col("cell").cast("string").alias("block_key"), F.col("vec_id").alias("id")
     )
-    pairs = candidate_pairs(blocks, hot_threshold=500, num_salts=8).drop("n_keys")
+    pairs = candidate_pairs(blocks, hot_threshold=500).drop("n_keys")
     emb = e.select(F.col("vec_id").alias("id"), "embedding")
     fat = attach_pair_payload(pairs, emb, ["embedding"])
     near = (

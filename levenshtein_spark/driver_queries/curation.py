@@ -923,7 +923,7 @@ def q_curation_funnel(spark: SparkSession, sf: str) -> DataFrame:
     bands = minhash_band_table(
         reps, "doc_id", word_bigrams(F.col("text")), 8, 4
     ).select(F.col("band_key").alias("block_key"), "id")
-    pairs = candidate_pairs(bands, hot_threshold=2000, num_salts=16).drop("n_keys")
+    pairs = candidate_pairs(bands, hot_threshold=2000).drop("n_keys")
     grams = reps.select(
         F.col("doc_id").alias("id"), F.array_distinct(word_bigrams(F.col("text"))).alias("g")
     )

@@ -80,7 +80,7 @@ def q_dedup_minhash(spark: SparkSession, sf: str) -> DataFrame:
         .select(F.col("band_key").alias("block_key"), F.col("doc_id").alias("id"))
         .transform(scoped_persist)
     )
-    pairs = candidate_pairs(blocks, hot_threshold=500, num_salts=8).drop("n_keys")
+    pairs = candidate_pairs(blocks, hot_threshold=500).drop("n_keys")
     grams = d.select(
         F.col("doc_id").alias("id"), F.array_distinct(word_bigrams(F.col("text"))).alias("g")
     )
@@ -131,7 +131,7 @@ def q_dedup_simhash_pairs(spark: SparkSession, sf: str) -> DataFrame:
         F.explode(simhash_segment_keys("simhash", 60, _HAM_MAX + 1, 1)).alias("block_key"),
         "id",
     )
-    pairs = candidate_pairs(blocks, hot_threshold=500, num_salts=8).drop("n_keys")
+    pairs = candidate_pairs(blocks, hot_threshold=500).drop("n_keys")
     fat = attach_pair_payload(pairs, sh, ["simhash"])
     return fat.select(
         F.col("id_a").alias("doc_a"),
@@ -167,7 +167,7 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf: str) -> DataFrame:
     blocks = minhash_band_table(
         d, "doc_id", char_shingles(F.col("text"), 3), _NGRAM_HASHES, _NGRAM_BANDS
     ).select(F.col("band_key").alias("block_key"), "id")
-    pairs = candidate_pairs(blocks, hot_threshold=500, num_salts=8).drop("n_keys")
+    pairs = candidate_pairs(blocks, hot_threshold=500).drop("n_keys")
     grams = d.select(F.col("doc_id").alias("id"), char_shingles(F.col("text"), 3).alias("g"))
     fat = attach_pair_payload(pairs, grams, ["g"])
     return (
@@ -230,7 +230,7 @@ def q_dedup_tfidf(spark: SparkSession, sf: str) -> DataFrame:
     blocks = _doc_band_keys(d).select(
         F.col("band_key").alias("block_key"), F.col("doc_id").alias("id")
     )
-    pairs = candidate_pairs(blocks, hot_threshold=500, num_salts=8).drop("n_keys")
+    pairs = candidate_pairs(blocks, hot_threshold=500).drop("n_keys")
     dots = (
         pairs.join(
             w.select(F.col("id").alias("id_a"), "tok", F.col("w").alias("wa")), "id_a"
@@ -336,7 +336,7 @@ def prefix_containment_pairs(d: DataFrame) -> DataFrame:
         F.col("doc_id").alias("id"), "text", F.length("text").cast("long").alias("len")
     )
     a_blocks, b_blocks = prefix_containment_blocks(d)
-    pairs = candidate_pairs_lr(a_blocks, b_blocks, hot_threshold=500, num_salts=8).where(
+    pairs = candidate_pairs_lr(a_blocks, b_blocks, hot_threshold=500).where(
         F.col("id_l") != F.col("id_r")
     )
     fat = (

@@ -166,7 +166,7 @@ def q_fs_match_weights(spark: SparkSession, sf: str) -> DataFrame:
         F.col("c_mktsegment").alias("seg"),
     )
     blocks = _customer_blocks(spark, sf)
-    pairs = candidate_pairs(blocks, hot_threshold=500, num_salts=8).drop("n_keys")
+    pairs = candidate_pairs(blocks, hot_threshold=500).drop("n_keys")
     fat = attach_pair_payload(pairs, records, ["name", "nation", "seg"])
     name_agree = bounded_edit_dist("name_a", "name_b", 1) <= 1
     nation_agree = F.col("nation_a") == F.col("nation_b")
@@ -221,7 +221,7 @@ def q_top_k_neighbors(spark: SparkSession, sf: str) -> DataFrame:
     # + both join sides); scored feeds BOTH branches of the symmetrizing
     # union — without it the salted join and the Arrow scoring run twice
     blocks = _customer_blocks(spark, sf).transform(scoped_persist)
-    pairs = candidate_pairs(blocks, hot_threshold=500, num_salts=8).drop("n_keys")
+    pairs = candidate_pairs(blocks, hot_threshold=500).drop("n_keys")
     fat = attach_pair_payload(pairs, records, ["name"])
     scored = (
         fat.select(
@@ -268,7 +268,7 @@ def _gold_edges(spark: SparkSession, sf: str) -> DataFrame:
     )
     pairs = edit_distance_self_join(
         names.select("id", "name"), "name", k=1, q=3,
-        hot_threshold=500, num_salts=8,
+        hot_threshold=500,
     ).select("id_a", "id_b")
     fat = attach_pair_payload(pairs, names.select("id", "nation"), ["nation"])
     return fat.where(F.col("nation_a") == F.col("nation_b")).select(
@@ -460,7 +460,7 @@ def q_jw_match_scores(spark: SparkSession, sf: str) -> DataFrame:
     from levenshtein_spark.operators.pairs import attach_pair_payload, candidate_pairs
 
     blocks = _customer_blocks(spark, sf)
-    pairs = candidate_pairs(blocks, hot_threshold=500, num_salts=8).drop("n_keys")
+    pairs = candidate_pairs(blocks, hot_threshold=500).drop("n_keys")
     c = tbl(spark, sf, "customer")
     rec = c.select(F.col("c_custkey").alias("id"), F.col("c_name").alias("name"))
     fat = attach_pair_payload(pairs, rec, ["name"])
@@ -507,7 +507,7 @@ def q_fs_em_weights(spark: SparkSession, sf: str) -> DataFrame:
         F.col("c_acctbal").alias("bal"),
     )
     blocks = _customer_blocks(spark, sf)
-    pairs = candidate_pairs(blocks, hot_threshold=500, num_salts=8).drop("n_keys")
+    pairs = candidate_pairs(blocks, hot_threshold=500).drop("n_keys")
     fat = attach_pair_payload(pairs, records, ["name", "seg", "bal"])
     name_agree = bounded_edit_dist_builtin("name_a", "name_b", 1) <= 1
     seg_agree = F.col("seg_a") == F.col("seg_b")
@@ -549,7 +549,7 @@ def _docs_weighted_pairs(spark: SparkSession, sf: str) -> DataFrame:
 
     n = normalize(docs_as_code_files(spark, sf), prefix_len=64)
     blocks = exploded_blocks(n, len_band=32).transform(scoped_persist)
-    return candidate_pairs(blocks, hot_threshold=200, num_salts=4)
+    return candidate_pairs(blocks, hot_threshold=200)
 
 
 def q_metablocking_wnp(spark: SparkSession, sf: str) -> DataFrame:
@@ -766,7 +766,7 @@ def q_pprl_bloom_match(spark: SparkSession, sf: str) -> DataFrame:
     # hot-key tag, both self-join sides, hot left/right) — same reason every
     # sibling call site persists
     blocks = _customer_blocks(spark, sf).transform(scoped_persist)
-    pairs = candidate_pairs(blocks, hot_threshold=500, num_salts=8).drop("n_keys")
+    pairs = candidate_pairs(blocks, hot_threshold=500).drop("n_keys")
     fat = attach_pair_payload(pairs, enc, [f"bloom{j}" for j in range(_PPRL_WORDS)])
     inter = _fold_add(
         [
@@ -896,7 +896,7 @@ def q_progressive_pairs(spark: SparkSession, sf: str) -> DataFrame:
     the recall denominator is a 1-row broadcast aggregate.
     """
     blocks = _customer_blocks(spark, sf).transform(scoped_persist)
-    cand = candidate_pairs(blocks, hot_threshold=500, num_salts=8).select(
+    cand = candidate_pairs(blocks, hot_threshold=500).select(
         "id_a", "id_b", F.col("n_keys").cast("long").alias("w")
     )
     gold = edges_of(_customer_scored(spark, sf)).select(
@@ -1638,7 +1638,7 @@ def q_linkage_rule_cascade(spark: SparkSession, sf: str) -> DataFrame:
     def rule_pairs(block_key, rank: int) -> DataFrame:
         blocks = c.select(block_key.alias("block_key"), F.col("c_custkey").alias("id"))
         return (
-            candidate_pairs(blocks, hot_threshold=500, num_salts=8)
+            candidate_pairs(blocks, hot_threshold=500)
             .select("id_a", "id_b", F.lit(rank).alias("rnk"))
         )
 
@@ -1713,7 +1713,7 @@ def q_fs_tf_weights(spark: SparkSession, sf: str) -> DataFrame:
         F.count(F.lit(1)).alias("freq")
     )
     blocks = _customer_blocks(spark, sf)
-    pairs = candidate_pairs(blocks, hot_threshold=500, num_salts=8).drop("n_keys")
+    pairs = candidate_pairs(blocks, hot_threshold=500).drop("n_keys")
     seg_rec = c.select(F.col("c_custkey").alias("id"), F.col("c_mktsegment").alias("seg"))
     fat = attach_pair_payload(pairs, seg_rec, ["seg"])
     agree = (
@@ -1787,7 +1787,7 @@ def q_er_monge_elkan(spark: SparkSession, sf: str) -> DataFrame:
     from levenshtein_spark.operators.pairs import attach_pair_payload, candidate_pairs
 
     blocks = _customer_blocks(spark, sf)
-    pairs = candidate_pairs(blocks, hot_threshold=500, num_salts=8).drop("n_keys")
+    pairs = candidate_pairs(blocks, hot_threshold=500).drop("n_keys")
     c = tbl(spark, sf, "customer")
     rec = c.select(F.col("c_custkey").alias("id"), F.col("c_name").alias("name"))
     fat = attach_pair_payload(pairs, rec, ["name"])
@@ -1878,7 +1878,7 @@ def q_er_smith_waterman(spark: SparkSession, sf: str) -> DataFrame:
     from levenshtein_spark.functions.hashing import hash64
 
     blocks = _customer_blocks(spark, sf)
-    pairs = candidate_pairs(blocks, hot_threshold=500, num_salts=8).drop("n_keys")
+    pairs = candidate_pairs(blocks, hot_threshold=500).drop("n_keys")
     pairs = pairs.where(
         hash64(
             F.concat(
@@ -2008,7 +2008,7 @@ def q_er_soft_tfidf(spark: SparkSession, sf: str) -> DataFrame:
     )
     norms = w.groupBy("id").agg(F.sum(F.col("w") * F.col("w")).alias("n2"))
     blocks = _customer_blocks(spark, sf)
-    pairs = candidate_pairs(blocks, hot_threshold=500, num_salts=8).drop("n_keys")
+    pairs = candidate_pairs(blocks, hot_threshold=500).drop("n_keys")
     at = pairs.join(
         w.select(F.col("id").alias("id_a"), F.col("tok").alias("ta"), F.col("w").alias("wa")),
         "id_a",
@@ -2126,7 +2126,7 @@ def q_er_feature_vector(spark: SparkSession, sf: str) -> DataFrame:
     from levenshtein_spark.functions.text import word_tokens
 
     blocks = _customer_blocks(spark, sf)
-    pairs = candidate_pairs(blocks, hot_threshold=500, num_salts=8).drop("n_keys")
+    pairs = candidate_pairs(blocks, hot_threshold=500).drop("n_keys")
     pairs = pairs.where(
         hash64(
             F.concat(

@@ -87,7 +87,7 @@ def q_linkage_pairs(spark: SparkSession, sf: str) -> DataFrame:
     """
     n = normalize(docs_as_code_files(spark, sf), prefix_len=_PREFIX)
     blocks = exploded_blocks(n, len_band=_LEN_BAND).transform(scoped_persist)
-    return candidate_pairs(blocks, hot_threshold=200, num_salts=4).select(
+    return candidate_pairs(blocks, hot_threshold=200).select(
         "id_a", "id_b", F.col("n_keys").cast("long").alias("n_keys")
     )
 
@@ -131,7 +131,7 @@ def _customer_scored(spark: SparkSession, sf: str) -> DataFrame:
     blocks = _customer_blocks(spark, sf).transform(scoped_persist)
     # pairs persisted: score_pairs consumes them twice (sha-equal branch ∪
     # fuzzy branch); in the production plan this is the pairs checkpoint.
-    pairs = candidate_pairs(blocks, hot_threshold=500, num_salts=8).transform(scoped_persist)
+    pairs = candidate_pairs(blocks, hot_threshold=500).transform(scoped_persist)
     fat = attach_pair_payload(
         pairs, _customer_records(spark, sf), ["sha", "path_base", "content_prefix"]
     )
@@ -194,11 +194,11 @@ def q_linkage_incremental(spark: SparkSession, sf: str) -> DataFrame:
         )
         return edges_of(score_pairs(fat, k_content=1, k_path=2, transpositions=False))
 
-    base_edges = score_edges(candidate_pairs(b_base, hot_threshold=500, num_salts=8).drop("n_keys"))
-    cross_pairs = candidate_pairs_lr(b_delta, b_base, hot_threshold=500, num_salts=8).select(
+    base_edges = score_edges(candidate_pairs(b_base, hot_threshold=500).drop("n_keys"))
+    cross_pairs = candidate_pairs_lr(b_delta, b_base, hot_threshold=500).select(
         F.least("id_l", "id_r").alias("id_a"), F.greatest("id_l", "id_r").alias("id_b")
     )
-    delta_pairs = candidate_pairs(b_delta, hot_threshold=500, num_salts=8).drop("n_keys")
+    delta_pairs = candidate_pairs(b_delta, hot_threshold=500).drop("n_keys")
     new_edges = score_edges(cross_pairs.unionByName(delta_pairs))
 
     ids = c.select(F.col("c_custkey").alias("id"))

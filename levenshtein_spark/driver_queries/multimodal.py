@@ -192,7 +192,7 @@ def q_dedup_image_ahash(spark: SparkSession, sf: str) -> DataFrame:
         ),
         "id",
     )
-    pairs = candidate_pairs(blocks, hot_threshold=500, num_salts=8).drop("n_keys")
+    pairs = candidate_pairs(blocks, hot_threshold=500).drop("n_keys")
     fat = attach_pair_payload(pairs, ah, ["ahash"])
     return fat.select(
         F.col("id_a").alias("doc_a"),
@@ -287,7 +287,7 @@ def q_dedup_audio_fp(spark: SparkSession, sf: str) -> DataFrame:
         F.explode(simhash_segment_keys("afp", _AF_SEG, _AF_HAM + 1, 1)).alias("block_key"),
         "id",
     )
-    pairs = candidate_pairs(blocks, hot_threshold=500, num_salts=8).drop("n_keys")
+    pairs = candidate_pairs(blocks, hot_threshold=500).drop("n_keys")
     fat = attach_pair_payload(pairs, fp, ["afp"])
     return fat.select(
         F.col("id_a").alias("doc_a"),

@@ -52,7 +52,7 @@ def q_phonetic_pairs(spark: SparkSession, sf: str) -> DataFrame:
     """
     keyed = _keyed_parts(spark, sf).transform(scoped_persist)
     blocks = keyed.select(F.col("code").alias("block_key"), "id")
-    pairs = candidate_pairs(blocks, hot_threshold=200, num_salts=8).drop("n_keys")
+    pairs = candidate_pairs(blocks, hot_threshold=200).drop("n_keys")
     a = keyed.select(F.col("id").alias("id_a"), F.col("tok").alias("tok_a"))
     b = keyed.select(F.col("id").alias("id_b"), F.col("tok").alias("tok_b"))
     return (

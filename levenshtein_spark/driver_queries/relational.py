@@ -40,7 +40,7 @@ def q_similar_names_by_nation(spark: SparkSession, sf: str) -> DataFrame:
 
     c = tbl(spark, sf, "customer")
     n = tbl(spark, sf, "nation")
-    pairs = candidate_pairs(_customer_blocks(spark, sf), hot_threshold=500, num_salts=8)
+    pairs = candidate_pairs(_customer_blocks(spark, sf), hot_threshold=500)
     rec = c.select(
         F.col("c_custkey").alias("id"), F.col("c_name").alias("name"), "c_nationkey"
     )
@@ -210,7 +210,7 @@ def q_similarity_join_docs(spark: SparkSession, sf: str) -> DataFrame:
 
     out = similarity_self_join(
         d, "ptext", _SIM_P, sim_fn=lev_sim, q=2, transpositions=False,
-        hot_threshold=500, num_salts=8,
+        hot_threshold=500,
     )
     return out.select(
         F.col("id_a").alias("doc_a"),
@@ -241,7 +241,7 @@ def q_edjoin_docs(spark: SparkSession, sf: str) -> DataFrame:
         F.col("doc_id").alias("id"), F.substring("text", 1, _EDJ_PLEN).alias("ptext")
     )
     out = edit_distance_self_join(
-        d, "ptext", k=_EDJ_K, q=_EDJ_Q, hot_threshold=500, num_salts=8
+        d, "ptext", k=_EDJ_K, q=_EDJ_Q, hot_threshold=500
     )
     return out.select(
         F.col("id_a").alias("doc_a"),
@@ -270,7 +270,7 @@ def q_edjoin_docs_osa(spark: SparkSession, sf: str) -> DataFrame:
     )
     out = edit_distance_self_join(
         d, "ptext", k=_EDJ_OSA_K, q=_EDJ_Q, transpositions=True,
-        hot_threshold=500, num_salts=8,
+        hot_threshold=500,
     )
     return out.select(
         F.col("id_a").alias("doc_a"),
@@ -306,7 +306,7 @@ def q_fuzzy_join_customers(spark: SparkSession, sf: str) -> DataFrame:
     )
     out = fuzzy_join(
         left, right, key_col="blk", text_col="name", k=2,
-        dist_fn=bounded_edit_dist, hot_threshold=500, num_salts=4,
+        dist_fn=bounded_edit_dist, hot_threshold=500,
     )
     return out.select("id_l", "id_r", F.col("dist").cast("long").alias("dist"))
 
@@ -1040,7 +1040,7 @@ def q_setjoin_jaccard_docs(spark: SparkSession, sf: str) -> DataFrame:
     )
     out = set_similarity_self_join(
         d, word_bigrams(F.col("text")), _SJ_NUM, _SJ_DEN,
-        hot_threshold=500, num_salts=8,
+        hot_threshold=500,
     )
     return out.select(
         F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"),
@@ -1088,7 +1088,7 @@ def q_setjoin_containment_docs(spark: SparkSession, sf: str) -> DataFrame:
     d = tbl(spark, sf, "documents").select(F.col("doc_id").alias("id"), "text")
     out = set_containment_join(
         d, word_bigrams(F.col("text")), _CT_NUM, _CT_DEN,
-        hot_threshold=500, num_salts=8,
+        hot_threshold=500,
     )
     return out.select(
         F.col("id_inner").alias("doc_inner"),

@@ -246,15 +246,3 @@ def simhash_segment_keys(
         vals = [seg_vals[i] for i in combo]
         keys.append(F.concat_ws("|", F.lit(f"shseg{idx}"), *vals))
     return F.array(*keys)
-
-
-def salted_key(key, salt_from, num_salts: int) -> Column:
-    """Explicit skew-breaking: append a deterministic salt bucket to a hot key.
-
-    ``salt_from`` should be a high-cardinality column (e.g. row id) so rows of
-    a hot key spread over ``num_salts`` shuffle partitions (SURVEY.md §2.4).
-    Uses the fast JVM hash — no oracle ever needs to reproduce salting.
-    """
-    return F.concat(
-        _c(key), F.lit("#"), F.pmod(F.xxhash64(_c(salt_from)), F.lit(num_salts)).cast("string")
-    )

@@ -4,25 +4,35 @@ A blocked join is a shuffle on ``block_key``; one hot key (a hot repo, a
 common length band) turns into a straggler task with O(n²) pair fan-out.
 Every candidate-pair operator here is a thin aggregation over one of two
 private cores, which hold the salt rules and nothing else. Both split
-blocks by a size census and broadcast the (tiny) hot-key set back onto
-the rows:
+blocks by a size census and broadcast the (tiny) hot-key set, with its
+salt count, back onto the rows.
 
-* :func:`_self_meetings` — one record set joined with itself. Normal
-  blocks take a plain equi self-join with ``id_a < id_b``. Hot blocks
-  (size > ``hot_threshold``) take a *triangle salted join*: each row gets a
-  deterministic salt ``s = hash(id) % S``, the left side is replicated to
-  salts ``t ∈ [s, S)`` and joined on ``(block_key, t == salt_right)``.
-  Exactly once per (block, unordered pair): for ``s_a < s_b`` only the
-  ``a``-as-left replica meets ``b``; equal salts meet in both directions,
-  so the tie breaks by ``id_l < id_r``. The work of a block spreads over
-  S·(S+1)/2 partitions instead of one.
-* :func:`_lr_meetings` — two record sets (left × right). Keys whose fan-out
-  ``n_l·n_r`` exceeds ``hot_threshold`` salt their left rows with
+**One salting rule** (:func:`_salt_count`). ``hot_threshold`` ``T`` is the
+most work one key may put on one task, measured in the census quantity of
+the core: a key is hot when its quantity exceeds ``T``, and it is split into
+``S = ceil(quantity / T)`` salts so each piece falls back under ``T``
+(capped at ``_MAX_SALTS``). ``T`` therefore sets both hotness and the split:
+there is no separate salt count to tune, and a giant block gets a wide
+split while a merely-warm one gets two or three salts.
+
+* :func:`_self_meetings` — one record set joined with itself; the quantity
+  is the block's row count ``n``. Normal blocks take a plain equi self-join
+  with ``id_a < id_b``. Hot blocks take a *triangle salted join*: each row
+  gets a deterministic salt ``s = hash(id) % S``, the left side is
+  replicated to salts ``t ∈ [s, S)`` and joined on ``(block_key, t ==
+  salt_right)``. Exactly once per (block, unordered pair): for ``s_a < s_b``
+  only the ``a``-as-left replica meets ``b``; equal salts meet in both
+  directions, so the tie breaks by ``id_l < id_r``. The work of a block
+  spreads over S·(S+1)/2 partitions instead of one.
+* :func:`_lr_meetings` — two record sets (left × right); the quantity is
+  the key's fan-out ``n_l·n_r``. Hot keys salt their left rows with
   ``hash(id_l) % S`` and replicate their right rows to all S salts: every
-  cross pair meets exactly once, spread over S partitions.
+  cross pair meets exactly once, spread over S partitions. ``S`` is also
+  capped at ``n_l``, past which extra salts only add right-side replicas.
 
-Both are lossless — unlike sub-block salting there is no recall hit — and
-are the explicit skew handling the north_rule requires on top of AQE's
+Both are lossless — unlike sub-block salting there is no recall hit, and
+the salt count only moves work between tasks, never changes the pair set —
+and are the explicit skew handling the north_rule requires on top of AQE's
 skew-join splitting (which cannot help the pair *fan-out*, only scan skew).
 A core returns one row per key meeting; extra block columns ride along as
 per-(key, id) payload for in-join predicates, suffixed ``_a``/``_b`` (self)
@@ -38,12 +48,12 @@ record table via ``attach_pair_payload``.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 
 from levenshtein_spark.session import scoped_persist
 
 DEFAULT_HOT_THRESHOLD = 2000
-DEFAULT_SALTS = 16
+_MAX_SALTS = 256
 
 
 def _id_cols(df: DataFrame) -> list[str]:
@@ -57,28 +67,28 @@ def _suffix(df: DataFrame, cols: list[str], suf: str) -> DataFrame:
     return df
 
 
-def _self_meetings(
-    blocks: DataFrame,
-    hot_threshold: int,
-    num_salts: int,
-    adaptive_target_rows: int | None = None,
-) -> DataFrame:
+def _salt_count(load: Column, hot_threshold: int, *caps: Column) -> Column:
+    """Salt count of a hot key whose census quantity is ``load``: enough
+    salts that each piece carries at most ``hot_threshold`` of it, capped at
+    ``_MAX_SALTS`` and at every extra ``caps`` column."""
+    if hot_threshold < 1:
+        raise ValueError(f"hot_threshold must be >= 1, got {hot_threshold}")
+    return F.least(F.ceil(load / F.lit(hot_threshold)), F.lit(_MAX_SALTS), *caps).cast("int")
+
+
+def _self_meetings(blocks: DataFrame, hot_threshold: int) -> DataFrame:
     """``(block_key, id, extra...)`` → one row per (block key, unordered
-    pair) meeting: ``(id_a < id_b, extra_a..., extra_b...)``. Salt counts
-    per hot block as in :func:`candidate_pairs`."""
+    pair) meeting: ``(id_a < id_b, extra_a..., extra_b...)``. A block of
+    ``n > hot_threshold`` rows takes ``S = min(ceil(n / T), _MAX_SALTS)``
+    triangle salts."""
     ids_x = _id_cols(blocks)
     extras = ids_x[1:]
     slim = blocks.select("block_key", *ids_x)
-    sizes = slim.groupBy("block_key").count()
-    if adaptive_target_rows is not None:
-        n_salts_col = F.least(
-            F.ceil(F.col("count") / F.lit(adaptive_target_rows)), F.lit(256)
-        ).cast("int")
-    else:
-        n_salts_col = F.lit(num_salts)
+    n = F.col("count")
     hot_keys = (
-        sizes.where(F.col("count") > hot_threshold)
-        .select("block_key", n_salts_col.alias("n_salts"))
+        slim.groupBy("block_key").count()
+        .where(n > hot_threshold)
+        .select("block_key", _salt_count(n, hot_threshold).alias("n_salts"))
     )
     # The tagged stream feeds BOTH branch joins (normal self-join + the
     # salted triangle, each of which reads it twice as its own two sides);
@@ -125,14 +135,11 @@ def _self_meetings(
     return pn.select(*cols).unionByName(met.select(*canon))
 
 
-def _lr_meetings(
-    blocks_l: DataFrame,
-    blocks_r: DataFrame,
-    hot_threshold: int,
-    num_salts: int,
-) -> DataFrame:
+def _lr_meetings(blocks_l: DataFrame, blocks_r: DataFrame, hot_threshold: int) -> DataFrame:
     """Two ``(block_key, id, extra...)`` tables → one row per (block key,
-    cross pair) meeting: ``(id_l, id_r, extra_l..., extra_r...)``."""
+    cross pair) meeting: ``(id_l, id_r, extra_l..., extra_r...)``. A key of
+    fan-out ``n_l·n_r > hot_threshold`` takes
+    ``S = min(ceil(n_l·n_r / T), n_l, _MAX_SALTS)`` salts."""
     ex_l, ex_r = _id_cols(blocks_l), _id_cols(blocks_r)
     sl = _suffix(blocks_l.select("block_key", *ex_l), ex_l, "_l")
     sr = _suffix(blocks_r.select("block_key", *ex_r), ex_r, "_r")
@@ -140,23 +147,25 @@ def _lr_meetings(
         sl.groupBy("block_key").count().withColumnRenamed("count", "n_l")
         .join(sr.groupBy("block_key").count().withColumnRenamed("count", "n_r"), "block_key")
     )
-    hot_keys = sizes.where(F.col("n_l") * F.col("n_r") > hot_threshold).select(
-        "block_key", F.lit(True).alias("__hot")
+    fan_out = F.col("n_l") * F.col("n_r")
+    hot_keys = sizes.where(fan_out > hot_threshold).select(
+        "block_key", _salt_count(fan_out, hot_threshold, F.col("n_l")).alias("n_salts")
     )
     # each side feeds its normal and its hot branch
     tl = sl.join(F.broadcast(hot_keys), "block_key", "left").transform(scoped_persist)
     tr = sr.join(F.broadcast(hot_keys), "block_key", "left").transform(scoped_persist)
 
     pn = (
-        tl.where(F.col("__hot").isNull()).drop("__hot")
-        .join(tr.where(F.col("__hot").isNull()).drop("__hot"), "block_key")
+        tl.where(F.col("n_salts").isNull()).drop("n_salts")
+        .join(tr.where(F.col("n_salts").isNull()).drop("n_salts"), "block_key")
     )
-    hl = tl.where(F.col("__hot")).drop("__hot").withColumn(
-        "salt", F.pmod(F.xxhash64("id_l"), F.lit(num_salts)).cast("int")
-    )
+    hl = tl.where(F.col("n_salts").isNotNull()).withColumn(
+        "salt", F.pmod(F.xxhash64("id_l"), F.col("n_salts")).cast("int")
+    ).drop("n_salts")
     hr = (
-        tr.where(F.col("__hot")).drop("__hot")
-        .withColumn("salt", F.explode(F.sequence(F.lit(0), F.lit(num_salts - 1))))
+        tr.where(F.col("n_salts").isNotNull())
+        .withColumn("salt", F.explode(F.sequence(F.lit(0), F.col("n_salts") - 1)))
+        .drop("n_salts")
     )
     ph = hl.join(hr, ["block_key", "salt"])
 
@@ -167,26 +176,21 @@ def _lr_meetings(
 def candidate_pairs(
     blocks: DataFrame,
     hot_threshold: int = DEFAULT_HOT_THRESHOLD,
-    num_salts: int = DEFAULT_SALTS,
-    adaptive_target_rows: int | None = None,
 ) -> DataFrame:
     """exploded blocks (block_key, id, …) → distinct slim candidate pairs.
 
     Output: ``id_a < id_b``, plus ``n_keys`` = number of block keys that
     generated the pair (a useful blocking-quality signal).
 
-    ``adaptive_target_rows`` switches the hot path from the fixed
-    ``num_salts`` to **per-block** salt counts sized from the census:
-    ``S_b = ceil(size_b / target)`` (capped at 256), so every salted task
-    sees ~``target`` left rows regardless of the block-size distribution —
-    the knob that keeps working when one block is 100× the next, where any
-    fixed S either under-splits the giant or over-replicates the merely-warm.
-    Salting never changes the produced pair SET (only its partitioning), so
-    both modes are interchangeable for correctness.
+    ``hot_threshold`` ``T`` is the one skew setting: a block of ``n > T``
+    rows is hot and takes ``S = min(ceil(n / T), 256)`` triangle salts, so
+    each salted task sees about ``T`` left rows whatever the block-size
+    distribution — a giant block gets a wide split, a merely-warm one two or
+    three salts, and no fixed count under-splits the first or
+    over-replicates the second. Salting never changes the produced pair SET
+    (only its partitioning). ``T`` must be >= 1.
     """
-    meetings = _self_meetings(
-        blocks.select("block_key", "id"), hot_threshold, num_salts, adaptive_target_rows
-    )
+    meetings = _self_meetings(blocks.select("block_key", "id"), hot_threshold)
     return meetings.groupBy("id_a", "id_b").agg(F.count(F.lit(1)).alias("n_keys"))
 
 
@@ -194,7 +198,6 @@ def candidate_pairs_annotated(
     blocks: DataFrame,
     predicate,
     hot_threshold: int = DEFAULT_HOT_THRESHOLD,
-    num_salts: int = DEFAULT_SALTS,
 ) -> DataFrame:
     """:func:`candidate_pairs` with per-(key, id) PAYLOAD and an in-join
     pruning predicate — the hook for PPJoin-style positional filters, which
@@ -212,7 +215,7 @@ def candidate_pairs_annotated(
     different blocking-quality signals (distinct names prevent a consumer
     accidentally reusing one as the other).
     """
-    meetings = _self_meetings(blocks, hot_threshold, num_salts)
+    meetings = _self_meetings(blocks, hot_threshold)
     return (
         meetings.where(predicate(meetings))
         .groupBy("id_a", "id_b")
@@ -224,7 +227,6 @@ def candidate_pairs_lr(
     blocks_l: DataFrame,
     blocks_r: DataFrame,
     hot_threshold: int = DEFAULT_HOT_THRESHOLD,
-    num_salts: int = DEFAULT_SALTS,
 ) -> DataFrame:
     """Bipartite candidate generation: two exploded block tables
     ``(block_key, id)`` from DIFFERENT record sets → distinct slim
@@ -238,7 +240,6 @@ def candidate_pairs_lr(
         blocks_l.select("block_key", "id"),
         blocks_r.select("block_key", "id"),
         hot_threshold,
-        num_salts,
     ).distinct()
 
 
@@ -247,7 +248,6 @@ def candidate_pairs_lr_annotated(
     blocks_r: DataFrame,
     predicate,
     hot_threshold: int = DEFAULT_HOT_THRESHOLD,
-    num_salts: int = DEFAULT_SALTS,
 ) -> DataFrame:
     """:func:`candidate_pairs_lr` with per-(key, id) payload and an in-join
     predicate (the bipartite sibling of :func:`candidate_pairs_annotated`).
@@ -255,7 +255,7 @@ def candidate_pairs_lr_annotated(
     ``(id_l, id_r)`` survives if ANY of its key-meetings passes. Output:
     distinct ``(id_l, id_r)``.
     """
-    meetings = _lr_meetings(blocks_l, blocks_r, hot_threshold, num_salts)
+    meetings = _lr_meetings(blocks_l, blocks_r, hot_threshold)
     return meetings.where(predicate(meetings)).select("id_l", "id_r").distinct()
 
 
@@ -268,7 +268,6 @@ def fuzzy_join(
     id_col: str = "id",
     dist_fn=None,
     hot_threshold: int = DEFAULT_HOT_THRESHOLD,
-    num_salts: int = DEFAULT_SALTS,
 ) -> DataFrame:
     """Batch two-table fuzzy linkage (the batch twin of
     ``streaming.stream_fuzzy_link``, at the slim-pair scale discipline):
@@ -284,7 +283,7 @@ def fuzzy_join(
 
     bl = left.select(F.col(key_col).alias("block_key"), F.col(id_col).alias("id"))
     br = right.select(F.col(key_col).alias("block_key"), F.col(id_col).alias("id"))
-    pairs = candidate_pairs_lr(bl, br, hot_threshold, num_salts)
+    pairs = candidate_pairs_lr(bl, br, hot_threshold)
     a = left.select(F.col(id_col).alias("id_l"), F.col(text_col).alias(f"{text_col}_l"))
     b = right.select(F.col(id_col).alias("id_r"), F.col(text_col).alias(f"{text_col}_r"))
     fat = pairs.join(a, "id_l").join(b, "id_r")

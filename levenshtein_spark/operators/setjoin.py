@@ -115,7 +115,6 @@ def set_similarity_self_join(
     t_den: int,
     id_col: str = "id",
     hot_threshold: int = 2000,
-    num_salts: int = 16,
 ) -> DataFrame:
     """All pairs with ``Jaccard(set(tokens_a), set(tokens_b)) >= t_num/t_den``
     — exact, via AllPairs prefix-filter blocking. Output:
@@ -136,7 +135,7 @@ def set_similarity_self_join(
 
     keys = allpairs_prefix_keys(slim, t_num, t_den).transform(scoped_persist)
     pairs = candidate_pairs_annotated(
-        keys, ppjoin_predicate(t_num, t_den), hot_threshold, num_salts
+        keys, ppjoin_predicate(t_num, t_den), hot_threshold
     ).drop("n_passing_keys")
     fat = attach_pair_payload(pairs, slim, ["toks"])
     inter = F.size(F.array_intersect("toks_a", "toks_b"))
@@ -163,7 +162,6 @@ def set_containment_join(
     t_den: int,
     id_col: str = "id",
     hot_threshold: int = 2000,
-    num_salts: int = 16,
 ) -> DataFrame:
     """Ordered containment pairs: every ``(inner, outer)`` with
     ``|inner ∩ outer| >= (t_num/t_den)·|inner|`` and ``inner != outer`` —
@@ -217,7 +215,7 @@ def set_containment_join(
         return not_self & length_ok & pos_ok
 
     pairs = candidate_pairs_lr_annotated(
-        inner_keys, outer_keys, containment_filters, hot_threshold, num_salts
+        inner_keys, outer_keys, containment_filters, hot_threshold
     ).select(F.col("id_l").alias("id_a"), F.col("id_r").alias("id_b"))
     fat = attach_pair_payload(pairs, slim, ["toks"])
     inter = F.size(F.array_intersect("toks_a", "toks_b"))

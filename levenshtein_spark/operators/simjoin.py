@@ -78,7 +78,6 @@ def similarity_self_join(
     transpositions: bool = True,
     family: str = "auto",
     hot_threshold: int = 2000,
-    num_salts: int = 16,
 ) -> DataFrame:
     """All pairs with ``sim_fn(text_a, text_b) >= p`` (default: the
     reference OSA ``similarity_t``), via lossless content-aware blocking +
@@ -118,7 +117,7 @@ def similarity_self_join(
     blocks = similarity_candidate_blocks(
         records, text_col, p, id_col, q, transpositions, family
     )
-    pairs = candidate_pairs(blocks, hot_threshold, num_salts).drop("n_keys")
+    pairs = candidate_pairs(blocks, hot_threshold).drop("n_keys")
     fat = attach_pair_payload(
         pairs, records.select(F.col(id_col).alias("id"), text_col), [text_col]
     )
@@ -157,7 +156,7 @@ def similarity_candidate_blocks(
     ``family``: ``"grams"`` forces band ∪ rarest-gram keys, ``"bands"``
     forces pure log-length banding, ``"auto"`` (default) censuses BOTH
     families' candidate mass (Σ_key C(n,2) — two one-scalar aggregates,
-    the same bounded driver-side decision pattern as adaptive salting in
+    the same census-driven decision pattern as the salt counts in
     operators/pairs.py) and routes through the lighter one. Both families
     are lossless, so the choice never changes the join result — only its
     cost. The regimes are real and measured (BENCH/simjoin_uniform.json):
@@ -274,7 +273,6 @@ def edit_distance_self_join(
     transpositions: bool = False,
     dist_fn=None,
     hot_threshold: int = 2000,
-    num_salts: int = 16,
 ) -> DataFrame:
     """All pairs with edit distance <= k, via the Ed-Join / prefix-filter
     candidate generator (Gravano et al. VLDB'01 count filter; Xiao et al.
@@ -339,7 +337,7 @@ def edit_distance_self_join(
         F.lit("eg|__short").alias("block_key"), "id"
     )
     pairs = candidate_pairs(
-        gram_keys.unionByName(short_keys), hot_threshold, num_salts
+        gram_keys.unionByName(short_keys), hot_threshold
     ).drop("n_keys")
     fat = attach_pair_payload(
         pairs, records.select(F.col(id_col).alias("id"), text_col), [text_col]

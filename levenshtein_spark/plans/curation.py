@@ -56,7 +56,6 @@ class CurationConfig:
     train_below: int = 80  # hash bucket < 80 → train
     val_below: int = 90    # < 90 → val, else test
     hot_threshold: int = 2000
-    num_salts: int = 16
     force: bool = False
     stage_times: dict = field(default_factory=dict)
 
@@ -169,9 +168,7 @@ def run_curation(spark: SparkSession, docs: DataFrame, cfg: CurationConfig) -> d
         cfg,
         "neardup_edges",
         lambda: _verify_edges(
-            candidate_pairs(neardup_bands, cfg.hot_threshold, cfg.num_salts).drop(
-                "n_keys"
-            ),
+            candidate_pairs(neardup_bands, cfg.hot_threshold).drop("n_keys"),
             exact_canon,
             cfg,
         ),
@@ -336,14 +333,10 @@ def run_incremental_curation(
     def build_delta_edges() -> DataFrame:
         from levenshtein_spark.operators.pairs import candidate_pairs_lr
 
-        cross = candidate_pairs_lr(
-            delta_bands, base_bands, cfg.hot_threshold, cfg.num_salts
-        ).select(
+        cross = candidate_pairs_lr(delta_bands, base_bands, cfg.hot_threshold).select(
             F.least("id_l", "id_r").alias("id_a"), F.greatest("id_l", "id_r").alias("id_b")
         )
-        within = candidate_pairs(delta_bands, cfg.hot_threshold, cfg.num_salts).select(
-            "id_a", "id_b"
-        )
+        within = candidate_pairs(delta_bands, cfg.hot_threshold).select("id_a", "id_b")
         return _verify_edges(cross.unionByName(within).distinct(), all_exact, cfg)
 
     delta_edges = run_stage(wh, cfg, f"{batch_id}_edges", build_delta_edges)

@@ -45,12 +45,9 @@ class LinkageConfig:
     k_path: int = 4
     prefix_len: int = 256
     len_band: int = 32
+    # a block of n > hot_threshold rows is salted into ceil(n / hot_threshold)
+    # pieces (operators/pairs.py); same pair set for any value >= 1
     hot_threshold: int = 2000
-    num_salts: int = 16
-    # per-block adaptive salting (S_b = ceil(block_size / target)); None
-    # keeps the fixed num_salts. Same pair set either way — this knob only
-    # controls how a hot block's fan-out spreads over tasks.
-    adaptive_target_rows: int | None = None
     # value-level memoized scoring (operators/scoring.py): score one
     # representative per distinct payload tuple. Identical scored rows
     # either way; flip on for clone-heavy corpora (measured 3×/10.4× at
@@ -104,12 +101,7 @@ def run_linkage(spark: SparkSession, source: DataFrame, cfg: LinkageConfig) -> d
         wh,
         cfg,
         "pairs",
-        lambda: candidate_pairs(
-            blocks,
-            cfg.hot_threshold,
-            cfg.num_salts,
-            adaptive_target_rows=cfg.adaptive_target_rows,
-        ),
+        lambda: candidate_pairs(blocks, cfg.hot_threshold),
     )
     scored = _stage(
         wh,
@@ -237,18 +229,11 @@ def run_incremental_linkage(
     )
 
     def build_pairs() -> DataFrame:
-        cross = candidate_pairs_lr(
-            delta_blocks, base_blocks, cfg.hot_threshold, cfg.num_salts
-        ).select(
+        cross = candidate_pairs_lr(delta_blocks, base_blocks, cfg.hot_threshold).select(
             F.least("id_l", "id_r").alias("id_a"),
             F.greatest("id_l", "id_r").alias("id_b"),
         )
-        within = candidate_pairs(
-            delta_blocks,
-            cfg.hot_threshold,
-            cfg.num_salts,
-            adaptive_target_rows=cfg.adaptive_target_rows,
-        ).select("id_a", "id_b")
+        within = candidate_pairs(delta_blocks, cfg.hot_threshold).select("id_a", "id_b")
         return cross.unionByName(within)
 
     delta_pairs = _stage(wh, cfg, f"{batch_id}_pairs", build_pairs)

@@ -43,7 +43,6 @@ def _cfg(tmp_path, **kw):
         jaccard=0.6,
         shard_budget=30,
         hot_threshold=50,
-        num_salts=4,
         **kw,
     )
 

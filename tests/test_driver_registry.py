@@ -31,6 +31,24 @@ def test_collect_registry():
         assert name in queries and name in oracles, name
 
 
+def test_front_is_least_recently_driver_checked():
+    """The driver verifies the first 50 registry entries; they are the 50
+    queries whose last driver-green row in CORRECTNESS_r01..r05.json is the
+    oldest, so no query outside the front was checked less recently."""
+    import json
+
+    from levenshtein_spark.driver_queries import collect
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    last = {}
+    for r in range(1, 6):
+        with open(os.path.join(root, f"CORRECTNESS_r0{r}.json")) as fh:
+            last.update((q, r) for q in json.load(fh))
+    order = list(collect()[0])
+    assert set(order) == set(last)
+    assert max(last[q] for q in order[:50]) <= min(last[q] for q in order[50:])
+
+
 def test_entry_module_contract():
     import __spark_entry__ as e
 

@@ -120,8 +120,3 @@ def test_registered():
 
     q, o = collect()
     assert "fs_threshold_curve" in q and "fs_threshold_curve" in o
-    # r05 order: this query is one of the 45 that had no driver-green row
-    # in rounds 1-4, so it must sit INSIDE the driver's first-50 sample
-    # (the r04 pin asserted the opposite — that round's banked front had to
-    # stay untouched until its driver run was recorded).
-    assert list(q).index("fs_threshold_curve") < 50

@@ -72,7 +72,7 @@ def test_wnp_or_matches_brute_force(spark, blocks):
         for p, wt in w.items()
         if wt * degs[p[0]] >= sums[p[0]] and wt * degs[p[1]] >= sums[p[1]]
     }
-    weighted = candidate_pairs(blocks, hot_threshold=3, num_salts=2).persist()
+    weighted = candidate_pairs(blocks, hot_threshold=3).persist()
     got_or = {(r.id_a, r.id_b) for r in weighted_node_prune(weighted).collect()}
     got_and = {
         (r.id_a, r.id_b)
@@ -88,7 +88,7 @@ def test_wep_matches_brute_force(spark, blocks):
     w = brute_pairs(rows)
     total, n = sum(w.values()), len(w)
     exp = {p for p, wt in w.items() if wt * n >= total}
-    weighted = candidate_pairs(blocks, hot_threshold=3, num_salts=2)
+    weighted = candidate_pairs(blocks, hot_threshold=3)
     got = {(r.id_a, r.id_b) for r in weight_edge_prune(weighted).collect()}
     assert got == exp
 
@@ -135,7 +135,7 @@ def test_salting_invariance(spark, blocks):
     """Pruning verdicts are a pure function of the pair/weight SET, so the
     hot-path salting must not change them."""
     w_plain = candidate_pairs(blocks, hot_threshold=10**6)
-    w_salted = candidate_pairs(blocks, hot_threshold=2, num_salts=3)
+    w_salted = candidate_pairs(blocks, hot_threshold=2)
     for op in (weighted_node_prune, weight_edge_prune):
         a = {(r.id_a, r.id_b, r.n_keys) for r in op(w_plain).collect()}
         b = {(r.id_a, r.id_b, r.n_keys) for r in op(w_salted).collect()}
@@ -174,7 +174,7 @@ if HAS_HYPOTHESIS:
         rows = sorted({(f"b{b}", i) for b, i in assigns})
         ids = sorted({i for _, i in rows})
         blocks = spark.createDataFrame(rows, "block_key string, id long")
-        weighted = candidate_pairs(blocks, hot_threshold=hot, num_salts=3).persist()
+        weighted = candidate_pairs(blocks, hot_threshold=hot).persist()
 
         w = brute_pairs(rows)
         sums, degs = {}, {}

@@ -18,7 +18,7 @@ def test_salted_join_is_lossless(spark):
     blocks = exploded_blocks(normalize(src)).cache()
 
     plain = candidate_pairs(blocks, hot_threshold=10**9)  # nothing hot
-    salted = candidate_pairs(blocks, hot_threshold=0, num_salts=5)  # everything hot
+    salted = candidate_pairs(blocks, hot_threshold=1)  # every block of >= 2 rows hot
 
     ps, ss = _pair_set(plain), _pair_set(salted)
     assert ps == ss
@@ -67,7 +67,7 @@ def test_candidate_pairs_lr_matches_bruteforce(spark):
     br = spark.createDataFrame(rows_r, "block_key string, id string")
     got = {
         (r.id_l, r.id_r)
-        for r in candidate_pairs_lr(bl, br, hot_threshold=500, num_salts=4).collect()
+        for r in candidate_pairs_lr(bl, br, hot_threshold=500).collect()
     }
     exp = {
         (il, ir)
@@ -97,32 +97,82 @@ def test_fuzzy_join_two_tables(spark):
     assert got == {(1, 10, 1), (3, 11, 1)}
 
 
-def test_adaptive_salting_is_lossless_and_sizes_per_block(spark):
-    """Adaptive mode: per-block S_b = ceil(size/target) must produce the
-    exact same (pair, n_keys) multiset as fixed salting and as no salting,
-    across blocks whose sizes differ by 30x (one fixed S cannot fit both)."""
+def test_salt_rule_is_lossless_across_thresholds(spark):
+    """The salt count comes from the census (S = ceil(load / T)), so every
+    threshold must give the exact (pair, n_keys) multiset of no salting —
+    self core on blocks 100x apart in size, one of them past _MAX_SALTS at
+    T = 1, and bipartite core with a key whose ceil(n_l*n_r/T) exceeds n_l
+    (S capped at n_l), where every cross meeting must appear exactly once."""
+    from collections import Counter
+
+    from levenshtein_spark.operators.pairs import _MAX_SALTS, _lr_meetings
+
     rows = (
-        [(f"giant", i) for i in range(90)]
-        + [(f"warm", 1000 + i) for i in range(12)]
-        + [(f"cold", 2000 + i) for i in range(3)]
+        [("giant", i) for i in range(300)]
+        + [("warm", 1000 + i) for i in range(12)]
+        + [("cold", 2000 + i) for i in range(3)]
+        # ids shared with the giant block: pairs met under two keys
+        + [("overlap", i) for i in range(0, 300, 37)]
     )
+    assert 300 > _MAX_SALTS
     blocks = spark.createDataFrame(rows, "block_key string, id long")
 
-    plain = candidate_pairs(blocks, hot_threshold=10**9)
-    fixed = candidate_pairs(blocks, hot_threshold=0, num_salts=6)
-    adaptive = candidate_pairs(blocks, hot_threshold=0, adaptive_target_rows=8)
-
     def keyed(df):
-        return {(r.id_a, r.id_b, r.n_keys) for r in df.collect()}
+        return Counter((r.id_a, r.id_b, r.n_keys) for r in df.collect())
 
-    kp = keyed(plain)
-    assert kp == keyed(fixed) == keyed(adaptive)
-    assert len(kp) == 90 * 89 // 2 + 12 * 11 // 2 + 3 * 2 // 2
+    plain = keyed(candidate_pairs(blocks, hot_threshold=10**9))
+    assert sum(plain.values()) == 300 * 299 // 2 + 12 * 11 // 2 + 3 * 2 // 2
+    assert any(n == 2 for _, _, n in plain)
+    for t in (1, 5, 40, 299):
+        assert keyed(candidate_pairs(blocks, hot_threshold=t)) == plain, t
 
-    # adaptive mode with a huge target degenerates to S_b = 1 (one task per
-    # block, same as unsalted) and still produces the identical set
-    degenerate = candidate_pairs(blocks, hot_threshold=0, adaptive_target_rows=10**6)
-    assert keyed(degenerate) == kp
+    rows_l = [("narrow", i) for i in range(5)] + [("wide", 100 + i) for i in range(30)]
+    rows_r = [("narrow", 500 + j) for j in range(40)] + [("wide", 600 + j) for j in range(20)]
+    rows_r += [("right_only", 700 + j) for j in range(4)]
+    bl = spark.createDataFrame(rows_l, "block_key string, id long")
+    br = spark.createDataFrame(rows_r, "block_key string, id long")
+    exp = Counter((il, ir) for kl, il in rows_l for kr, ir in rows_r if kl == kr)
+    # T = 10: narrow has ceil(5*40/10) = 20 > n_l = 5, so S = 5
+    for t in (10**9, 1, 10, 150):
+        got = Counter((r.id_l, r.id_r) for r in _lr_meetings(bl, br, t).collect())
+        assert got == exp, t
+
+
+def test_salt_count_rule(spark):
+    """The one rule, pinned on census values: S = min(ceil(load / T), caps,
+    _MAX_SALTS); a threshold below 1 raises before any job runs."""
+    import pytest
+
+    from levenshtein_spark.operators.pairs import _salt_count, candidate_pairs_lr
+
+    cases = [
+        # (load, T, extra caps, S)
+        (80, 30, [], 3),  # link_batch hot MinHash blocks
+        (66, 30, [], 3),
+        (120, 30, [], 4),
+        (87, 30, [], 3),
+        (377, 50, [], 8),  # largest doc block at sf0.1
+        (8000, 500, [], 16),  # the skew rehearsal's giant block
+        (31, 30, [], 2),
+        (2, 1, [], 2),
+        (300, 1, [], 256),  # _MAX_SALTS
+        (57 * 57, 500, [57], 7),  # bipartite, fan-out rules
+        (5 * 40, 10, [5], 5),  # bipartite, capped at n_l
+        (1 * 900, 100, [1], 1),
+    ]
+    got = spark.range(1).select(
+        *[
+            _salt_count(F.lit(load), t, *[F.lit(c) for c in caps]).alias(f"s{i}")
+            for i, (load, t, caps, _) in enumerate(cases)
+        ]
+    ).first()
+    assert list(got) == [s for *_, s in cases]
+
+    blocks = spark.createDataFrame([("k", 1), ("k", 2)], "block_key string, id long")
+    with pytest.raises(ValueError, match="hot_threshold"):
+        candidate_pairs(blocks, hot_threshold=0)
+    with pytest.raises(ValueError, match="hot_threshold"):
+        candidate_pairs_lr(blocks, blocks, hot_threshold=0)
 
 
 def test_one_to_one_mutual_best(spark):
@@ -168,10 +218,10 @@ def test_candidate_pairs_annotated_parity_and_payload(spark):
 
     slim = {
         (r.id_a, r.id_b, r.n_keys)
-        for r in candidate_pairs(blocks, hot_threshold=40, num_salts=4).collect()
+        for r in candidate_pairs(blocks, hot_threshold=40).collect()
     }
     ann = candidate_pairs_annotated(
-        blocks, lambda m: F.lit(True), hot_threshold=40, num_salts=4
+        blocks, lambda m: F.lit(True), hot_threshold=40
     ).collect()
     assert {(r.id_a, r.id_b, r.n_passing_keys) for r in ann} == slim
 
@@ -182,7 +232,6 @@ def test_candidate_pairs_annotated_parity_and_payload(spark):
         lambda m: (F.col("tag_a") == F.col("id_a") * 10)
         & (F.col("tag_b") == F.col("id_b") * 10),
         hot_threshold=40,
-        num_salts=4,
     ).collect()
     assert {(r.id_a, r.id_b, r.n_passing_keys) for r in ok} == slim
 
@@ -205,7 +254,7 @@ def test_candidate_pairs_lr_annotated_parity(spark):
         (x.id_l, x.id_r)
         for x in candidate_pairs_lr(
             l.select("block_key", "id"), r.select("block_key", "id"),
-            hot_threshold=10, num_salts=3,
+            hot_threshold=10,
         ).collect()
     }
     ann = candidate_pairs_lr_annotated(
@@ -213,7 +262,6 @@ def test_candidate_pairs_lr_annotated_parity(spark):
         lambda m: (F.col("w_l") == F.col("id_l") + 100)
         & (F.col("w_r") == F.col("id_r") + 100),
         hot_threshold=10,
-        num_salts=3,
     ).collect()
     assert {(x.id_l, x.id_r) for x in ann} == slim
 
@@ -262,7 +310,6 @@ def test_annotated_selective_predicate_matches_bruteforce(spark):
             blocks,
             lambda m: (F.col("tag_a") + F.col("tag_b")) % 3 != 0,
             hot_threshold=60,
-            num_salts=4,
         ).collect()
     }
     assert got == {(a, b, n) for (a, b), n in n_pass.items()}
@@ -293,7 +340,6 @@ def test_annotated_selective_predicate_matches_bruteforce(spark):
             blocks_r,
             lambda m: (F.col("tag_l") + F.col("tag_r")) % 3 != 0,
             hot_threshold=2000,
-            num_salts=4,
         ).collect()
     }
     assert got_lr == exp

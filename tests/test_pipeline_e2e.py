@@ -27,7 +27,7 @@ K_CONTENT = 8
 def pipeline(spark, tmp_path_factory):
     ckpt = str(tmp_path_factory.mktemp("ckpt"))
     src = code_files_df(spark, num_clusters=60, seed=42)
-    cfg = LinkageConfig(checkpoint_dir=ckpt, k_content=K_CONTENT, hot_threshold=150, num_salts=4)
+    cfg = LinkageConfig(checkpoint_dir=ckpt, k_content=K_CONTENT, hot_threshold=150)
     out = run_linkage(spark, src, cfg)
     return out, cfg
 
@@ -140,7 +140,6 @@ def test_resume_skips_stages_and_is_identical(pipeline, spark):
         checkpoint_dir=cfg.checkpoint_dir,
         k_content=cfg.k_content,
         hot_threshold=cfg.hot_threshold,
-        num_salts=cfg.num_salts,
     )
     out2 = run_linkage(spark, src, cfg2)
     after = {r.id: r.cluster_id for r in out2["clusters"].collect()}
@@ -158,7 +157,7 @@ def test_incremental_matches_full_batch(spark, tmp_path):
     src = code_files_df(spark, num_clusters=25, seed=7)
     full_cfg = LinkageConfig(
         checkpoint_dir=str(tmp_path / "full"), k_content=K_CONTENT,
-        hot_threshold=150, num_salts=4,
+        hot_threshold=150,
     )
     want = {
         r.id: r.cluster_id
@@ -168,11 +167,11 @@ def test_incremental_matches_full_batch(spark, tmp_path):
     is_delta = F.pmod(F.xxhash64("path"), F.lit(4)) == 0
     ckpt = str(tmp_path / "incr")
     base_cfg = LinkageConfig(
-        checkpoint_dir=ckpt, k_content=K_CONTENT, hot_threshold=150, num_salts=4
+        checkpoint_dir=ckpt, k_content=K_CONTENT, hot_threshold=150
     )
     run_linkage(spark, src.where(~is_delta), base_cfg)
     incr_cfg = LinkageConfig(
-        checkpoint_dir=ckpt, k_content=K_CONTENT, hot_threshold=150, num_salts=4
+        checkpoint_dir=ckpt, k_content=K_CONTENT, hot_threshold=150
     )
     out = run_incremental_linkage(spark, src.where(is_delta), incr_cfg)
     got = {r.id: r.cluster_id for r in out["clusters"].collect()}
@@ -211,7 +210,7 @@ def test_incremental_chained_batches(spark, tmp_path):
     src = code_files_df(spark, num_clusters=20, seed=13)
     full_cfg = LinkageConfig(
         checkpoint_dir=str(tmp_path / "full"), k_content=K_CONTENT,
-        hot_threshold=150, num_salts=4,
+        hot_threshold=150,
     )
     want = {
         r.id: r.cluster_id
@@ -221,7 +220,7 @@ def test_incremental_chained_batches(spark, tmp_path):
     bucket = F.pmod(F.xxhash64("path"), F.lit(3))
     ckpt = str(tmp_path / "chain")
     cfg = LinkageConfig(
-        checkpoint_dir=ckpt, k_content=K_CONTENT, hot_threshold=150, num_salts=4
+        checkpoint_dir=ckpt, k_content=K_CONTENT, hot_threshold=150
     )
     run_linkage(spark, src.where(bucket == 0), cfg)
     run_incremental_linkage(spark, src.where(bucket == 1), cfg, batch_id="day1")
@@ -265,7 +264,6 @@ def test_cluster_method_pivot(spark, tmp_path):
         checkpoint_dir=str(tmp_path / "ckpt"),
         k_content=K_CONTENT,
         hot_threshold=150,
-        num_salts=4,
         cluster_method="pivot",
     )
     out = run_linkage(spark, src, cfg)

@@ -45,7 +45,7 @@ def pairs(spark):
     corpus = docs.unionByName(verbatim).unionByName(mutated)
     norm = normalize(corpus, prefix_len=_PREFIX)
     slim = candidate_pairs(
-        exploded_blocks(norm, len_band=_LEN_BAND), hot_threshold=50, num_salts=4
+        exploded_blocks(norm, len_band=_LEN_BAND), hot_threshold=50
     )
     return attach_pair_payload(slim, norm, PAYLOAD).persist()
 

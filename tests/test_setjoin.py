@@ -86,7 +86,7 @@ def test_hot_shared_token_family(spark):
     rows = [
         (i, ["boiler"] + rng.sample(vocab, rng.randint(1, 6))) for i in range(150)
     ]
-    assert _run(spark, rows, 1, 2, hot_threshold=50, num_salts=4) == _brute(
+    assert _run(spark, rows, 1, 2, hot_threshold=50) == _brute(
         rows, 1, 2
     )
 

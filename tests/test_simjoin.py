@@ -59,7 +59,7 @@ def test_similarity_self_join_matches_bruteforce(spark):
     df = spark.createDataFrame(rows, "id long, text string")
     got = {
         (r.id_a, r.id_b): round(r.sim, 9)
-        for r in similarity_self_join(df, "text", p, hot_threshold=20, num_salts=4).collect()
+        for r in similarity_self_join(df, "text", p, hot_threshold=20).collect()
     }
     exp = {}
     for i, (ia, ta) in enumerate(rows):
@@ -113,7 +113,7 @@ def test_edit_distance_self_join_matches_bruteforce_levenshtein(spark):
     got = {
         (r.id_a, r.id_b): r.dist
         for r in edit_distance_self_join(
-            df, "text", k=k, q=q, hot_threshold=20, num_salts=4
+            df, "text", k=k, q=q, hot_threshold=20
         ).collect()
     }
     exp = _brute_pairs(
@@ -143,7 +143,7 @@ def test_edit_distance_self_join_matches_bruteforce_osa(spark):
     got = {
         (r.id_a, r.id_b): r.dist
         for r in edit_distance_self_join(
-            df, "text", k=k, q=q, transpositions=True, hot_threshold=20, num_salts=4
+            df, "text", k=k, q=q, transpositions=True, hot_threshold=20
         ).collect()
     }
     exp = _brute_pairs(rows, k, lambda a, b: osa_matrix(a.encode(), b.encode()))
@@ -191,7 +191,7 @@ if HAS_HYPOTHESIS:
         got = {
             (r.id_a, r.id_b): r.dist
             for r in edit_distance_self_join(
-                df, "text", k=k, q=q, hot_threshold=10, num_salts=3
+                df, "text", k=k, q=q, hot_threshold=10
             ).collect()
         }
         exp = {}
@@ -273,7 +273,7 @@ def test_similarity_join_uniform_length_corpus(spark):
         (r.id_a, r.id_b)
         for r in similarity_self_join(
             df, "text", p, sim_fn=lev_sim, q=2, transpositions=False,
-            hot_threshold=20, num_salts=4,
+            hot_threshold=20,
         ).collect()
     }
 
@@ -299,5 +299,5 @@ def test_similarity_join_uniform_length_corpus(spark):
     # one giant length band produces); the content-keyed blocking must
     # generate a small fraction of it
     blocks = similarity_candidate_blocks(df, "text", p, q=2, transpositions=False)
-    n_cand = candidate_pairs(blocks, hot_threshold=20, num_salts=4).count()
+    n_cand = candidate_pairs(blocks, hot_threshold=20).count()
     assert n_cand < 3160 * 0.3, f"{n_cand} candidates on uniform-length corpus"

@@ -102,7 +102,7 @@ def main() -> None:
         def build():
             norm = normalize(docs_as_code_files(spark, _SF), prefix_len=_PREFIX)
             slim = candidate_pairs(
-                blocks_fn(norm).persist(), hot_threshold=50, num_salts=8
+                blocks_fn(norm).persist(), hot_threshold=50
             )
             return attach_pair_payload(slim, norm, ["content_prefix"]).select(
                 "id_a", "id_b", "content_prefix_a", "content_prefix_b"
@@ -176,7 +176,7 @@ def main() -> None:
     record["planted_ideal_recall"] = round(1 - (1 - 0.5**2) ** 4, 4)
     for name, blocks_fn in schemes.items():
         cand = candidate_pairs(
-            blocks_fn(norm).persist(), hot_threshold=50, num_salts=8
+            blocks_fn(norm).persist(), hot_threshold=50
         ).select("id_a", "id_b")
         hit = truth.join(cand, ["id_a", "id_b"], "left_semi").count()
         record[name]["planted_mh_recall"] = round(hit / max(n_truth, 1), 4)

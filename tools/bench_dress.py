@@ -66,7 +66,7 @@ def main() -> None:
     record["t_blocks_s"] = round(time.monotonic() - t0, 2)
 
     t0 = time.monotonic()
-    pairs = candidate_pairs(blocks, hot_threshold=500, num_salts=8).persist()
+    pairs = candidate_pairs(blocks, hot_threshold=500).persist()
     record["n_candidate_pairs"] = pairs.count()
     record["t_pairs_s"] = round(time.monotonic() - t0, 2)
 

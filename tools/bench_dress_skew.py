@@ -1,25 +1,23 @@
-"""Skew dress rehearsal (round 3, VERDICT r02 #4): adaptive per-block
-salting vs fixed salt count on a Zipf-skewed block distribution.
+"""Skew dress rehearsal: census-derived salt counts on a Zipf-skewed block
+distribution.
 
-The r02 dress rehearsals used uniform synthetic corpora; the adaptive-salting
-claim (``candidate_pairs(adaptive_target_rows=…)``) deserves a corpus where
-one block holds a double-digit share of all rows. This tool builds exactly
-that — one giant block, a band of warm blocks, a long uniform tail — runs
-the SAME lossless pair generation in both modes, and records the straggler
-evidence the claim rests on:
+Uniform synthetic corpora never put one block past a double-digit share of
+the rows; this tool builds exactly that — one giant block, a band of warm
+blocks, a long uniform tail — runs the lossless pair generation of
+``candidate_pairs`` on it, and records the straggler evidence:
 
-* **wall time** per mode (same input, same session settings);
-* **max-task / median-task duration** of the dominant (join) stage, read
-  from Spark's own task metrics (UI REST ``taskSummary`` quantiles) — the
-  literal straggler ratio;
-* pair-count equality across modes (salting never changes the produced SET).
+* **wall time** of the pair count (same input, same session settings);
+* **max-task / mean- and median-task duration** of the dominant (join)
+  stage, read from Spark's own task metrics (UI REST ``taskSummary``
+  quantiles) — the literal straggler ratio.
 
-Under fixed S, the giant block's per-task pair fan-out is (n/S)² while warm
-blocks idle at tiny tasks — ratio >> 1. Adaptive sizes S_b = ceil(n_b/target)
-so every salted task sees ~target left rows — ratio ≈ 1.
+The salt count of a hot block is ``S = ceil(n / T)`` (``T`` =
+``hot_threshold``), so the 8,000-row giant block takes 16 salts at the
+default ``T = 500`` while the 600-row warm blocks take 2 each: every salted
+task sees about ``T`` left rows whatever the block-size distribution.
 
-Usage: python tools/bench_dress_skew.py [n_rows]   (default 50_000)
-Writes BENCH/dress_rehearsal_skew.json.
+Usage: python tools/bench_dress_skew.py [n_rows] [hot_threshold]
+(defaults 50_000 and 500). Prints one JSON object.
 """
 
 from __future__ import annotations
@@ -119,44 +117,28 @@ def _stage_straggler_ratio(spark) -> dict:
     }
 
 
-def _run_mode(n: int, tag: str, **pair_kwargs) -> dict:
+def main() -> None:
     from levenshtein_spark.operators.pairs import candidate_pairs
 
-    spark = _build_session(tag)
+    n = int(sys.argv[1]) if len(sys.argv) > 1 else 50_000
+    t = int(sys.argv[2]) if len(sys.argv) > 2 else 500
+    spark = _build_session(f"t{t}")
     try:
         blocks = _zipf_blocks(spark, n).persist()
         blocks.count()
         t0 = time.monotonic()
-        n_pairs = candidate_pairs(blocks, **pair_kwargs).count()
-        wall = round(time.monotonic() - t0, 2)
-        rec = {"mode": tag, "n_rows": n, "n_pairs": n_pairs, "wall_s": wall}
+        n_pairs = candidate_pairs(blocks, hot_threshold=t).count()
+        rec = {
+            "corpus": "zipf: giant block 16% of rows, 20 warm blocks 1.2% each, 30-row tail",
+            "mode": f"derived_t{t}",
+            "n_rows": n,
+            "n_pairs": n_pairs,
+            "wall_s": round(time.monotonic() - t0, 2),
+        }
         rec.update(_stage_straggler_ratio(spark))
-        return rec
     finally:
         spark.stop()
-
-
-def main() -> None:
-    n = int(sys.argv[1]) if len(sys.argv) > 1 else 50_000
-    fixed = _run_mode(n, "fixed_s8", hot_threshold=500, num_salts=8)
-    # target 250 ⇒ the giant block splits into S=ceil(8000/250)=32 salts
-    # (~62k pairs/task) while warm blocks get S=2-3 — per-task pair fan-out
-    # equalizes across the whole Zipf curve, which fixed S=8 cannot do
-    # (giant tasks (n/8)² = 1M pairs, warm tasks ~10k).
-    adaptive = _run_mode(
-        n, "adaptive_t250", hot_threshold=500, num_salts=8, adaptive_target_rows=250
-    )
-    assert fixed["n_pairs"] == adaptive["n_pairs"], "salting changed the pair set!"
-    out = {
-        "corpus": "zipf: giant block 16% of rows, 20 warm blocks 1.2% each, 30-row tail",
-        "fixed": fixed,
-        "adaptive": adaptive,
-        "speedup": round(fixed["wall_s"] / max(adaptive["wall_s"], 1e-9), 2),
-    }
-    os.makedirs("BENCH", exist_ok=True)
-    with open("BENCH/dress_rehearsal_skew.json", "w") as fh:
-        json.dump(out, fh, indent=2)
-    print(json.dumps(out, indent=2))
+    print(json.dumps(rec))
 
 
 if __name__ == "__main__":

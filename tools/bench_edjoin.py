@@ -88,7 +88,7 @@ def main() -> int:
     short_keys = df.where(F.length("text") < short_len).select(
         F.lit("eg|__short").alias("block_key"), "id"
     )
-    edjoin_candidates = candidate_pairs(keys.unionByName(short_keys), 2000, 16).count()
+    edjoin_candidates = candidate_pairs(keys.unionByName(short_keys), 2000).count()
 
     true_matches = edit_distance_self_join(df, "text", k=args.k, q=args.q).count()
 

@@ -61,7 +61,7 @@ def main() -> int:
 
     def cfg_for(tag: str) -> LinkageConfig:
         return LinkageConfig(
-            checkpoint_dir=fresh(tag), hot_threshold=2000, num_salts=8
+            checkpoint_dir=fresh(tag), hot_threshold=2000
         )
 
     t0 = time.perf_counter()

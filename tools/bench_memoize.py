@@ -49,7 +49,7 @@ def main() -> None:
     sf1_dir = _ensure_sf1_corpus(spark, "/root/testdata/sf0.1")
     norm = normalize(docs_as_code_files(spark, sf1_dir), prefix_len=_PREFIX)
     slim = candidate_pairs(
-        exploded_blocks(norm, len_band=_LEN_BAND), hot_threshold=50, num_salts=8
+        exploded_blocks(norm, len_band=_LEN_BAND), hot_threshold=50
     )
     pairs = (
         attach_pair_payload(slim, norm, ["content_prefix"])

@@ -35,7 +35,7 @@ def main() -> None:
 
     spark = get_spark("native_baseline")
     norm = normalize(docs_as_code_files(spark, sf_dir), prefix_len=_PREFIX)
-    slim = candidate_pairs(exploded_blocks(norm, len_band=_LEN_BAND), hot_threshold=50, num_salts=8)
+    slim = candidate_pairs(exploded_blocks(norm, len_band=_LEN_BAND), hot_threshold=50)
     pdf = (
         attach_pair_payload(slim, norm, ["content_prefix"])
         .select("content_prefix_a", "content_prefix_b")

@@ -66,7 +66,7 @@ warm_python_workers(spark)
 
 norm = normalize(docs_as_code_files(spark, sf_dir), prefix_len=_PREFIX)
 slim = candidate_pairs(
-    exploded_blocks(norm, len_band=_LEN_BAND), hot_threshold=50, num_salts=8
+    exploded_blocks(norm, len_band=_LEN_BAND), hot_threshold=50
 )
 # Persist the UNreplicated pair set (406k rows); the measured job explodes
 # it JVM-side by `rep` so the Arrow transfer + kernel work — the real

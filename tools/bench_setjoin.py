@@ -68,17 +68,17 @@ def _run(spark, corpus) -> dict:
     keys = allpairs_prefix_keys(slim, _T_NUM, _T_DEN)
     # census 1: bare prefix-filter candidates (AllPairs)
     n_prefix = candidate_pairs(
-        keys.select("block_key", "id"), hot_threshold=500, num_salts=8
+        keys.select("block_key", "id"), hot_threshold=500
     ).count()
     # census 2: + PPJoin positional & length filters — the IMPORTED operator
     # predicate, so this number is exactly what set_similarity_self_join runs
     n_cand = candidate_pairs_annotated(
-        keys, ppjoin_predicate(_T_NUM, _T_DEN), hot_threshold=500, num_salts=8
+        keys, ppjoin_predicate(_T_NUM, _T_DEN), hot_threshold=500
     ).count()
     t0 = time.time()
     out = set_similarity_self_join(
         d, word_bigrams(F.col("text")), _T_NUM, _T_DEN,
-        hot_threshold=500, num_salts=8,
+        hot_threshold=500,
     )
     n_pairs = out.count()
     wall = time.time() - t0
@@ -120,7 +120,6 @@ def main() -> None:
         _T_NUM,
         _T_DEN,
         hot_threshold=500,
-        num_salts=8,
     )
     rep_pairs = out.where(
         (F.col("id_a") >= 1_000_000)

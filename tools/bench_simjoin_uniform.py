@@ -115,7 +115,7 @@ def main() -> None:
     auto_mass = census(auto_blocks)
     auto_family = "bands" if auto_mass == band_mass else "grams"
     t0 = time.perf_counter()
-    distinct = candidate_pairs(auto_blocks, hot_threshold=500, num_salts=8).count()
+    distinct = candidate_pairs(auto_blocks, hot_threshold=500).count()
     t_pairs = time.perf_counter() - t0
 
     def lev_sim(a, b):
@@ -129,7 +129,7 @@ def main() -> None:
     t0 = time.perf_counter()
     matches = similarity_self_join(
         d, "ptext", _P, sim_fn=lev_sim, q=_Q, transpositions=False,
-        hot_threshold=500, num_salts=8,
+        hot_threshold=500,
     ).count()
     t_join = time.perf_counter() - t0
 
