@@ -9,14 +9,16 @@ JSON line::
 Headline queries:
 
 * ``link_pipeline``   — full customer entity-resolution pipeline (blocking →
-  salted pairs → Arrow-batched bounded-distance scoring → star-contraction
-  transitive closure), the north_star workload.
+  salted pairs → Arrow-batched bounded-distance scoring → partition-local
+  union-find plus star rounds), the north_star workload.
 * ``doc_block_pairs`` — documents-corpus blocking + lossless salted candidate
   generation (dual length grids + path-token MinHash bands).
 * ``osa_scoring``     — raw vectorized banded-OSA kernel throughput over the
   candidate pairs' 64-char content prefixes (reports pairs/sec too).
-* ``closest_match``   — broadcast probe set vs part names, window arg-min
-  (reference ``min_edit_dist`` query shape, doc/Usage.md:178-189).
+* ``closest_match``   — the ``min_edit_dist_t`` operator, probe set vs
+  customer names: one ``mapInArrow`` task per core with the probes shipped
+  to each task, one winner per probe per task (reference ``min_edit_dist``
+  query shape, doc/Usage.md:178-189).
 
 Extra context (scored pairs/sec, row counts) rides in the ``detail`` key;
 scaling runs live in tools/bench_scaling.py → BENCH/BASELINE.md.
@@ -37,11 +39,11 @@ import pyspark.sql.functions as F  # noqa: E402
 def _ensure_sf1_corpus(spark, sf01_dir: str) -> str:
     """Deterministic sf1-equivalent corpus (10× sf0.1), built once and
     cached: customers are 150k fresh rows in the testdata shape
-    (Customer#%09d names, md5-derived attributes — the bench_dress
-    generator); documents are the sf0.1 corpus replicated 10× with a
-    per-replica tail mutation (replica 0 verbatim), which preserves the
-    near-dup structure while creating 10-deep clone sets — a harder skew
-    case than fresh text."""
+    (Customer#%09d names, md5-derived attributes — the generator of the
+    retired 08a9d5d:tools/bench_dress.py); documents are the sf0.1 corpus
+    replicated 10× with a per-replica tail mutation (replica 0 verbatim),
+    which preserves the near-dup structure while creating 10-deep clone
+    sets — a harder skew case than fresh text."""
     import pyspark.sql.functions as F
 
     # keyed by the source dir: an sf0.001 verify run must not reuse (or
@@ -146,8 +148,8 @@ def main() -> None:
     # thermally-loaded host; the warm floor is the steady-state number)
     from pyspark import StorageLevel
 
-    def build_pairs():
-        norm = normalize(docs_as_code_files(spark, sf_dir), prefix_len=_PREFIX)
+    def build_pairs(src: str):
+        norm = normalize(docs_as_code_files(spark, src), prefix_len=_PREFIX)
         # hot_threshold low enough that the big length-band blocks route
         # through the lossless triangle-salted join — the skew path is part
         # of the bench
@@ -166,7 +168,7 @@ def main() -> None:
 
     def run_pairs() -> None:
         spark.catalog.clearCache()
-        state["pairs"] = build_pairs()
+        state["pairs"] = build_pairs(sf_dir)
         state["n"] = state["pairs"].count()
 
     clock_min("doc_block_pairs", run_pairs)
@@ -261,14 +263,7 @@ def main() -> None:
         sf1["clusters"] = float(n1[0])
 
         def run_pairs_sf1() -> None:
-            norm = normalize(docs_as_code_files(spark, sf1_dir), prefix_len=_PREFIX)
-            slim = candidate_pairs(
-                exploded_blocks(norm, len_band=_LEN_BAND).persist(),
-                hot_threshold=50,
-            )
-            state["pairs1"] = attach_pair_payload(slim, norm, ["content_prefix"]).select(
-                "content_prefix_a", "content_prefix_b"
-            ).persist(StorageLevel.MEMORY_AND_DISK_DESER)
+            state["pairs1"] = build_pairs(sf1_dir)
             state["n1"] = state["pairs1"].count()
 
         clock1("doc_block_pairs", run_pairs_sf1)
@@ -291,8 +286,8 @@ def main() -> None:
         # pairs carry IDENTICAL payloads, so score one representative per
         # distinct (a, b) and weight by multiplicity. Same Σd — asserted.
         # Single-shot timing here is drift-exposed like every sf1 number;
-        # the controlled regime record (build/score split, k=8 vs k=64) is
-        # tools/bench_memoize.py -> BENCH/memoize_regimes.json.
+        # the retired controlled regime record (build/score split, k=8 vs
+        # k=64; 3.0x at k=8) is 08a9d5d:BENCH/memoize_regimes.json.
         def score_memoized() -> None:
             grouped = (
                 state["pairs1"]

@@ -6,8 +6,9 @@
 
 Reads the code_files table (Iceberg table name or parquet path; or generates
 the deterministic synthetic corpus), runs normalize → blocking → salted
-pairs → Arrow-batched scoring → edges → star-contraction clustering with
-per-stage checkpoints, and prints stage metrics. Resumes from the last
+pairs → Arrow-batched scoring → edges → clustering (a partition-local
+union-find pass, then star rounds across partitions) with per-stage
+checkpoints, and prints stage metrics. Resumes from the last
 completed stage on re-run (north_rule: resumable from checkpoint).
 
 Incremental mode (``--incremental-batch DAY``): the source is a delta of
@@ -42,7 +43,8 @@ def main() -> int:
                     help="a block of n > T rows is salted into ceil(n / T) pieces")
     ap.add_argument("--memoize-scoring", action="store_true",
                     help="score one representative per distinct payload tuple "
-                         "(clone-heavy corpora; BENCH/memoize_regimes.json)")
+                         "(clone-heavy corpora; measured 3.0x at k=8 in "
+                         "08a9d5d:BENCH/memoize_regimes.json)")
     ap.add_argument("--cluster-method", default="cc",
                     choices=["cc", "pivot", "star", "merge_center"],
                     help="entity formation: transitive closure (default), "

@@ -101,7 +101,8 @@ def q_min_edit_dist(spark: SparkSession, sf: str) -> DataFrame:
     """Reference ``min_edit_dist`` (closest match by bounded Levenshtein).
 
     Cross-row mutable state (src/min_edit_dist.cpp:65-72) re-expressed as a
-    map-side arg-min; probes broadcast against the candidate table.
+    map-side arg-min: ``min_edit_dist_t`` runs one ``mapInArrow`` task per
+    core, with the probes shipped to each task.
     """
     probes = spark.createDataFrame([(p,) for p in _PROBES_CUST], "probe string")
     cand = tbl(spark, sf, "customer")

@@ -12,13 +12,12 @@ ordering reproduces the reference example's ``ORDER BY EditDist, Name asc``
 tie-break.
 
 :func:`min_edit_dist_t` keeps the mutable cap and needs no cross join. The
-distinct probes are collected once and shipped to every task (as the old
-broadcast cross join did); the candidate column is round-robined to one
-partition per core, and each ``mapInArrow`` task sorts its candidates in
-Spark's order (NULL first, then bytes), scores probes × candidates on Arrow
-buffers in chunks of at most ``_CHUNK_PAIRS`` pairs, each pair capped at
-``min(k, that probe's best so far in the task)``, and emits one winner per
-probe. The arg-min then merges at most tasks × probes rows. An explicit
+distinct probes are collected once and shipped to every task; the
+candidate column is round-robined to one partition per core, and each
+``mapInArrow`` task sorts its candidates in Spark's order (NULL first, then
+bytes), scores probes × candidates on Arrow buffers in chunks of at most
+``_CHUNK_PAIRS`` pairs, each pair capped at ``min(k, that probe's best so
+far in the task)``, and emits one winner per probe. The arg-min then merges at most tasks × probes rows. An explicit
 ``repartition(n)`` is never coalesced by adaptive execution, so the scoring
 runs on every core however small the candidate table is in bytes.
 

@@ -17,11 +17,15 @@ source-code crawl) many candidate pairs carry identical
 ``(content_prefix, path_base)`` payloads, so Arrow transfer and kernel
 work shrink by the duplication factor while the cost moves to ONE
 payload-wide dedup shuffle plus one slim join-back. Measured on the
-26.8×-duplicated sf1 bench corpus (41M pairs → 1.53M distinct,
-``BENCH/memoize_regimes.json``, ``tools/bench_memoize.py``): **3.0×**
-end-to-end at the default k=8 banded kernel (30.1s → 8.8s build + 1.2s
-score) and **10.4×** at k=64 (246s → 23.6s) — the win grows with
-comparator cost, because the dedup shuffle is paid once regardless of k.
+26.8×-duplicated sf1 bench corpus (41M pairs → 1.53M distinct; the
+retired regime tool and its record are
+``08a9d5d:tools/bench_memoize.py`` and
+``08a9d5d:BENCH/memoize_regimes.json``): **3.0×** end-to-end at the
+default k=8 banded kernel (30.1s → 8.8s build + 1.2s score) and
+**10.4×** at k=64 (246s → 23.6s) — the win grows with comparator cost,
+because the dedup shuffle is paid once regardless of k. ``bench.py``'s
+sf1 ``osa_scoring`` / ``osa_scoring_memoized`` pair re-measures the k=8
+comparison.
 It is a flag, not the default, because at duplication ~1 the build
 shuffle is pure overhead; flip it when the corpus is known clone-heavy or
 a census shows distinct/total < ~0.7. Exactness relies only on sha256

@@ -159,11 +159,12 @@ def similarity_candidate_blocks(
     the same census-driven decision pattern as the salt counts in
     operators/pairs.py) and routes through the lighter one. Both families
     are lossless, so the choice never changes the join result — only its
-    cost. The regimes are real and measured (BENCH/simjoin_uniform.json):
+    cost. The regimes are real and measured (the retired record
+    08a9d5d:BENCH/simjoin_uniform.json):
 
     * **diverse gram space** (large alphabets, strict p): the rare-gram
       prefix wins by orders of magnitude — 97% candidate cut on the
-      uniform-length test corpus, 220× in tools/bench_edjoin.py.
+      uniform-length test corpus, 220× in 08a9d5d:tools/bench_edjoin.py.
     * **saturated gram space** (small alphabet, permissive p): at
       p=0.7/q=2 over 5,000 natural-text 32-char prefixes only ~106
       distinct grams ever enter a rare prefix (the "rarest" appears in

@@ -51,7 +51,8 @@ class LinkageConfig:
     # value-level memoized scoring (operators/scoring.py): score one
     # representative per distinct payload tuple. Identical scored rows
     # either way; flip on for clone-heavy corpora (measured 3×/10.4× at
-    # k=8/k=64 on 26.8× duplication — BENCH/memoize_regimes.json).
+    # k=8/k=64 on 26.8× duplication — 08a9d5d:BENCH/memoize_regimes.json;
+    # bench.py's sf1 osa_scoring_memoized re-measures k=8).
     memoize_scoring: bool = False
     # entity formation: "cc" (transitive closure — the north rule's default,
     # highest recall), "pivot" (KwikCluster correlation clustering — bridge-
