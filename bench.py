@@ -37,21 +37,29 @@ import pyspark.sql.functions as F  # noqa: E402
 
 
 def _ensure_sf1_corpus(spark, sf01_dir: str) -> str:
-    """Deterministic sf1-equivalent corpus (10× sf0.1), built once and
-    cached: customers are 150k fresh rows in the testdata shape
+    """Deterministic sf1-equivalent corpus (10× sf0.1), built once per
+    source dir and generator version and cached: customers are 150k fresh rows in the testdata shape
     (Customer#%09d names, md5-derived attributes — the generator of the
     retired 08a9d5d:tools/bench_dress.py); documents are the sf0.1 corpus
     replicated 10× with a per-replica tail mutation (replica 0 verbatim),
     which preserves the near-dup structure while creating 10-deep clone
     sets — a harder skew case than fresh text."""
+    import hashlib
+    import inspect
+
     import pyspark.sql.functions as F
 
-    # keyed by the source dir: an sf0.001 verify run must not reuse (or
-    # overwrite) the sf0.1-derived corpus the round bench measures
-    out_dir = f"/tmp/levenshtein_spark_sf1_{os.path.basename(sf01_dir.rstrip('/'))}"
+    # keyed by the source dir's absolute path and by this generator's code:
+    # a run from another source dir or after a generator edit rebuilds
+    src = os.path.abspath(sf01_dir)
+    generator = hashlib.sha256(inspect.getsource(_ensure_sf1_corpus).encode()).hexdigest()
+    key = f"{src}\n{generator}\n"
+    out_dir = f"/tmp/levenshtein_spark_sf1_{hashlib.sha256(src.encode()).hexdigest()[:16]}"
     marker = os.path.join(out_dir, "_built")
     if os.path.exists(marker):
-        return out_dir
+        with open(marker) as fh:
+            if fh.read() == key:
+                return out_dir
     seg_names = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
     n = 150_000
     ids = spark.range(1, n + 1).select(F.col("id").alias("c_custkey"))
@@ -81,7 +89,7 @@ def _ensure_sf1_corpus(spark, sf01_dir: str) -> str:
         F.length(text1).cast("long").alias("n_chars"),
     ).write.mode("overwrite").parquet(f"{out_dir}/documents.parquet")
     with open(marker, "w") as fh:
-        fh.write("ok")
+        fh.write(key)
     return out_dir
 
 

@@ -129,9 +129,7 @@ def _customer_records(spark: SparkSession, sf: str) -> DataFrame:
 
 def _customer_scored(spark: SparkSession, sf: str) -> DataFrame:
     blocks = _customer_blocks(spark, sf).transform(scoped_persist)
-    # pairs persisted: score_pairs consumes them twice (sha-equal branch ∪
-    # fuzzy branch); in the production plan this is the pairs checkpoint.
-    pairs = candidate_pairs(blocks, hot_threshold=500).transform(scoped_persist)
+    pairs = candidate_pairs(blocks, hot_threshold=500)
     fat = attach_pair_payload(
         pairs, _customer_records(spark, sf), ["sha", "path_base", "content_prefix"]
     )
@@ -139,7 +137,7 @@ def _customer_scored(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def q_linkage_score(spark: SparkSession, sf: str) -> DataFrame:
-    """Stage 3: sha short-circuit ∪ Arrow-batched bounded distance."""
+    """Stage 3: sha short-circuit + Arrow-batched bounded distance, one pass."""
     return _customer_scored(spark, sf).select(
         "id_a", "id_b", "exact_dupe",
         F.col("content_dist").cast("long").alias("content_dist"),

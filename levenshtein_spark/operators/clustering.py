@@ -172,7 +172,8 @@ def connected_components(
         else:
             path = f"{checkpoint_dir}/cc_round_{rnd:03d}"
             df.write.mode("overwrite").parquet(path)
-            df = spark.read.parquet(path)
+            # the written schema, so no job infers it from the files
+            df = spark.read.schema(df.schema).parquet(path)
         sig = obs.get
         return df, (int(sig["n"]), int(sig["h"]))
 

@@ -3,9 +3,10 @@
 Adds the derived columns every later stage keys on. All JVM column
 expressions (whole-stage codegen); the sha256 column is the per-row
 invariant required by BASELINE.json input_hint and is asserted equal at
-every checkpoint. NULL content is normalized to '' for scoring
-(reference treats NULL as empty: src/prealgorithm.h:17-23) but sha256 is
-computed on the raw value so the invariant tracks the source faithfully.
+every checkpoint. NULL content is normalized to '' (reference treats NULL
+as empty: src/prealgorithm.h:17-23), and sha256 hashes that normalized
+value too: NULL and '' content share one sha, so such a pair is an exact
+dupe.
 """
 
 from __future__ import annotations

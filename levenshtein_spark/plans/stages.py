@@ -30,9 +30,9 @@ def stage_metrics(df: DataFrame, stage: str) -> DataFrame:
     )
 
 
-def footer_metrics(wh: Warehouse, stage: str) -> DataFrame:
-    """``stage_metrics`` of a parquet stage table, read on the driver from
-    the footers of the files its write left: ``part`` is the write task's
+def footer_metrics(wh: Warehouse, stage: str) -> pa.Table:
+    """``stage_metrics`` of a parquet stage table as an Arrow table, read on
+    the driver from the footers of the files its write left: ``part`` is the write task's
     partition number (``part-NNNNN-*``), ``rows`` what that task wrote.
     No Spark job reads the table back."""
     rows: dict[int, int] = {}
@@ -40,18 +40,20 @@ def footer_metrics(wh: Warehouse, stage: str) -> DataFrame:
         part = int(os.path.basename(f).split("-")[1])
         rows[part] = rows.get(part, 0) + pq.read_metadata(f).num_rows
     parts = [part for part in sorted(rows) if rows[part]]
-    # from Arrow, not a Python list: a list becomes a Python RDD whose
-    # write costs one Python worker round-trip per slice (seconds)
-    table = pa.table({
+    return pa.table({
         "part": pa.array(parts, pa.int32()),
         "rows": pa.array([rows[part] for part in parts], pa.int64()),
         "stage": pa.array([stage] * len(parts), pa.string()),
     })
-    return wh.spark.createDataFrame(table).coalesce(1)
 
 
 def run_stage(wh: Warehouse, cfg, name: str, build) -> DataFrame:
     """Compute-or-resume one stage; persist data + metrics tables.
+
+    On a parquet warehouse the only Spark jobs are the stage's own write:
+    the read-back keeps the written schema and ``metrics_<name>`` is
+    written on the driver from the footers. A resumed stage is read back
+    with its schema inferred.
 
     ``cfg`` needs only ``force: bool`` and ``stage_times: dict`` — any plan
     config dataclass qualifies.
@@ -59,10 +61,10 @@ def run_stage(wh: Warehouse, cfg, name: str, build) -> DataFrame:
     if not cfg.force and wh.exists(name):
         return wh.read(name)
     t0 = time.perf_counter()
-    df = build()
-    wh.write(df, name)
-    out = wh.read(name)
-    metrics = stage_metrics(out, name) if wh.catalog else footer_metrics(wh, name)
-    wh.write(metrics, f"metrics_{name}")
+    out = wh.write(build(), name)
+    if wh.catalog:
+        wh.write(stage_metrics(out, name), f"metrics_{name}")
+    else:
+        wh.write_arrow(footer_metrics(wh, name), f"metrics_{name}")
     cfg.stage_times[name] = time.perf_counter() - t0
     return out

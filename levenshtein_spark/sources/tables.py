@@ -12,7 +12,11 @@ path; the interface is identical either way.
 from __future__ import annotations
 
 import os
+import shutil
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -42,11 +46,26 @@ class Warehouse:
             return self.spark.catalog.tableExists(f"{self.catalog}.{name}")
         return os.path.exists(os.path.join(self._path(name), "_SUCCESS"))
 
-    def write(self, df: DataFrame, name: str) -> None:
+    def write(self, df: DataFrame, name: str) -> DataFrame:
+        """Write ``df`` as ``name`` and return the table read back. The
+        parquet read-back passes the schema just written, so Spark runs no
+        schema-inference job over the new files."""
         if self.catalog:
             df.writeTo(f"{self.catalog}.{name}").createOrReplace()
-        else:
-            df.write.mode("overwrite").parquet(self._path(name))
+            return self.read(name)
+        df.write.mode("overwrite").parquet(self._path(name))
+        return self.spark.read.schema(df.schema).parquet(self._path(name))
+
+    def write_arrow(self, table: pa.Table, name: str) -> None:
+        """Write a small driver-side table as parquet table ``name`` without
+        a Spark job: the directory is emptied first, the data lands in one
+        ``part-00000-<uuid>.parquet`` file, and ``_SUCCESS`` comes last so
+        ``exists`` never sees a half-written table. Parquet warehouse only."""
+        path = self._path(name)
+        shutil.rmtree(path, ignore_errors=True)
+        os.makedirs(path)
+        pq.write_table(table, os.path.join(path, f"part-00000-{uuid.uuid4()}.parquet"))
+        open(os.path.join(path, "_SUCCESS"), "wb").close()
 
     def read(self, name: str) -> DataFrame:
         if self.catalog:

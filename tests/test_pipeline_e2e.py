@@ -11,9 +11,10 @@ import itertools
 
 import pytest
 
+from levenshtein_spark.operators.normalize import normalize
 from levenshtein_spark.oracle import ref_edit_distance
 from levenshtein_spark.plans.linkage import LinkageConfig, run_linkage
-from levenshtein_spark.sources.code_files import code_files_df
+from levenshtein_spark.sources.code_files import SCHEMA, code_files_df
 
 
 # Heavy module (multi-second Spark jobs / hypothesis sweeps): excluded
@@ -112,11 +113,14 @@ def test_cluster_pairwise_f1_vs_oracle(pipeline):
     assert f1 >= 0.99, (tp, fp, fn, f1)
 
 
-def test_sha_invariant_held(pipeline):
+def test_sha_invariant_held(pipeline, spark):
     out, _ = pipeline
     # run_linkage raises if sha256 drifts; assert the column exists & is full-width
     n = out["normalized"].where("length(sha) = 64").count()
     assert n == out["normalized"].count()
+    # sha hashes coalesce(content, ''): NULL and '' content are exact dupes
+    blank = spark.createDataFrame([("r", "p", "c", "py", None), ("r", "q", "c", "py", "")], SCHEMA)
+    assert len({r.sha for r in normalize(blank).collect()}) == 1
 
 
 def test_stage_metrics_cover_every_row(pipeline):

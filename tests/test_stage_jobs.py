@@ -1,0 +1,102 @@
+"""Bookkeeping fires no Spark job.
+
+A stage's read-back passes the schema its write just used, so no
+schema-inference job runs; ``metrics_<stage>`` of a parquet warehouse is
+written on the driver from the parquet footers; the closure's reliable
+round read-backs infer nothing either. Jobs are counted per job group
+through ``statusTracker().getJobIdsForGroup``.
+"""
+
+import glob
+import os
+from types import SimpleNamespace
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+from pyspark.sql.readwriter import DataFrameReader
+
+from levenshtein_spark.operators.clustering import connected_components
+from levenshtein_spark.plans.stages import run_stage
+from levenshtein_spark.sources.tables import Warehouse
+
+METRICS_SCHEMA = pa.schema([("part", pa.int32()), ("rows", pa.int64()), ("stage", pa.string())])
+
+
+def _jobs_in_group(spark, group: str) -> int:
+    sc = spark.sparkContext
+    # the status store is fed by the listener bus, asynchronously
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _run_in_group(spark, group: str, fn):
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setJobGroup(group, group)
+    try:
+        return fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+
+
+@pytest.fixture
+def parquet_reads(spark, monkeypatch):
+    """Every ``spark.read....parquet(...)`` call runs in its own job group;
+    returns a function counting the jobs those calls fired."""
+    group = f"parquet_reads_{id(monkeypatch)}"
+    parquet = DataFrameReader.parquet
+    monkeypatch.setattr(
+        DataFrameReader,
+        "parquet",
+        lambda self, *paths, **opts: _run_in_group(spark, group, lambda: parquet(self, *paths, **opts)),
+    )
+    return lambda: _jobs_in_group(spark, group)
+
+
+def test_run_stage_fires_only_its_write(spark, tmp_path, parquet_reads):
+    df = spark.range(0, 1000, 1, 4).withColumnRenamed("id", "v")
+    _run_in_group(spark, "plain_write", lambda: df.write.parquet(str(tmp_path / "plain")))
+    write_jobs = _jobs_in_group(spark, "plain_write")
+    assert write_jobs == 1
+
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    cfg = SimpleNamespace(force=False, stage_times={})
+    out = _run_in_group(spark, "stage", lambda: run_stage(wh, cfg, "t", lambda: df))
+    # the stage's own write only: the read-back and metrics_t fire nothing
+    assert _jobs_in_group(spark, "stage") == write_jobs
+    assert parquet_reads() == 0
+    assert out.schema == spark.read.parquet(str(tmp_path / "plain")).schema
+    assert out.count() == 1000
+    assert set(cfg.stage_times) == {"t"}
+
+
+def test_force_rerun_leaves_one_metrics_file(spark, tmp_path):
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    df = spark.range(0, 1000, 1, 4)
+    run_stage(wh, SimpleNamespace(force=False, stage_times={}), "t", lambda: df)
+    # a re-run whose row count differs: a stale metrics file would show
+    out = run_stage(
+        wh, SimpleNamespace(force=True, stage_times={}), "t", lambda: df.where("id % 3 = 0")
+    )
+    files = glob.glob(os.path.join(wh.root, "metrics_t", "*.parquet"))
+    assert len(files) == 1
+    assert os.path.exists(os.path.join(wh.root, "metrics_t", "_SUCCESS"))
+    table = pq.read_table(files[0])
+    assert table.schema == METRICS_SCHEMA
+    assert sum(table["rows"].to_pylist()) == out.count() == 334
+    assert table["stage"].to_pylist() == ["t"] * table.num_rows
+    assert sorted(tuple(r) for r in wh.read("metrics_t").collect()) == sorted(
+        zip(*table.to_pydict().values())
+    )
+
+
+def test_closure_read_back_fires_no_job(spark, tmp_path, parquet_reads):
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("d", "e")], "src string, dst string"
+    )
+    labels = connected_components(edges, checkpoint_dir=str(tmp_path / "cc"))
+    assert sorted(tuple(r) for r in labels.collect()) == [
+        ("a", "a"), ("b", "a"), ("c", "a"), ("d", "d"), ("e", "d"),
+    ]
+    assert parquet_reads() == 0
