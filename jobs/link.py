@@ -63,9 +63,11 @@ def main() -> int:
 
     from levenshtein_spark.plans.linkage import (
         LinkageConfig,
+        clusters_stage_name,
         run_incremental_linkage,
         run_linkage,
     )
+    from levenshtein_spark.plans.stages import footer_metrics
     from levenshtein_spark.session import get_spark
     from levenshtein_spark.sources.code_files import code_files_df
 
@@ -97,14 +99,18 @@ def main() -> int:
             batch_id=args.incremental_batch,
             base_prefix=args.base_prefix,
         )
-        count_stages = (
-            "delta_normalized", "delta_blocks", "delta_pairs",
-            "delta_scored", "delta_edges", "clusters",
-        )
+        label, prefix = "delta_", f"{args.incremental_batch}_"
     else:
         stages = run_linkage(spark, source, cfg)
-        count_stages = ("normalized", "blocks", "pairs", "scored", "edges", "clusters")
-    counts = {name: stages[name].count() for name in count_stages}
+        label = prefix = ""
+    # summary key -> stage table
+    tables = {f"{label}{t}": f"{prefix}{t}" for t in ("normalized", "blocks", "pairs", "scored", "edges")}
+    tables["clusters"] = clusters_stage_name(cfg, prefix)
+    wh = stages["warehouse"]
+    if wh.catalog:
+        counts = {k: stages[k].count() for k in tables}
+    else:  # the rows each stage's write tasks wrote, from the parquet footers
+        counts = {k: sum(footer_metrics(wh, t)["rows"].to_pylist()) for k, t in tables.items()}
     n_clusters = stages["clusters"].select("cluster_id").distinct().count()
     print(json.dumps({
         "wall_sec": round(time.perf_counter() - t0, 2),

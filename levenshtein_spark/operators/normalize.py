@@ -2,11 +2,15 @@
 
 Adds the derived columns every later stage keys on. All JVM column
 expressions (whole-stage codegen); the sha256 column is the per-row
-invariant required by BASELINE.json input_hint and is asserted equal at
-every checkpoint. NULL content is normalized to '' (reference treats NULL
-as empty: src/prealgorithm.h:17-23), and sha256 hashes that normalized
-value too: NULL and '' content share one sha, so such a pair is an exact
-dupe.
+invariant required by BASELINE.json input_hint. NULL content is normalized
+to '' (reference treats NULL as empty: src/prealgorithm.h:17-23), and
+sha256 hashes that normalized value too: NULL and '' content share one sha,
+so such a pair is an exact dupe.
+
+The linkage plan's ``normalized`` checkpoint drops ``content``
+(``plans.linkage.RECORD_COLUMNS``): no later stage reads it, and ``sha``
+carries it — the plan checks the checkpoint's ``(id, sha)`` rows against
+this function over the source.
 """
 
 from __future__ import annotations

@@ -5,11 +5,20 @@ Stage graph (SURVEY.md §3.4)::
     normalized → blocks → pairs → scored → edges(+clusters) → clusters
 
 Every stage is written to the warehouse (Iceberg or Parquet) together with a
-metrics row (row count + per-partition lineage counts + the stage's sha256
-checksum of the invariant column where applicable). A re-run skips stages
-whose table already exists — kill the job after any stage and the next run
-resumes from there (north_rule: resumable from checkpoint). ``force=True``
-recomputes everything.
+per-write-task lineage metrics table. A re-run skips stages whose table
+already exists — kill the job after any stage and the next run resumes from
+there (north_rule: resumable from checkpoint). ``force=True`` recomputes
+everything.
+
+``normalized`` holds the record projection ``RECORD_COLUMNS``: the identity
+columns and what blocking, scoring and the closure read. It does not hold
+``content``; ``sha`` (sha256 of the content) carries it. The per-row
+invariant (input_hint: ``sha256(content)`` equal end to end) is checked on
+two order-insensitive folds ``(count, bit_xor(xxhash64(id, sha)))``: one
+observed on the ``normalized`` write (or computed over the checkpoint when
+the stage resumes), one over ``normalize(source)``. A checkpoint whose
+records differ from the source — an edited sha, an added or a removed row —
+raises instead of returning stale labels.
 """
 
 from __future__ import annotations
@@ -17,7 +26,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 from levenshtein_spark.operators.blocking import exploded_blocks
 from levenshtein_spark.operators.clustering import (
@@ -36,6 +45,24 @@ from levenshtein_spark.operators.scoring import edges as edges_of
 from levenshtein_spark.operators.scoring import score_pairs
 from levenshtein_spark.plans.stages import run_stage as _stage
 from levenshtein_spark.sources.tables import Warehouse
+
+
+# The columns of a ``normalized`` stage: identity (repo, path, commit, id),
+# blocking (lang, content_len, path_tokens) and scoring (sha, path_base,
+# content_prefix). ``content`` is read only from the source, by ``normalize``.
+RECORD_COLUMNS = (
+    "repo", "path", "commit", "lang", "id", "sha",
+    "content_len", "content_prefix", "path_base", "path_tokens",
+)
+
+
+def _fold_columns():
+    # (count, XOR of the row hashes): order-insensitive, and the XOR cannot
+    # overflow under ANSI mode (the closure's round signature is the same fold)
+    return (
+        F.count(F.lit(1)).alias("n"),
+        F.coalesce(F.bit_xor(F.xxhash64("id", "sha")), F.lit(0)).alias("h"),
+    )
 
 
 @dataclass
@@ -67,7 +94,7 @@ class LinkageConfig:
     stage_times: dict = field(default_factory=dict)
 
 
-def _clusters_stage_name(cfg: LinkageConfig, prefix: str = "") -> str:
+def clusters_stage_name(cfg: LinkageConfig, prefix: str = "") -> str:
     # cluster_method is the first config knob that CHANGES stage output, so
     # it must be part of the stage identity — otherwise resuming a
     # checkpoint dir with a different method would silently return the
@@ -90,11 +117,68 @@ def _form_entities(cfg: LinkageConfig, ids, edges, cc_rounds_dir: str):
     raise ValueError(f"unknown cluster_method: {method!r}")
 
 
+def _records(source: DataFrame, cfg: LinkageConfig) -> DataFrame:
+    return normalize(source, cfg.prefix_len).select(*RECORD_COLUMNS)
+
+
+def _observed(obs: Observation) -> tuple[int, int]:
+    return int(obs.get["n"]), int(obs.get["h"])
+
+
+def _fold(df: DataFrame) -> tuple[int, int]:
+    """The fold of ``df`` in one Spark job: an observed no-op write."""
+    obs = Observation()
+    df.select("id", "sha").observe(obs, *_fold_columns()).write.format("noop").mode("overwrite").save()
+    return _observed(obs)
+
+
+def _records_stage(wh: Warehouse, cfg: LinkageConfig, name: str, records: DataFrame):
+    """The records stage ``name``, checked against ``records``: returns the
+    stage and None when both fold the same, else the number of ids only in
+    the stage, only in ``records``, and with another sha, counted by a join
+    that runs only on a mismatch. Read back as ``RECORD_COLUMNS``, also from
+    a checkpoint written with more columns.
+
+    A fresh write observes its fold in its own job. A resumed stage never
+    runs the observed frame (``Observation.get`` would block), so its fold
+    is one job over the checkpoint."""
+    obs = Observation()
+    built = []
+
+    def build() -> DataFrame:
+        built.append(name)
+        return records.observe(obs, *_fold_columns())
+
+    out = _stage(wh, cfg, name, build).select(*RECORD_COLUMNS)
+    if (_observed(obs) if built else _fold(out)) == _fold(records):
+        return out, None
+    joined = out.select("id", "sha").join(
+        records.select("id", F.col("sha").alias("fresh_sha")), "id", "full_outer"
+    )
+    row = joined.agg(
+        F.count_if(F.col("fresh_sha").isNull()),
+        F.count_if(F.col("sha").isNull()),
+        F.count_if(F.col("sha") != F.col("fresh_sha")),
+    ).first()
+    return out, (int(row[0]), int(row[1]), int(row[2]))
+
+
 def run_linkage(spark: SparkSession, source: DataFrame, cfg: LinkageConfig) -> dict:
     """Run (or resume) the full pipeline; returns handles to every stage."""
     wh = Warehouse(spark, cfg.checkpoint_dir)
 
-    normalized = _stage(wh, cfg, "normalized", lambda: normalize(source, cfg.prefix_len))
+    # Per-row invariant (input_hint): the checkpointed records are the
+    # source's, sha256(content) included; checked before any later stage
+    # resumes from them.
+    normalized, drift = _records_stage(wh, cfg, "normalized", _records(source, cfg))
+    if drift:
+        gone, new, changed = drift
+        raise AssertionError(
+            "sha256 invariant violated: the normalized checkpoint differs from the "
+            f"source ({gone} ids gone, {new} new, {changed} with another sha). Re-run "
+            "with force=True to rebuild from this source, or link new records "
+            "against the checkpoint with run_incremental_linkage."
+        )
     blocks = _stage(
         wh, cfg, "blocks", lambda: exploded_blocks(normalized, len_band=cfg.len_band)
     )
@@ -124,25 +208,11 @@ def run_linkage(spark: SparkSession, source: DataFrame, cfg: LinkageConfig) -> d
     clusters = _stage(
         wh,
         cfg,
-        _clusters_stage_name(cfg),
+        clusters_stage_name(cfg),
         lambda: _form_entities(
             cfg, normalized.select("id"), edges, f"{cfg.checkpoint_dir}/cc_rounds"
         ),
     )
-
-    # Per-row invariant (input_hint): sha256(content) must survive the
-    # pipeline unchanged — recompute from source and anti-join.
-    drift = (
-        normalized.select("id", "sha")
-        .join(
-            normalize(source, cfg.prefix_len).select("id", F.col("sha").alias("sha2")),
-            "id",
-        )
-        .where(F.col("sha") != F.col("sha2"))
-        .count()
-    )
-    if drift:
-        raise AssertionError(f"sha256 invariant violated for {drift} rows")
 
     return {
         "normalized": normalized,
@@ -187,9 +257,12 @@ def run_incremental_linkage(
 
     * delta ids must be disjoint from base ids (new records only — an
       overlapping id would duplicate pairs and labels);
-    * a resumed ``batch_id`` must carry the SAME delta id set it was first
+    * a resumed ``batch_id`` must carry the SAME delta records it was first
       run with (fixed stage names would otherwise silently return the first
-      batch's tables for a different delta).
+      batch's tables for a different delta): the delta's records fold the
+      same way as ``{batch_id}_normalized``, the batch plan's invariant.
+
+    The ``normalized`` tables hold ``RECORD_COLUMNS`` only.
     """
     wh = Warehouse(spark, cfg.checkpoint_dir)
     base_tables = [f"{base_prefix}{t}" for t in ("normalized", "blocks", "edges")]
@@ -198,11 +271,12 @@ def run_incremental_linkage(
             raise ValueError(
                 f"base stage '{t}' missing from {cfg.checkpoint_dir}; run run_linkage first"
             )
-    base_norm = wh.read(base_tables[0])
+    # an explicit projection: a base written with ``content`` still unions
+    base_norm = wh.read(base_tables[0]).select(*RECORD_COLUMNS)
     base_blocks = wh.read(base_tables[1])
     base_edges = wh.read(base_tables[2]).select("src", "dst")
 
-    fresh_norm = normalize(delta_source, cfg.prefix_len)
+    fresh_norm = _records(delta_source, cfg)
     overlap = fresh_norm.select("id").join(base_norm.select("id"), "id").count()
     if overlap:
         raise ValueError(
@@ -210,18 +284,16 @@ def run_incremental_linkage(
             "takes new records only (re-run the batch plan for updates)"
         )
 
-    resumed = wh.exists(f"{batch_id}_normalized")
-    delta_norm = _stage(wh, cfg, f"{batch_id}_normalized", lambda: fresh_norm)
-    if resumed:
-        stale = (
-            delta_norm.select("id").join(fresh_norm.select("id"), "id", "left_anti").count()
-            + fresh_norm.select("id").join(delta_norm.select("id"), "id", "left_anti").count()
-        )
-        if stale:
+    # same per-row invariant as the batch plan, over the delta only
+    delta_norm, drift = _records_stage(wh, cfg, f"{batch_id}_normalized", fresh_norm)
+    if drift:
+        gone, new, changed = drift
+        if gone or new:
             raise ValueError(
                 f"batch_id '{batch_id}' was already run with a different delta "
-                f"({stale} ids differ) — use a fresh batch_id per batch"
+                f"({gone + new} ids differ) — use a fresh batch_id per batch"
             )
+        raise AssertionError(f"sha256 invariant violated for {changed} delta rows")
     delta_blocks = _stage(
         wh,
         cfg,
@@ -257,7 +329,7 @@ def run_incremental_linkage(
     clusters = _stage(
         wh,
         cfg,
-        _clusters_stage_name(cfg, prefix=f"{batch_id}_"),
+        clusters_stage_name(cfg, prefix=f"{batch_id}_"),
         lambda: _form_entities(
             cfg,
             all_norm.select("id"),
@@ -271,16 +343,6 @@ def run_incremental_linkage(
         wh, cfg, f"{batch_id}_all_blocks", lambda: base_blocks.unionByName(delta_blocks)
     )
     merged_edges = _stage(wh, cfg, f"{batch_id}_all_edges", lambda: all_edges)
-
-    # same per-row invariant as the batch plan, over the delta only
-    drift = (
-        delta_norm.select("id", "sha")
-        .join(fresh_norm.select("id", F.col("sha").alias("sha2")), "id")
-        .where(F.col("sha") != F.col("sha2"))
-        .count()
-    )
-    if drift:
-        raise AssertionError(f"sha256 invariant violated for {drift} delta rows")
 
     return {
         "delta_normalized": delta_norm,

@@ -47,24 +47,33 @@ def footer_metrics(wh: Warehouse, stage: str) -> pa.Table:
     })
 
 
+def _write_metrics(wh: Warehouse, name: str, out: DataFrame) -> None:
+    if wh.catalog:
+        wh.write(stage_metrics(out, name), f"metrics_{name}")
+    else:
+        wh.write_arrow(footer_metrics(wh, name), f"metrics_{name}")
+
+
 def run_stage(wh: Warehouse, cfg, name: str, build) -> DataFrame:
     """Compute-or-resume one stage; persist data + metrics tables.
 
     On a parquet warehouse the only Spark jobs are the stage's own write:
     the read-back keeps the written schema and ``metrics_<name>`` is
     written on the driver from the footers. A resumed stage is read back
-    with its schema inferred.
+    with its schema inferred; if its ``metrics_<name>`` is missing (a kill
+    between the two writes), it is rebuilt, on a parquet warehouse from the
+    footers with no Spark job.
 
     ``cfg`` needs only ``force: bool`` and ``stage_times: dict`` — any plan
     config dataclass qualifies.
     """
     if not cfg.force and wh.exists(name):
-        return wh.read(name)
+        out = wh.read(name)
+        if not wh.exists(f"metrics_{name}"):
+            _write_metrics(wh, name, out)
+        return out
     t0 = time.perf_counter()
     out = wh.write(build(), name)
-    if wh.catalog:
-        wh.write(stage_metrics(out, name), f"metrics_{name}")
-    else:
-        wh.write_arrow(footer_metrics(wh, name), f"metrics_{name}")
+    _write_metrics(wh, name, out)
     cfg.stage_times[name] = time.perf_counter() - t0
     return out

@@ -25,6 +25,8 @@ def _run_job(monkeypatch, capsys, module, argv):
 def test_link_job_synthetic(spark, tmp_path, monkeypatch, capsys):
     import jobs.link as job
 
+    from levenshtein_spark.sources.tables import Warehouse
+
     rep = _run_job(
         monkeypatch, capsys, job,
         ["link", "--synthetic-clusters", "40", "--checkpoint", str(tmp_path / "wh")],
@@ -32,6 +34,9 @@ def test_link_job_synthetic(spark, tmp_path, monkeypatch, capsys):
     assert rep["n_clusters"] > 0
     assert rep["stage_rows"]["normalized"] > 0
     assert set(rep["stage_times"])  # fresh run computed stages
+    # stage_rows come from the parquet footers: they equal the tables' counts
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    assert rep["stage_rows"] == {t: wh.read(t).count() for t in rep["stage_rows"]}
 
 
 def test_curate_job_batch_and_incremental(spark, tmp_path, monkeypatch, capsys):

@@ -7,14 +7,19 @@ then gold clusters = union-find closure. The pipeline must reproduce both the
 pair labels and the co-clustering relation.
 """
 
+import glob
 import itertools
+import os
+import shutil
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 from levenshtein_spark.operators.normalize import normalize
 from levenshtein_spark.oracle import ref_edit_distance
-from levenshtein_spark.plans.linkage import LinkageConfig, run_linkage
-from levenshtein_spark.sources.code_files import SCHEMA, code_files_df
+from levenshtein_spark.plans.linkage import RECORD_COLUMNS, LinkageConfig, run_linkage
+from levenshtein_spark.sources.code_files import SCHEMA, code_files_df, generate_cluster_rows
 
 
 # Heavy module (multi-second Spark jobs / hypothesis sweeps): excluded
@@ -136,6 +141,25 @@ def test_stage_metrics_cover_every_row(pipeline):
         assert sum(r.rows for r in metrics) == out[stage].count(), stage
 
 
+def test_resume_repairs_missing_metrics(pipeline, spark):
+    """A kill between a stage's data write and its metrics write leaves the
+    data with ``_SUCCESS`` and no ``metrics_<stage>``; the resume rebuilds
+    the metrics table and recomputes no stage."""
+    out, cfg = pipeline
+    shutil.rmtree(os.path.join(cfg.checkpoint_dir, "metrics_scored"))
+    cfg2 = LinkageConfig(
+        checkpoint_dir=cfg.checkpoint_dir,
+        k_content=cfg.k_content,
+        hot_threshold=cfg.hot_threshold,
+    )
+    out2 = run_linkage(spark, code_files_df(spark, num_clusters=60, seed=42), cfg2)
+    assert cfg2.stage_times == {}
+    wh = out2["warehouse"]
+    for stage in ("normalized", "blocks", "pairs", "scored", "edges", "clusters"):
+        rows = [r.rows for r in wh.read(f"metrics_{stage}").collect()]
+        assert sum(rows) == out2[stage].count(), stage
+
+
 def test_resume_skips_stages_and_is_identical(pipeline, spark):
     out, cfg = pipeline
     before = {r.id: r.cluster_id for r in out["clusters"].collect()}
@@ -149,6 +173,48 @@ def test_resume_skips_stages_and_is_identical(pipeline, spark):
     after = {r.id: r.cluster_id for r in out2["clusters"].collect()}
     assert before == after
     assert cfg2.stage_times == {}, "resume must not recompute any stage"
+
+
+def _corpus(spark, stop: int, start: int = 0, seed: int = 5):
+    """Rows ``start:stop`` of the generator's clusters, in order."""
+    rows, cid = [], 0
+    while len(rows) < stop:
+        rows += [tuple(r.values()) for r in generate_cluster_rows(cid, seed)]
+        cid += 1
+    return spark.createDataFrame(rows[start:stop], SCHEMA)
+
+
+@pytest.fixture(scope="module")
+def small_ckpt(spark, tmp_path_factory):
+    """A finished checkpoint of a 36-row source."""
+    ckpt = str(tmp_path_factory.mktemp("small"))
+    run_linkage(spark, _corpus(spark, 36), LinkageConfig(checkpoint_dir=ckpt))
+    return ckpt
+
+
+def test_resume_with_grown_source_raises(spark, small_ckpt):
+    """Resuming a 36-row checkpoint with a 64-row source raises before any
+    stage resumes: added rows change no sha, yet the labels would be stale."""
+    cfg = LinkageConfig(checkpoint_dir=small_ckpt)
+    with pytest.raises(AssertionError, match="28 new.*force=True.*run_incremental_linkage"):
+        run_linkage(spark, _corpus(spark, 64), cfg)
+    assert cfg.stage_times == {}
+
+
+def test_resume_with_edited_sha_raises(spark, small_ckpt, tmp_path):
+    """One sha rewritten in the ``normalized`` checkpoint fails the invariant."""
+    ckpt = str(tmp_path / "ckpt")
+    shutil.copytree(small_ckpt, ckpt)
+    part = sorted(glob.glob(os.path.join(ckpt, "normalized", "part-*.parquet")))[0]
+    table = pq.read_table(part)
+    sha = table["sha"].to_pylist()
+    sha[0] = "0" * 64
+    i = table.schema.get_field_index("sha")
+    pq.write_table(table.set_column(i, "sha", pa.array(sha, pa.string())), part)
+    # Hadoop's local file system checks a file against its .crc sidecar
+    os.remove(os.path.join(os.path.dirname(part), f".{os.path.basename(part)}.crc"))
+    with pytest.raises(AssertionError, match="sha256 invariant violated.*1 with another sha"):
+        run_linkage(spark, _corpus(spark, 36), LinkageConfig(checkpoint_dir=ckpt))
 
 
 def test_incremental_matches_full_batch(spark, tmp_path):
@@ -280,3 +346,21 @@ def test_cluster_method_pivot(spark, tmp_path):
     nbrs = set(edges) | {(b, a) for a, b in edges}
     for v, p in got.items():
         assert v == p or (v, p) in nbrs
+
+
+def test_incremental_reads_base_normalized_with_content(spark, small_ckpt, tmp_path):
+    """A base ``normalized`` written with every source column (a warehouse
+    of an earlier version of the plan) still unions with the slim delta
+    records, and the merged table the next batch reads is slim."""
+    from levenshtein_spark.plans.linkage import run_incremental_linkage
+
+    full = run_linkage(spark, _corpus(spark, 48), LinkageConfig(checkpoint_dir=str(tmp_path / "full")))
+    want = {r.id: r.cluster_id for r in full["clusters"].collect()}
+    ckpt = str(tmp_path / "incr")
+    shutil.copytree(small_ckpt, ckpt)
+    normalize(_corpus(spark, 36)).write.mode("overwrite").parquet(os.path.join(ckpt, "normalized"))
+
+    out = run_incremental_linkage(spark, _corpus(spark, 48, 36), LinkageConfig(checkpoint_dir=ckpt))
+    assert {r.id: r.cluster_id for r in out["clusters"].collect()} == want
+    assert tuple(out["all_normalized"].columns) == RECORD_COLUMNS
+    assert "content" not in out["warehouse"].read("delta_all_normalized").columns

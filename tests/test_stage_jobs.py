@@ -3,7 +3,8 @@
 A stage's read-back passes the schema its write just used, so no
 schema-inference job runs; ``metrics_<stage>`` of a parquet warehouse is
 written on the driver from the parquet footers; the closure's reliable
-round read-backs infer nothing either. Jobs are counted per job group
+round read-backs infer nothing either. The linkage plan's sha256
+invariant costs one job on a fresh run. Jobs are counted per job group
 through ``statusTracker().getJobIdsForGroup``.
 """
 
@@ -16,8 +17,10 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql.readwriter import DataFrameReader
 
+import levenshtein_spark.plans.linkage as linkage
 from levenshtein_spark.operators.clustering import connected_components
 from levenshtein_spark.plans.stages import run_stage
+from levenshtein_spark.sources.code_files import code_files_df
 from levenshtein_spark.sources.tables import Warehouse
 
 METRICS_SCHEMA = pa.schema([("part", pa.int32()), ("rows", pa.int64()), ("stage", pa.string())])
@@ -100,3 +103,29 @@ def test_closure_read_back_fires_no_job(spark, tmp_path, parquet_reads):
         ("a", "a"), ("b", "a"), ("c", "a"), ("d", "d"), ("e", "d"),
     ]
     assert parquet_reads() == 0
+
+
+@pytest.mark.slow
+def test_linkage_invariant_fires_one_job(spark, tmp_path, monkeypatch):
+    """On a fresh run the invariant's fold over the stored records is
+    observed on the ``normalized`` write, which fires only its own job, and
+    the fold over the source is one job."""
+    src = code_files_df(spark, num_clusters=12, seed=3)
+    cfg = linkage.LinkageConfig(checkpoint_dir=str(tmp_path / "wh"))
+    _run_in_group(
+        spark, "plain_records", lambda: linkage._records(src, cfg).write.parquet(str(tmp_path / "plain"))
+    )
+    plain_jobs = _jobs_in_group(spark, "plain_records")
+    assert plain_jobs == 1
+    stage = linkage._stage
+    monkeypatch.setattr(
+        linkage,
+        "_stage",
+        lambda wh, cfg, name, build: _run_in_group(
+            spark, f"stage_{name}", lambda: stage(wh, cfg, name, build)
+        ),
+    )
+    # every job outside a stage: the plan's own checks
+    _run_in_group(spark, "checks", lambda: linkage.run_linkage(spark, src, cfg))
+    assert _jobs_in_group(spark, "stage_normalized") == plain_jobs
+    assert _jobs_in_group(spark, "checks") == 1
