@@ -217,8 +217,8 @@ def q_top_k_neighbors(spark: SparkSession, sf: str) -> DataFrame:
     records = tbl(spark, sf, "customer").select(
         F.col("c_custkey").alias("id"), F.col("c_name").alias("name")
     )
-    # persisted: blocks feed the pair operator four ways (census + hot split
-    # + both join sides); scored feeds BOTH branches of the symmetrizing
+    # persisted: blocks feed the pair operator three ways (census + both
+    # join sides); scored feeds BOTH branches of the symmetrizing
     # union — without it the salted join and the Arrow scoring run twice
     blocks = _customer_blocks(spark, sf).transform(scoped_persist)
     pairs = candidate_pairs(blocks, hot_threshold=500).drop("n_keys")
@@ -762,9 +762,9 @@ def q_pprl_bloom_match(spark: SparkSession, sf: str) -> DataFrame:
     """
     c = tbl(spark, sf, "customer")
     enc = pprl_encode(c.select(F.col("c_custkey").alias("id"), F.col("c_name").alias("name")))
-    # persisted: candidate_pairs consumes the blocks lineage ~6 ways (census,
-    # hot-key tag, both self-join sides, hot left/right) — same reason every
-    # sibling call site persists
+    # persisted: candidate_pairs reads the blocks lineage three ways (the
+    # census and the two join sides) — same reason every sibling call site
+    # persists
     blocks = _customer_blocks(spark, sf).transform(scoped_persist)
     pairs = candidate_pairs(blocks, hot_threshold=500).drop("n_keys")
     fat = attach_pair_payload(pairs, enc, [f"bloom{j}" for j in range(_PPRL_WORDS)])

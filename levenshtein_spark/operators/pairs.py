@@ -3,9 +3,10 @@
 A blocked join is a shuffle on ``block_key``; one hot key (a hot repo, a
 common length band) turns into a straggler task with O(n²) pair fan-out.
 Every candidate-pair operator here is a thin aggregation over one of two
-private cores, which hold the salt rules and nothing else. Both split
-blocks by a size census and broadcast the (tiny) hot-key set, with its
-salt count, back onto the rows.
+private cores, which hold the salt rules and nothing else. Both take a size
+census, broadcast the (tiny) hot-key set with its salt count back onto the
+rows, and run ONE salted join: a key missing from the hot set takes
+``S = 1``, and the salted join with one salt is the plain equi-join.
 
 **One salting rule** (:func:`_salt_count`). ``hot_threshold`` ``T`` is the
 most work one key may put on one task, measured in the census quantity of
@@ -16,19 +17,21 @@ there is no separate salt count to tune, and a giant block gets a wide
 split while a merely-warm one gets two or three salts.
 
 * :func:`_self_meetings` — one record set joined with itself; the quantity
-  is the block's row count ``n``. Normal blocks take a plain equi self-join
-  with ``id_a < id_b``. Hot blocks take a *triangle salted join*: each row
-  gets a deterministic salt ``s = hash(id) % S``, the left side is
-  replicated to salts ``t ∈ [s, S)`` and joined on ``(block_key, t ==
-  salt_right)``. Exactly once per (block, unordered pair): for ``s_a < s_b``
-  only the ``a``-as-left replica meets ``b``; equal salts meet in both
-  directions, so the tie breaks by ``id_l < id_r``. The work of a block
-  spreads over S·(S+1)/2 partitions instead of one.
+  is the block's row count ``n``. A *triangle salted join*: each row gets a
+  deterministic salt ``s = hash(id) % S``, the left side is replicated to
+  salts ``t ∈ [s, S)`` and joined on ``(block_key, t == salt_right)``.
+  Exactly once per (block, unordered pair): for ``s_a < s_b`` only the
+  ``a``-as-left replica meets ``b``; equal salts meet in both directions,
+  so the tie breaks by ``id_l < id_r``. The work of a hot block spreads
+  over S·(S+1)/2 partitions instead of one. A cold block has ``S = 1``:
+  every salt is 0, nothing is replicated, and the join is the plain
+  self-join with ``id_l < id_r``.
 * :func:`_lr_meetings` — two record sets (left × right); the quantity is
-  the key's fan-out ``n_l·n_r``. Hot keys salt their left rows with
-  ``hash(id_l) % S`` and replicate their right rows to all S salts: every
-  cross pair meets exactly once, spread over S partitions. ``S`` is also
-  capped at ``n_l``, past which extra salts only add right-side replicas.
+  the key's fan-out ``n_l·n_r``. Left rows take the salt ``hash(id_l) % S``
+  and right rows are replicated to all S salts: every cross pair meets
+  exactly once, spread over S partitions. ``S`` is also capped at ``n_l``,
+  past which extra salts only add right-side replicas. A cold key has
+  ``S = 1``: both sides carry salt 0 and the join is the plain equi-join.
 
 Both are lossless — unlike sub-block salting there is no recall hit, and
 the salt count only moves work between tasks, never changes the pair set —
@@ -38,8 +41,8 @@ A core returns one row per key meeting; extra block columns ride along as
 per-(key, id) payload for in-join predicates, suffixed ``_a``/``_b`` (self)
 or ``_l``/``_r`` (bipartite), and follow their ids through canonicalisation.
 
-**The pair stream is slim**: only ``(id_a, id_b)`` flows through the join,
-union, and dedup shuffles — at web scale the pair count is a multiple of the
+**The pair stream is slim**: only ``(id_a, id_b)`` flows through the join
+and dedup shuffles — at web scale the pair count is a multiple of the
 row count, so every byte of payload carried per pair multiplies the dominant
 shuffle. Scoring re-attaches payload columns from the (much smaller) per-id
 record table via ``attach_pair_payload``.
@@ -49,8 +52,6 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
-
-from levenshtein_spark.session import scoped_persist
 
 DEFAULT_HOT_THRESHOLD = 2000
 _MAX_SALTS = 256
@@ -80,7 +81,8 @@ def _self_meetings(blocks: DataFrame, hot_threshold: int) -> DataFrame:
     """``(block_key, id, extra...)`` → one row per (block key, unordered
     pair) meeting: ``(id_a < id_b, extra_a..., extra_b...)``. A block of
     ``n > hot_threshold`` rows takes ``S = min(ceil(n / T), _MAX_SALTS)``
-    triangle salts."""
+    triangle salts; every other block takes ``S = 1``, where the triangle
+    join is the plain self-join on ``id_l < id_r``."""
     ids_x = _id_cols(blocks)
     extras = ids_x[1:]
     slim = blocks.select("block_key", *ids_x)
@@ -90,37 +92,23 @@ def _self_meetings(blocks: DataFrame, hot_threshold: int) -> DataFrame:
         .where(n > hot_threshold)
         .select("block_key", _salt_count(n, hot_threshold).alias("n_salts"))
     )
-    # The tagged stream feeds BOTH branch joins (normal self-join + the
-    # salted triangle, each of which reads it twice as its own two sides);
-    # without a persist the census + broadcast tag re-runs per read even
-    # when the caller persisted `blocks`. Slim (key, id, n_salts) rows, so
-    # the cache is the size of the exploded block stream — measured 1.5x
-    # on the sf0.1 doc corpus (5.6 -> 3.7s).
-    tagged = slim.join(F.broadcast(hot_keys), "block_key", "left").transform(
-        scoped_persist
+    salted = (
+        slim.join(F.broadcast(hot_keys), "block_key", "left")
+        .withColumn("n_salts", F.coalesce("n_salts", F.lit(1)))
+        .withColumn("salt", F.pmod(F.xxhash64("id"), F.col("n_salts")).cast("int"))
     )
-
-    normal = tagged.where(F.col("n_salts").isNull()).drop("n_salts")
-    pn = (
-        _suffix(normal, ids_x, "_a")
-        .join(_suffix(normal, ids_x, "_b"), "block_key")
-        .where(F.col("id_a") < F.col("id_b"))
-    )
-
-    hot = tagged.where(F.col("n_salts").isNotNull())
-    hot_s = hot.withColumn("salt", F.pmod(F.xxhash64("id"), F.col("n_salts")).cast("int"))
     left = _suffix(
-        hot_s.withColumn("salt_t", F.explode(F.sequence(F.col("salt"), F.col("n_salts") - 1)))
+        salted.withColumn("salt_t", F.explode(F.sequence(F.col("salt"), F.col("n_salts") - 1)))
         .withColumnRenamed("salt", "salt_l")
         .drop("n_salts"),
         ids_x,
         "_l",
     )
-    right = _suffix(hot_s.drop("n_salts").withColumnRenamed("salt", "salt_t"), ids_x, "_r")
-    met = (
-        left.join(right, ["block_key", "salt_t"])
-        .where((F.col("salt_l") != F.col("salt_t")) | (F.col("id_l") < F.col("id_r")))
-        .where(F.col("id_l") != F.col("id_r"))
+    right = _suffix(salted.drop("n_salts").withColumnRenamed("salt", "salt_t"), ids_x, "_r")
+    # equal salts meet in both directions (and a row meets itself): the
+    # tie breaks by id_l < id_r
+    met = left.join(right, ["block_key", "salt_t"]).where(
+        (F.col("salt_l") != F.col("salt_t")) | (F.col("id_l") < F.col("id_r"))
     )
     swap = F.col("id_l") > F.col("id_r")
     canon = [
@@ -130,16 +118,15 @@ def _self_meetings(blocks: DataFrame, hot_threshold: int) -> DataFrame:
     for c in extras:
         canon.append(F.when(swap, F.col(f"{c}_r")).otherwise(F.col(f"{c}_l")).alias(f"{c}_a"))
         canon.append(F.when(swap, F.col(f"{c}_l")).otherwise(F.col(f"{c}_r")).alias(f"{c}_b"))
-
-    cols = ["id_a", "id_b"] + [f"{c}{s}" for c in extras for s in ("_a", "_b")]
-    return pn.select(*cols).unionByName(met.select(*canon))
+    return met.select(*canon)
 
 
 def _lr_meetings(blocks_l: DataFrame, blocks_r: DataFrame, hot_threshold: int) -> DataFrame:
     """Two ``(block_key, id, extra...)`` tables → one row per (block key,
     cross pair) meeting: ``(id_l, id_r, extra_l..., extra_r...)``. A key of
     fan-out ``n_l·n_r > hot_threshold`` takes
-    ``S = min(ceil(n_l·n_r / T), n_l, _MAX_SALTS)`` salts."""
+    ``S = min(ceil(n_l·n_r / T), n_l, _MAX_SALTS)`` salts; every other key
+    takes ``S = 1``, where the salted join is the plain equi-join."""
     ex_l, ex_r = _id_cols(blocks_l), _id_cols(blocks_r)
     sl = _suffix(blocks_l.select("block_key", *ex_l), ex_l, "_l")
     sr = _suffix(blocks_r.select("block_key", *ex_r), ex_r, "_r")
@@ -148,29 +135,18 @@ def _lr_meetings(blocks_l: DataFrame, blocks_r: DataFrame, hot_threshold: int) -
         .join(sr.groupBy("block_key").count().withColumnRenamed("count", "n_r"), "block_key")
     )
     fan_out = F.col("n_l") * F.col("n_r")
-    hot_keys = sizes.where(fan_out > hot_threshold).select(
+    hot_keys = F.broadcast(sizes.where(fan_out > hot_threshold).select(
         "block_key", _salt_count(fan_out, hot_threshold, F.col("n_l")).alias("n_salts")
+    ))
+    n_salts = F.coalesce("n_salts", F.lit(1))
+    cols_l, cols_r = sl.columns[1:], sr.columns[1:]
+    hl = sl.join(hot_keys, "block_key", "left").select(
+        "block_key", *cols_l, F.pmod(F.xxhash64("id_l"), n_salts).cast("int").alias("salt")
     )
-    # each side feeds its normal and its hot branch
-    tl = sl.join(F.broadcast(hot_keys), "block_key", "left").transform(scoped_persist)
-    tr = sr.join(F.broadcast(hot_keys), "block_key", "left").transform(scoped_persist)
-
-    pn = (
-        tl.where(F.col("n_salts").isNull()).drop("n_salts")
-        .join(tr.where(F.col("n_salts").isNull()).drop("n_salts"), "block_key")
+    hr = sr.join(hot_keys, "block_key", "left").select(
+        "block_key", *cols_r, F.explode(F.sequence(F.lit(0), n_salts - 1)).alias("salt")
     )
-    hl = tl.where(F.col("n_salts").isNotNull()).withColumn(
-        "salt", F.pmod(F.xxhash64("id_l"), F.col("n_salts")).cast("int")
-    ).drop("n_salts")
-    hr = (
-        tr.where(F.col("n_salts").isNotNull())
-        .withColumn("salt", F.explode(F.sequence(F.lit(0), F.col("n_salts") - 1)))
-        .drop("n_salts")
-    )
-    ph = hl.join(hr, ["block_key", "salt"])
-
-    cols = [f"{c}_l" for c in ex_l] + [f"{c}_r" for c in ex_r]
-    return pn.select(*cols).unionByName(ph.select(*cols))
+    return hl.join(hr, ["block_key", "salt"]).select(*cols_l, *cols_r)
 
 
 def candidate_pairs(

@@ -60,9 +60,9 @@ def run_stage(wh: Warehouse, cfg, name: str, build) -> DataFrame:
     On a parquet warehouse the only Spark jobs are the stage's own write:
     the read-back keeps the written schema and ``metrics_<name>`` is
     written on the driver from the footers. A resumed stage is read back
-    with its schema inferred; if its ``metrics_<name>`` is missing (a kill
-    between the two writes), it is rebuilt, on a parquet warehouse from the
-    footers with no Spark job.
+    with the schema stored in its footers, so it fires no Spark job; if its
+    ``metrics_<name>`` is missing (a kill between the two writes), it is
+    rebuilt, on a parquet warehouse from the footers with no Spark job.
 
     ``cfg`` needs only ``force: bool`` and ``stage_times: dict`` — any plan
     config dataclass qualifies.

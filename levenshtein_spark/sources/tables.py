@@ -11,6 +11,8 @@ path; the interface is identical either way.
 
 from __future__ import annotations
 
+import glob
+import json
 import os
 import shutil
 import uuid
@@ -18,6 +20,17 @@ import uuid
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import StructType
+
+
+def footer_schema(path: str) -> StructType:
+    """The schema of the parquet table at ``path``, from one part file's
+    footer: the Spark schema its writer stored, else (``write_arrow``
+    files) its Arrow schema. A read given it runs no inference job."""
+    schema = pq.read_schema(glob.glob(os.path.join(path, "part-*.parquet"))[0])
+    spark_json = (schema.metadata or {}).get(b"org.apache.spark.sql.parquet.row.metadata")
+    return StructType.fromJson(json.loads(spark_json)) if spark_json else from_arrow_schema(schema)
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -68,9 +81,11 @@ class Warehouse:
         open(os.path.join(path, "_SUCCESS"), "wb").close()
 
     def read(self, name: str) -> DataFrame:
+        """Table ``name``; parquet is read with its :func:`footer_schema`."""
         if self.catalog:
             return self.spark.read.table(f"{self.catalog}.{name}")
-        return self.spark.read.parquet(self._path(name))
+        path = self._path(name)
+        return self.spark.read.schema(footer_schema(path)).parquet(path)
 
     def write_bucketed(
         self,

@@ -344,3 +344,49 @@ def test_annotated_selective_predicate_matches_bruteforce(spark):
     }
     assert got_lr == exp
     assert exp < shared
+
+
+def _plan_nodes(df) -> list:
+    """Every node of ``df``'s executed physical plan, run first so AQE's
+    plan is final, descending into its query stages."""
+    df.write.format("noop").mode("overwrite").save()
+    stack, nodes = [df._jdf.queryExecution().executedPlan()], []
+    while stack:
+        node = stack.pop()
+        nodes.append(node)
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":
+            stack.append(node.executedPlan())
+        elif name.endswith("QueryStage"):
+            stack.append(node.plan())
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return nodes
+
+
+def _carries_ids(node) -> bool:
+    out = node.output()
+    return any(out.apply(i).name().startswith("id") for i in range(out.size()))
+
+
+def test_each_core_runs_one_pair_join(spark):
+    """A cold key is the S = 1 case of the salted join: with one hot key
+    and several cold ones, each core's plan holds exactly one join of two
+    record streams, and neither a union of two branches nor a cache."""
+    from levenshtein_spark.operators.pairs import candidate_pairs_lr
+
+    rows = [("hot", i) for i in range(40)] + [(f"k{i % 5}", 100 + i) for i in range(30)]
+    blocks = spark.createDataFrame(rows, "block_key string, id long")
+    for df in (
+        candidate_pairs(blocks, hot_threshold=10),
+        candidate_pairs_lr(blocks, blocks, hot_threshold=100),
+    ):
+        nodes = _plan_nodes(df)
+        names = [n.nodeName() for n in nodes]
+        pair_joins = [
+            n for n in nodes
+            if n.nodeName().endswith("Join") and _carries_ids(n.left()) and _carries_ids(n.right())
+        ]
+        assert len(pair_joins) == 1, names
+        assert "Union" not in names, names
+        assert not any(n.startswith("InMemory") for n in names), names

@@ -1,10 +1,11 @@
 """Bookkeeping fires no Spark job.
 
 A stage's read-back passes the schema its write just used, so no
-schema-inference job runs; ``metrics_<stage>`` of a parquet warehouse is
-written on the driver from the parquet footers; the closure's reliable
-round read-backs infer nothing either. The linkage plan's sha256
-invariant costs one job on a fresh run. Jobs are counted per job group
+schema-inference job runs, and a resumed stage is read with the schema
+its footers store; ``metrics_<stage>`` of a parquet warehouse is written
+on the driver from the parquet footers; the closure's reliable round
+read-backs infer nothing either. The linkage plan's sha256 invariant
+costs one job on a fresh run and two on a resume. Jobs are counted per job group
 through ``statusTracker().getJobIdsForGroup``.
 """
 
@@ -74,6 +75,24 @@ def test_run_stage_fires_only_its_write(spark, tmp_path, parquet_reads):
     assert set(cfg.stage_times) == {"t"}
 
 
+def test_resumed_stage_fires_no_job(spark, tmp_path, parquet_reads):
+    """A resumed stage and its driver-written ``metrics_<stage>`` are read
+    with their footer schemas: no job, and the schemas inference gives."""
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    df = spark.range(0, 1000, 1, 4).selectExpr("id AS v", "array(id) AS a", "named_struct('x', id) AS s")
+    run_stage(wh, SimpleNamespace(force=False, stage_times={}), "t", lambda: df)
+    cfg = SimpleNamespace(force=False, stage_times={})
+    out, metrics = _run_in_group(
+        spark, "resume", lambda: (run_stage(wh, cfg, "t", lambda: df), wh.read("metrics_t"))
+    )
+    assert _jobs_in_group(spark, "resume") == 0
+    assert parquet_reads() == 0
+    assert cfg.stage_times == {}
+    assert out.schema == spark.read.parquet(os.path.join(wh.root, "t")).schema
+    assert metrics.schema == spark.read.parquet(os.path.join(wh.root, "metrics_t")).schema
+    assert out.count() == 1000
+
+
 def test_force_rerun_leaves_one_metrics_file(spark, tmp_path):
     wh = Warehouse(spark, str(tmp_path / "wh"))
     df = spark.range(0, 1000, 1, 4)
@@ -129,3 +148,16 @@ def test_linkage_invariant_fires_one_job(spark, tmp_path, monkeypatch):
     _run_in_group(spark, "checks", lambda: linkage.run_linkage(spark, src, cfg))
     assert _jobs_in_group(spark, "stage_normalized") == plain_jobs
     assert _jobs_in_group(spark, "checks") == 1
+
+
+@pytest.mark.slow
+def test_linkage_resume_fires_only_the_invariant_folds(spark, tmp_path):
+    """A full resume reads every stage back with its footer schema: its only
+    jobs are the invariant's two folds, over the checkpoint and over the
+    source."""
+    src = code_files_df(spark, num_clusters=12, seed=3)
+    linkage.run_linkage(spark, src, linkage.LinkageConfig(checkpoint_dir=str(tmp_path / "wh")))
+    cfg = linkage.LinkageConfig(checkpoint_dir=str(tmp_path / "wh"))
+    _run_in_group(spark, "resume", lambda: linkage.run_linkage(spark, src, cfg))
+    assert cfg.stage_times == {}
+    assert _jobs_in_group(spark, "resume") == 2
