@@ -8,8 +8,10 @@ Reads the code_files table (Iceberg table name or parquet path; or generates
 the deterministic synthetic corpus), runs normalize → blocking → salted
 pairs → Arrow-batched scoring → edges → clustering (a partition-local
 union-find pass, then star rounds across partitions) with per-stage
-checkpoints, and prints stage metrics. Resumes from the last
-completed stage on re-run (north_rule: resumable from checkpoint).
+checkpoints (``normalized``, ``blocks``, ``scored``, ``clusters``: the pairs
+and the edges are projections of ``scored``), and prints stage metrics.
+Resumes from the last completed stage on re-run (north_rule: resumable from
+checkpoint).
 
 Incremental mode (``--incremental-batch DAY``): the source is a delta of
 NEW records linked against the warehouse's existing base tables without
@@ -64,6 +66,7 @@ def main() -> int:
     from levenshtein_spark.plans.linkage import (
         LinkageConfig,
         clusters_stage_name,
+        pair_counters,
         run_incremental_linkage,
         run_linkage,
     )
@@ -103,14 +106,19 @@ def main() -> int:
     else:
         stages = run_linkage(spark, source, cfg)
         label = prefix = ""
-    # summary key -> stage table
-    tables = {f"{label}{t}": f"{prefix}{t}" for t in ("normalized", "blocks", "pairs", "scored", "edges")}
+    # summary key -> stage table; the pairs and the edges are projections
+    # of the scored stage, counted by its observed counters
+    tables = {f"{label}{t}": f"{prefix}{t}" for t in ("normalized", "blocks", "scored")}
     tables["clusters"] = clusters_stage_name(cfg, prefix)
     wh = stages["warehouse"]
     if wh.catalog:
-        counts = {k: stages[k].count() for k in tables}
+        counts = {k: stages[k].count() for k in [*tables, f"{label}pairs", f"{label}edges"]}
     else:  # the rows each stage's write tasks wrote, from the parquet footers
         counts = {k: sum(footer_metrics(wh, t)["rows"].to_pylist()) for k, t in tables.items()}
+        # a resumed scored stage was never observed: one aggregation over it
+        counters = stages["counters"] or pair_counters(stages[f"{label}scored"])
+        counts[f"{label}pairs"] = counters["candidates"]
+        counts[f"{label}edges"] = counters["edges"]
     n_clusters = stages["clusters"].select("cluster_id").distinct().count()
     print(json.dumps({
         "wall_sec": round(time.perf_counter() - t0, 2),

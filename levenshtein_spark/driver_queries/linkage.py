@@ -170,8 +170,8 @@ def q_linkage_incremental(spark: SparkSession, sf: str) -> DataFrame:
 
     Edge-set decomposition: blocking keys are per-record, so the full
     candidate set partitions exactly into base×base ∪ delta×base ∪
-    delta×delta. The base×base edges are reused as-is (in production: read
-    from the edges checkpoint the pipeline already writes —
+    delta×delta. The base×base edges are reused as-is (in production: the
+    ``is_match`` rows of the scored checkpoint the pipeline already writes —
     plans/linkage.py), the delta×base cross pairs come from the bipartite
     salted operator (``candidate_pairs_lr``), and only the delta blocks
     self-join. Scoring cost scales with |delta|·fanout, not |corpus|².

@@ -83,22 +83,24 @@ def score_pairs(
     transpositions: bool = True,
     memoize: bool = False,
 ) -> DataFrame:
-    """→ id_a, id_b, exact_dupe, content_dist, path_dist, is_match.
+    """→ id_a, id_b, [n_keys,] exact_dupe, content_dist, path_dist, is_match.
 
+    ``n_keys`` rides along when ``pairs`` carries it (``candidate_pairs``),
+    so the scored stream is also the candidate stream.
     ``transpositions=False`` scores with plain bounded Levenshtein instead of
     OSA (reference ``bounded_edit_dist`` vs ``bounded_edit_dist_t``).
     ``memoize=True`` scores one representative per distinct payload tuple
     (see module docstring); the output is row-identical either way.
     """
     dist = bounded_edit_dist_t if transpositions else bounded_edit_dist
+    ids = ["id_a", "id_b", *(["n_keys"] if "n_keys" in pairs.columns else [])]
     if not memoize:
         exact = F.col("sha_a") == F.col("sha_b")
         # one projection, so one ArrowEvalPython node: exact rows ship NULL
         # prefixes (their content_dist is 0 without the kernel), every row
         # ships its path bases. A NULL sha is neither exact nor fuzzy.
         scored = pairs.where(exact.isNotNull()).select(
-            "id_a",
-            "id_b",
+            *ids,
             exact.alias("exact_dupe"),
             F.when(exact, F.lit(0).cast("long"))
             .otherwise(
@@ -115,8 +117,7 @@ def score_pairs(
         exact = (
             pairs.where(F.col("sha_a") == F.col("sha_b"))
             .select(
-                "id_a",
-                "id_b",
+                *ids,
                 F.lit(True).alias("exact_dupe"),
                 F.lit(0).cast("long").alias("content_dist"),
                 dist("path_base_a", "path_base_b", k_path).alias("path_dist"),
@@ -142,11 +143,10 @@ def score_pairs(
         # join back on the slim (id_a, id_b, memo_vh) stream — the payload
         # never shuffles a second time
         fuzzy = (
-            keyed.select("id_a", "id_b", "memo_vh")
+            keyed.select(*ids, "memo_vh")
             .join(rep_scores, "memo_vh")
             .select(
-                "id_a",
-                "id_b",
+                *ids,
                 F.lit(False).alias("exact_dupe"),
                 "content_dist",
                 "path_dist",

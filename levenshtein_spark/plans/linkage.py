@@ -2,13 +2,23 @@
 
 Stage graph (SURVEY.md §3.4)::
 
-    normalized → blocks → pairs → scored → edges(+clusters) → clusters
+    normalized → blocks → scored → clusters
+                            ├─ pairs = scored[id_a, id_b, n_keys]
+                            └─ edges = scored where is_match
 
 Every stage is written to the warehouse (Iceberg or Parquet) together with a
 per-write-task lineage metrics table. A re-run skips stages whose table
 already exists — kill the job after any stage and the next run resumes from
 there (north_rule: resumable from checkpoint). ``force=True`` recomputes
 everything.
+
+``scored`` generates, scores and writes the candidate pairs in one stage,
+so each pair is written once: the pair stream and the edge list are
+projections of it, never tables. A retried task or a lost executor inside
+the stage recomputes from Spark's shuffle files; only a driver kill
+reaches the checkpoint, and then the resume regenerates the pairs with
+their scores. The pair counters (``candidates``, ``exact_dupes``,
+``edges``) are observed on the ``scored`` write: no job of their own.
 
 ``normalized`` holds the record projection ``RECORD_COLUMNS``: the identity
 columns and what blocking, scoring and the closure read. It does not hold
@@ -23,7 +33,7 @@ raises instead of returning stale labels.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -37,9 +47,9 @@ from levenshtein_spark.operators.clustering import (
 )
 from levenshtein_spark.operators.normalize import normalize
 from levenshtein_spark.operators.pairs import (
+    _lr_meetings,
     attach_pair_payload,
     candidate_pairs,
-    candidate_pairs_lr,
 )
 from levenshtein_spark.operators.scoring import edges as edges_of
 from levenshtein_spark.operators.scoring import score_pairs
@@ -163,8 +173,55 @@ def _records_stage(wh: Warehouse, cfg: LinkageConfig, name: str, records: DataFr
     return out, (int(row[0]), int(row[1]), int(row[2]))
 
 
+def _counter_columns():
+    return (
+        F.count(F.lit(1)).alias("candidates"),
+        F.count_if("exact_dupe").alias("exact_dupes"),
+        F.count_if("is_match").alias("edges"),
+    )
+
+
+def pair_counters(scored: DataFrame) -> dict:
+    """The counters ``run_linkage`` observes on the ``scored`` write,
+    computed in one job over a ``scored`` table: for a resumed stage, whose
+    write was never observed."""
+    return scored.agg(*_counter_columns()).first().asDict()
+
+
+def _scored_stage(wh: Warehouse, cfg: LinkageConfig, name: str, pairs, records: DataFrame):
+    """The scored stage ``name``: the candidate pairs built by ``pairs()``,
+    their payload attached from ``records``, scored and written once. The
+    pair stream and the edges are projections of it, so neither is written.
+    Returns the stage and its counters (``candidates``, ``exact_dupes``,
+    ``edges``), observed on the write with no job of their own, or None
+    when the stage resumed.
+
+    A ``scored`` checkpoint without ``n_keys`` (written when the pairs were
+    a stage of their own) is recomputed: its pair projection would not
+    resolve."""
+    obs = Observation()
+    built = []
+
+    def build() -> DataFrame:
+        built.append(name)
+        fat = attach_pair_payload(pairs(), records, ["sha", "path_base", "content_prefix"])
+        scored = score_pairs(fat, cfg.k_content, cfg.k_path, memoize=cfg.memoize_scoring)
+        return scored.observe(obs, *_counter_columns())
+
+    stale = wh.exists(name) and "n_keys" not in wh.read(name).columns
+    out = _stage(wh, replace(cfg, force=True) if stale else cfg, name, build)
+    return out, (obs.get if built else None)
+
+
+def _pairs_of(scored: DataFrame) -> DataFrame:
+    return scored.select("id_a", "id_b", "n_keys")
+
+
 def run_linkage(spark: SparkSession, source: DataFrame, cfg: LinkageConfig) -> dict:
-    """Run (or resume) the full pipeline; returns handles to every stage."""
+    """Run (or resume) the full pipeline; returns handles to every stage,
+    ``pairs`` and ``edges`` as projections of ``scored``, and the pair
+    ``counters`` observed on the ``scored`` write (None when it resumed;
+    :func:`pair_counters` computes them)."""
     wh = Warehouse(spark, cfg.checkpoint_dir)
 
     # Per-row invariant (input_hint): the checkpointed records are the
@@ -182,26 +239,10 @@ def run_linkage(spark: SparkSession, source: DataFrame, cfg: LinkageConfig) -> d
     blocks = _stage(
         wh, cfg, "blocks", lambda: exploded_blocks(normalized, len_band=cfg.len_band)
     )
-    pairs = _stage(
-        wh,
-        cfg,
-        "pairs",
-        lambda: candidate_pairs(blocks, cfg.hot_threshold),
+    scored, counters = _scored_stage(
+        wh, cfg, "scored", lambda: candidate_pairs(blocks, cfg.hot_threshold), normalized
     )
-    scored = _stage(
-        wh,
-        cfg,
-        "scored",
-        lambda: score_pairs(
-            attach_pair_payload(
-                pairs, normalized, ["sha", "path_base", "content_prefix"]
-            ),
-            cfg.k_content,
-            cfg.k_path,
-            memoize=cfg.memoize_scoring,
-        ),
-    )
-    edges = _stage(wh, cfg, "edges", lambda: edges_of(scored))
+    edges = edges_of(scored)
     # the closure loop's per-round lineage truncation is reliable here: each
     # round lands under the same checkpoint dir as the stage tables, so an
     # executor loss can only recompute the in-flight round
@@ -217,10 +258,11 @@ def run_linkage(spark: SparkSession, source: DataFrame, cfg: LinkageConfig) -> d
     return {
         "normalized": normalized,
         "blocks": blocks,
-        "pairs": pairs,
+        "pairs": _pairs_of(scored),
         "scored": scored,
         "edges": edges,
         "clusters": clusters,
+        "counters": counters,
         "warehouse": wh,
     }
 
@@ -236,22 +278,26 @@ def run_incremental_linkage(
     warehouse without re-pairing the base against itself.
 
     Reads the base ``{base_prefix}normalized`` / ``{base_prefix}blocks`` /
-    ``{base_prefix}edges`` stage tables from ``cfg.checkpoint_dir`` (run
+    ``{base_prefix}scored`` stage tables from ``cfg.checkpoint_dir`` (run
     :func:`run_linkage` there first). Blocking keys are per-record, so the
     full candidate set partitions exactly into base×base ∪ delta×base ∪
-    delta×delta — base×base edges are reused from the checkpoint, delta×base
-    candidates come from the bipartite salted join (``candidate_pairs_lr``),
-    and only the delta blocks self-join. Compute scales with |delta|·fanout,
-    not |corpus|²; the resulting labels are identical to a full-batch re-run
-    (pinned in tests/test_pipeline_e2e.py::test_incremental_matches_full_batch).
+    delta×delta — base×base edges are the ``is_match`` rows of the base
+    ``scored``, delta×base candidates come from the bipartite salted join
+    (``_lr_meetings``, counted into ``n_keys``), and only the delta blocks
+    self-join. Compute scales with |delta|·fanout, not |corpus|²; the
+    resulting labels are identical to a full-batch re-run (pinned in
+    tests/test_pipeline_e2e.py::test_incremental_matches_full_batch).
 
     Every delta stage checkpoints as ``{batch_id}_*`` with the same resume +
-    lineage metrics semantics as the batch plan; the refreshed full-corpus
-    labels land in ``{batch_id}_clusters``. For the NEXT batch, the merged
-    ``{batch_id}_all_normalized`` / ``_all_blocks`` / ``_all_edges`` tables
-    are also written — pass ``base_prefix=f"{batch_id}_all_"`` to chain
-    day-over-day batches, each one reusing everything before it (pinned in
-    ...::test_incremental_chained_batches).
+    lineage metrics semantics as the batch plan: ``{batch_id}_normalized``,
+    ``_blocks``, ``_scored`` (the delta pairs and edges are projections of
+    it, as in the batch plan) and the refreshed full-corpus labels in
+    ``{batch_id}_clusters``. For the NEXT batch, the merged
+    ``{batch_id}_all_normalized`` / ``_all_blocks`` / ``_all_scored`` (base
+    ∪ delta scored pairs) tables are also written, so a merged prefix has the
+    layout of a batch checkpoint — pass ``base_prefix=f"{batch_id}_all_"`` to
+    chain day-over-day batches, each one reusing everything before it
+    (pinned in ...::test_incremental_chained_batches).
 
     Guards (both raise instead of silently corrupting / going stale):
 
@@ -265,7 +311,7 @@ def run_incremental_linkage(
     The ``normalized`` tables hold ``RECORD_COLUMNS`` only.
     """
     wh = Warehouse(spark, cfg.checkpoint_dir)
-    base_tables = [f"{base_prefix}{t}" for t in ("normalized", "blocks", "edges")]
+    base_tables = [f"{base_prefix}{t}" for t in ("normalized", "blocks", "scored")]
     for t in base_tables:
         if not wh.exists(t):
             raise ValueError(
@@ -274,7 +320,7 @@ def run_incremental_linkage(
     # an explicit projection: a base written with ``content`` still unions
     base_norm = wh.read(base_tables[0]).select(*RECORD_COLUMNS)
     base_blocks = wh.read(base_tables[1])
-    base_edges = wh.read(base_tables[2]).select("src", "dst")
+    base_scored = wh.read(base_tables[2])
 
     fresh_norm = _records(delta_source, cfg)
     overlap = fresh_norm.select("id").join(base_norm.select("id"), "id").count()
@@ -302,30 +348,21 @@ def run_incremental_linkage(
     )
 
     def build_pairs() -> DataFrame:
-        cross = candidate_pairs_lr(delta_blocks, base_blocks, cfg.hot_threshold).select(
-            F.least("id_l", "id_r").alias("id_a"),
-            F.greatest("id_l", "id_r").alias("id_b"),
+        # one meeting per shared key, as in candidate_pairs: n_keys counts them
+        cross = _lr_meetings(
+            delta_blocks.select("block_key", "id"),
+            base_blocks.select("block_key", "id"),
+            cfg.hot_threshold,
         )
-        within = candidate_pairs(delta_blocks, cfg.hot_threshold).select("id_a", "id_b")
-        return cross.unionByName(within)
+        cross = cross.groupBy(
+            F.least("id_l", "id_r").alias("id_a"), F.greatest("id_l", "id_r").alias("id_b")
+        ).agg(F.count(F.lit(1)).alias("n_keys"))
+        return cross.unionByName(candidate_pairs(delta_blocks, cfg.hot_threshold))
 
-    delta_pairs = _stage(wh, cfg, f"{batch_id}_pairs", build_pairs)
     all_norm = base_norm.unionByName(delta_norm)
-    delta_scored = _stage(
-        wh,
-        cfg,
-        f"{batch_id}_scored",
-        lambda: score_pairs(
-            attach_pair_payload(
-                delta_pairs, all_norm, ["sha", "path_base", "content_prefix"]
-            ),
-            cfg.k_content,
-            cfg.k_path,
-            memoize=cfg.memoize_scoring,
-        ),
-    )
-    delta_edges = _stage(wh, cfg, f"{batch_id}_edges", lambda: edges_of(delta_scored))
-    all_edges = base_edges.unionByName(delta_edges.select("src", "dst"))
+    delta_scored, counters = _scored_stage(wh, cfg, f"{batch_id}_scored", build_pairs, all_norm)
+    delta_edges = edges_of(delta_scored)
+    all_edges = edges_of(base_scored).unionByName(delta_edges)
     clusters = _stage(
         wh,
         cfg,
@@ -342,17 +379,24 @@ def run_incremental_linkage(
     merged_blocks = _stage(
         wh, cfg, f"{batch_id}_all_blocks", lambda: base_blocks.unionByName(delta_blocks)
     )
-    merged_edges = _stage(wh, cfg, f"{batch_id}_all_edges", lambda: all_edges)
+    # a base scored written before it carried n_keys merges with NULL n_keys
+    merged_scored = _stage(
+        wh,
+        cfg,
+        f"{batch_id}_all_scored",
+        lambda: base_scored.unionByName(delta_scored, allowMissingColumns=True),
+    )
 
     return {
         "delta_normalized": delta_norm,
         "delta_blocks": delta_blocks,
-        "delta_pairs": delta_pairs,
+        "delta_pairs": _pairs_of(delta_scored),
         "delta_scored": delta_scored,
         "delta_edges": delta_edges,
         "all_normalized": merged_norm,
         "all_blocks": merged_blocks,
-        "all_edges": merged_edges,
+        "all_scored": merged_scored,
         "clusters": clusters,
+        "counters": counters,
         "warehouse": wh,
     }

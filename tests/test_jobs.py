@@ -27,16 +27,25 @@ def test_link_job_synthetic(spark, tmp_path, monkeypatch, capsys):
 
     from levenshtein_spark.sources.tables import Warehouse
 
-    rep = _run_job(
-        monkeypatch, capsys, job,
-        ["link", "--synthetic-clusters", "40", "--checkpoint", str(tmp_path / "wh")],
-    )
+    argv = ["link", "--synthetic-clusters", "40", "--checkpoint", str(tmp_path / "wh")]
+    rep = _run_job(monkeypatch, capsys, job, argv)
     assert rep["n_clusters"] > 0
     assert rep["stage_rows"]["normalized"] > 0
     assert set(rep["stage_times"])  # fresh run computed stages
-    # stage_rows come from the parquet footers: they equal the tables' counts
+    # stage_rows come from the parquet footers: they equal the tables'
+    # counts; pairs and edges, projections of scored, from its counters
     wh = Warehouse(spark, str(tmp_path / "wh"))
-    assert rep["stage_rows"] == {t: wh.read(t).count() for t in rep["stage_rows"]}
+    scored = wh.read("scored")
+    assert rep["stage_rows"] == {
+        **{t: wh.read(t).count() for t in ("normalized", "blocks", "scored", "clusters")},
+        "pairs": scored.count(),
+        "edges": scored.where("is_match").count(),
+    }
+    # a resume never observes the scored write: the same counts by one
+    # aggregation over the table
+    resumed = _run_job(monkeypatch, capsys, job, argv)
+    assert resumed["stage_times"] == {}
+    assert resumed["stage_rows"] == rep["stage_rows"]
 
 
 def test_curate_job_batch_and_incremental(spark, tmp_path, monkeypatch, capsys):

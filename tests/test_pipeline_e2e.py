@@ -9,6 +9,7 @@ pair labels and the co-clustering relation.
 
 import glob
 import itertools
+import json
 import os
 import shutil
 
@@ -18,7 +19,14 @@ import pytest
 
 from levenshtein_spark.operators.normalize import normalize
 from levenshtein_spark.oracle import ref_edit_distance
-from levenshtein_spark.plans.linkage import RECORD_COLUMNS, LinkageConfig, run_linkage
+from levenshtein_spark.operators.pairs import candidate_pairs
+from levenshtein_spark.operators.scoring import edges as edges_of
+from levenshtein_spark.plans.linkage import (
+    RECORD_COLUMNS,
+    LinkageConfig,
+    pair_counters,
+    run_linkage,
+)
 from levenshtein_spark.sources.code_files import SCHEMA, code_files_df, generate_cluster_rows
 
 
@@ -27,6 +35,9 @@ from levenshtein_spark.sources.code_files import SCHEMA, code_files_df, generate
 pytestmark = pytest.mark.slow
 
 K_CONTENT = 8
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+# the tables run_linkage writes; pairs and edges are projections of scored
+STAGES = ("normalized", "blocks", "scored", "clusters")
 
 
 @pytest.fixture(scope="module")
@@ -133,12 +144,42 @@ def test_stage_metrics_cover_every_row(pipeline):
     its ``rows`` sum to the stage table's row count."""
     out, _ = pipeline
     wh = out["warehouse"]
-    for stage in ("normalized", "blocks", "pairs", "scored", "edges", "clusters"):
+    for stage in STAGES:
         metrics = wh.read(f"metrics_{stage}").collect()
         parts = [r.part for r in metrics]
         assert parts and len(parts) == len(set(parts)), stage
         assert {r.stage for r in metrics} == {stage}
         assert sum(r.rows for r in metrics) == out[stage].count(), stage
+
+
+def test_pairs_and_edges_are_projections_of_scored(pipeline):
+    """``pairs`` is the candidate stream of ``candidate_pairs`` row for row
+    and ``edges`` the ``is_match`` rows of ``scored``; neither is a table."""
+    out, cfg = pipeline
+    want = candidate_pairs(out["blocks"], cfg.hot_threshold)
+    cols = ["id_a", "id_b", "n_keys"]
+    assert sorted(map(tuple, out["pairs"].select(cols).collect())) == sorted(
+        map(tuple, want.select(cols).collect())
+    )
+    assert sorted(map(tuple, out["edges"].collect())) == sorted(
+        map(tuple, edges_of(out["scored"]).collect())
+    )
+    written = set(os.listdir(cfg.checkpoint_dir))
+    assert not written & {"pairs", "edges", "metrics_pairs", "metrics_edges"}
+    assert {*STAGES, *(f"metrics_{s}" for s in STAGES)} <= written
+
+
+def test_counters_observed_on_scored(pipeline):
+    """The counters observed on the ``scored`` write are the rows of its
+    projections, and ``pair_counters`` recomputes them from the table."""
+    out, _ = pipeline
+    want = {
+        "candidates": out["pairs"].count(),
+        "exact_dupes": out["scored"].where("exact_dupe").count(),
+        "edges": out["edges"].count(),
+    }
+    assert out["counters"] == want
+    assert pair_counters(out["scored"]) == want
 
 
 def test_resume_repairs_missing_metrics(pipeline, spark):
@@ -155,7 +196,7 @@ def test_resume_repairs_missing_metrics(pipeline, spark):
     out2 = run_linkage(spark, code_files_df(spark, num_clusters=60, seed=42), cfg2)
     assert cfg2.stage_times == {}
     wh = out2["warehouse"]
-    for stage in ("normalized", "blocks", "pairs", "scored", "edges", "clusters"):
+    for stage in STAGES:
         rows = [r.rows for r in wh.read(f"metrics_{stage}").collect()]
         assert sum(rows) == out2[stage].count(), stage
 
@@ -217,6 +258,36 @@ def test_resume_with_edited_sha_raises(spark, small_ckpt, tmp_path):
         run_linkage(spark, _corpus(spark, 36), LinkageConfig(checkpoint_dir=ckpt))
 
 
+def test_resume_of_checkpoint_with_pairs_stage(spark, small_ckpt, tmp_path):
+    """A checkpoint written when ``pairs`` and ``edges`` were tables of their
+    own, with a ``scored`` table without ``n_keys``: the resume recomputes
+    ``scored`` only, ignores the stale tables and returns the same labels
+    and a ``pairs`` projection that resolves."""
+    before = run_linkage(spark, _corpus(spark, 36), LinkageConfig(checkpoint_dir=small_ckpt))
+    labels = {r.id: r.cluster_id for r in before["clusters"].collect()}
+    pairs = sorted(map(tuple, before["pairs"].collect()))
+    ckpt = str(tmp_path / "ckpt")
+    shutil.copytree(small_ckpt, ckpt)
+    before["pairs"].write.parquet(os.path.join(ckpt, "pairs"))
+    before["edges"].write.parquet(os.path.join(ckpt, "edges"))
+    for part in glob.glob(os.path.join(ckpt, "scored", "part-*.parquet")):
+        table = pq.read_table(part).drop_columns(["n_keys"])
+        # the Spark schema the writer stored in the footer loses n_keys too
+        spark_schema = json.loads(table.schema.metadata[SPARK_SCHEMA_KEY])
+        spark_schema["fields"] = [f for f in spark_schema["fields"] if f["name"] != "n_keys"]
+        table = table.replace_schema_metadata({SPARK_SCHEMA_KEY: json.dumps(spark_schema)})
+        pq.write_table(table, part)
+        # Hadoop's local file system checks a file against its .crc sidecar
+        os.remove(os.path.join(os.path.dirname(part), f".{os.path.basename(part)}.crc"))
+
+    cfg = LinkageConfig(checkpoint_dir=ckpt)
+    out = run_linkage(spark, _corpus(spark, 36), cfg)
+    assert set(cfg.stage_times) == {"scored"}
+    assert {r.id: r.cluster_id for r in out["clusters"].collect()} == labels
+    assert sorted(map(tuple, out["pairs"].collect())) == pairs
+    assert "n_keys" in out["warehouse"].read("scored").columns
+
+
 def test_incremental_matches_full_batch(spark, tmp_path):
     """run_incremental_linkage (delta vs checkpointed base) reproduces the
     full-batch labels exactly, recomputing no base stage."""
@@ -229,10 +300,8 @@ def test_incremental_matches_full_batch(spark, tmp_path):
         checkpoint_dir=str(tmp_path / "full"), k_content=K_CONTENT,
         hot_threshold=150,
     )
-    want = {
-        r.id: r.cluster_id
-        for r in run_linkage(spark, src, full_cfg)["clusters"].collect()
-    }
+    full = run_linkage(spark, src, full_cfg)
+    want = {r.id: r.cluster_id for r in full["clusters"].collect()}
 
     is_delta = F.pmod(F.xxhash64("path"), F.lit(4)) == 0
     ckpt = str(tmp_path / "incr")
@@ -249,14 +318,17 @@ def test_incremental_matches_full_batch(spark, tmp_path):
     assert set(incr_cfg.stage_times) == {
         "delta_normalized",
         "delta_blocks",
-        "delta_pairs",
         "delta_scored",
-        "delta_edges",
         "delta_clusters",
         "delta_all_normalized",
         "delta_all_blocks",
-        "delta_all_edges",
+        "delta_all_scored",
     }, "incremental must not recompute base stages"
+    # the merged scored table is the full batch's, n_keys included
+    cols = list(full["scored"].columns)
+    assert sorted(map(tuple, out["all_scored"].select(cols).collect())) == sorted(
+        map(tuple, full["scored"].collect())
+    )
 
     # guard: an id already in the base must raise, not silently duplicate
     with pytest.raises(ValueError, match="already exist in the base"):
@@ -310,8 +382,8 @@ def test_resume_from_mid_pipeline(spark, tmp_path):
     out = run_linkage(spark, src, cfg)
     full = {r.id: r.cluster_id for r in out["clusters"].collect()}
 
-    # Kill everything after 'pairs' — simulates a job dying mid-pipeline.
-    for stage in ("scored", "edges", "clusters", "metrics_scored", "metrics_edges", "metrics_clusters"):
+    # Kill everything after 'blocks' — simulates a job dying mid-pipeline.
+    for stage in ("scored", "clusters", "metrics_scored", "metrics_clusters"):
         p = os.path.join(ckpt, stage)
         if os.path.exists(p):
             shutil.rmtree(p)
@@ -320,7 +392,7 @@ def test_resume_from_mid_pipeline(spark, tmp_path):
     out2 = run_linkage(spark, src, cfg2)
     resumed = {r.id: r.cluster_id for r in out2["clusters"].collect()}
     assert resumed == full
-    assert set(cfg2.stage_times) == {"scored", "edges", "clusters"}
+    assert set(cfg2.stage_times) == {"scored", "clusters"}
 
 
 def test_cluster_method_pivot(spark, tmp_path):

@@ -64,6 +64,15 @@ def test_memoized_equals_direct(pairs):
     assert memo == direct
 
 
+def test_both_branches_keep_n_keys(pairs):
+    """Pairs that carry ``n_keys`` keep it, row for row, through either branch."""
+    cols = ["id_a", "id_b", "n_keys"]
+    want = sorted(map(tuple, pairs.select(cols).collect()))
+    for memoize in (False, True):
+        got = score_pairs(pairs, memoize=memoize).select(cols).collect()
+        assert sorted(map(tuple, got)) == want, memoize
+
+
 def test_memoized_equals_direct_levenshtein_mode(pairs):
     direct = _rows(score_pairs(pairs, transpositions=False))
     memo = _rows(score_pairs(pairs, transpositions=False, memoize=True))

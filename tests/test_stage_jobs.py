@@ -5,7 +5,8 @@ schema-inference job runs, and a resumed stage is read with the schema
 its footers store; ``metrics_<stage>`` of a parquet warehouse is written
 on the driver from the parquet footers; the closure's reliable round
 read-backs infer nothing either. The linkage plan's sha256 invariant
-costs one job on a fresh run and two on a resume. Jobs are counted per job group
+costs one job on a fresh run and two on a resume, and its pair counters,
+observed on the ``scored`` write, none. Jobs are counted per job group
 through ``statusTracker().getJobIdsForGroup``.
 """
 
@@ -20,6 +21,8 @@ from pyspark.sql.readwriter import DataFrameReader
 
 import levenshtein_spark.plans.linkage as linkage
 from levenshtein_spark.operators.clustering import connected_components
+from levenshtein_spark.operators.pairs import attach_pair_payload, candidate_pairs
+from levenshtein_spark.operators.scoring import score_pairs
 from levenshtein_spark.plans.stages import run_stage
 from levenshtein_spark.sources.code_files import code_files_df
 from levenshtein_spark.sources.tables import Warehouse
@@ -161,3 +164,32 @@ def test_linkage_resume_fires_only_the_invariant_folds(spark, tmp_path):
     _run_in_group(spark, "resume", lambda: linkage.run_linkage(spark, src, cfg))
     assert cfg.stage_times == {}
     assert _jobs_in_group(spark, "resume") == 2
+
+
+@pytest.mark.slow
+def test_scored_counters_fire_no_job(spark, tmp_path, monkeypatch):
+    """The pair counters are observed on the ``scored`` write: the stage
+    fires the jobs of a plain write of the same scored pairs."""
+    src = code_files_df(spark, num_clusters=12, seed=3)
+    cfg = linkage.LinkageConfig(checkpoint_dir=str(tmp_path / "wh"))
+    stage = linkage._stage
+    monkeypatch.setattr(
+        linkage,
+        "_stage",
+        lambda wh, cfg, name, build: _run_in_group(
+            spark, f"counted_{name}", lambda: stage(wh, cfg, name, build)
+        ),
+    )
+    out = linkage.run_linkage(spark, src, cfg)
+    assert out["counters"]["candidates"] == out["scored"].count() > 0
+    plain = score_pairs(
+        attach_pair_payload(
+            candidate_pairs(out["blocks"], cfg.hot_threshold),
+            out["normalized"],
+            ["sha", "path_base", "content_prefix"],
+        ),
+        cfg.k_content,
+        cfg.k_path,
+    )
+    _run_in_group(spark, "plain_scored", lambda: plain.write.parquet(str(tmp_path / "plain")))
+    assert _jobs_in_group(spark, "counted_scored") == _jobs_in_group(spark, "plain_scored")
